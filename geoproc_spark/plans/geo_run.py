@@ -1,6 +1,6 @@
 """The production geo pipeline as checkpointed stages.
 
-scan -> extract (Arrow UDF) -> cell encode + cell-prefix partitioning ->
+scan -> extract (mapInArrow + RE2) -> cell encode + cell-prefix partitioning ->
 covering-cell PIP join -> per-tile stats, each stage a resumable snapshot.
 This is the spark-submit entry path; `bench.py` times the same stages
 un-checkpointed.
@@ -38,9 +38,7 @@ def stage_pages(sf_dir: str, replicate: int = 1):
 def stage_extract():
     def fn(spark: SparkSession, inputs) -> DataFrame:
         pages = inputs["pages"]
-        pts = pages.select(
-            "page_id", "url", extract.extract_coords_udf("text").alias("c")
-        ).select("page_id", "url", F.col("c.lat").alias("lat"), F.col("c.lon").alias("lon"))
+        pts = extract.with_coords_arrow(pages, keep=["page_id", "url"])
         pts = pts.filter(F.col("lat").isNotNull())
         cell = cells.cell_id_col(F.col("lat"), F.col("lon"), EXTRACT_ZOOM)
         return pts.withColumn("cell", cell).withColumn(

@@ -1,6 +1,6 @@
 """Registry of driver-checkable queries: Spark implementation + DuckDB oracle.
 
-Each entry runs the REAL engine path (pandas-UDF extraction, covering-cell
+Each entry runs the REAL engine path (mapInArrow + RE2 extraction, covering-cell
 joins, ring-expansion kNN, ...) on the synthetic corpus derived from the
 driver's parquet tables; the oracle recomputes the expected result in plain
 SQL from the integer-exact ground truth. Column names and types are aligned
@@ -72,12 +72,10 @@ def all_oracle_sql() -> dict[str, str]:
 
 
 def _pages_with_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine path: synthesize pages, extract coords from TEXT via the
-    Arrow UDF (never from the ground-truth columns)."""
-    pages = synth.pages_df(spark, sf_dir)
-    return pages.select(
-        "page_id", "url", "lang", "text", extract.extract_coords_udf("text").alias("c")
-    ).select("page_id", "url", "lang", F.col("c.lat").alias("lat"), F.col("c.lon").alias("lon"))
+    """The engine path: synthesize pages, extract coords from TEXT with the
+    mapInArrow + RE2 kernel (never from the ground-truth columns)."""
+    pages = synth.pages_df(spark, sf_dir).select("page_id", "url", "lang", "text")
+    return extract.with_coords_arrow(pages)
 
 
 def _pages_cte() -> str:
@@ -99,7 +97,7 @@ FROM pages WHERE has_geo = 1
 """,
 )
 def geo_extract_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """text -> Arrow-UDF extraction -> JVM tile encode at zoom 12."""
+    """text -> mapInArrow + RE2 extraction -> JVM tile encode at zoom 12."""
     pts = _pages_with_coords(spark, sf_dir).filter(F.col("lat").isNotNull())
     xt, yt = cells.tile_cols(F.col("lat"), F.col("lon"), EXTRACT_ZOOM)
     return pts.select(
@@ -128,12 +126,8 @@ def geo_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     (geo.position meta first, text patterns fallback — functions/extract.py)
     -> tile cell encode. Never touches the `text` column or the ground-truth
     integers; the oracle recomputes expected values from them."""
-    pages = synth.pages_df(spark, sf_dir)
-    pts = pages.select(
-        "page_id", "warc_ts", extract.extract_coords_html_udf("html").alias("c")
-    ).select(
-        "page_id", "warc_ts", F.col("c.lat").alias("lat"), F.col("c.lon").alias("lon")
-    ).filter(F.col("lat").isNotNull())
+    pages = synth.pages_df(spark, sf_dir).select("page_id", "warc_ts", "html")
+    pts = extract.with_coords_arrow(pages, text_col="html").filter(F.col("lat").isNotNull())
     return pts.select(
         "page_id",
         "warc_ts",
@@ -151,7 +145,7 @@ def geo_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     The CORRECTNESS oracle is a VALUES relation of expected ids computed from
     the integer ground truth by a driver-side numpy twin
     (oracle/values_oracle.py) — the engine path below still runs the full
-    text-extraction + pandas-UDF pipeline."""
+    text extraction plus the pandas-UDF S2 encode."""
     from pyspark.sql import types as T
 
     from .functions import s2
@@ -1763,7 +1757,7 @@ FROM pages GROUP BY split_part(url, '/', 3)
 def corpus_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain corpus accounting (crawl-ops staple): pages, geo-tagged
     pages, distinct languages per host. The geo count comes from the ENGINE
-    extraction path (Arrow UDF over text), never the ground-truth column;
+    extraction path (mapInArrow + RE2 over text), never the ground-truth column;
     the domain from split_part on the url — one hash aggregate."""
     pts = _pages_with_coords(spark, sf_dir)
     return (
@@ -1918,7 +1912,7 @@ SELECT feature_id, count(*) AS n_pages FROM j GROUP BY feature_id
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages-per-polygon-feature counts (zonal aggregation) — the §7
     minimum end-to-end slice and the driver's entry(): scan -> extract
-    (Arrow UDF) -> cell encode -> covering-cell join -> PIP refine ->
+    (mapInArrow + RE2) -> cell encode -> covering-cell join -> PIP refine ->
     per-feature aggregate."""
     joined = geo_pip_join(spark, sf_dir)
     return joined.groupBy("feature_id").agg(F.count("*").alias("n_pages"))

@@ -1,10 +1,12 @@
-"""Extraction invariants: UDF == JVM == arithmetic ground truth; byte-identical
-per url across partitionings (input_hint)."""
+"""Extraction invariants: the mapInArrow + RE2 kernel == arithmetic ground
+truth == the Python-`re` reference twin; byte-identical per url across
+partitionings (input_hint)."""
 
 from pyspark.sql import functions as F
 
 from geoproc_spark import synth
 from geoproc_spark.functions import extract
+from geoproc_spark.oracle import extract_oracle
 from tests.conftest import SF_DIR
 
 
@@ -19,72 +21,47 @@ def _truth(spark):
 
 
 def test_udf_recovers_ground_truth(spark):
-    df = _truth(spark).withColumn("c", extract.extract_coords_udf("text"))
+    df = extract.with_coords_arrow(_truth(spark))
+    # eqNullSafe: a NULL from a broken extractor on a geo page is a bad row
     bad = df.filter(
         (
             (F.col("has_geo") == 1)
-            & (~(F.col("c.lat") == F.col("tlat")) | ~(F.col("c.lon") == F.col("tlon")))
+            & (~F.col("lat").eqNullSafe(F.col("tlat")) | ~F.col("lon").eqNullSafe(F.col("tlon")))
         )
-        | ((F.col("has_geo") == 0) & F.col("c.lat").isNotNull())
+        | ((F.col("has_geo") == 0) & F.col("lat").isNotNull())
     )
     assert bad.count() == 0
 
 
-def test_jvm_path_matches_udf(spark):
-    df = _truth(spark)
-    lat_j, lon_j = extract.extract_coords_cols(F.col("text"))
-    df = df.withColumn("c", extract.extract_coords_udf("text")).select(
-        "page_id", "c.lat", "c.lon", lat_j.alias("jlat"), lon_j.alias("jlon")
-    )
-    mismatch = df.filter(
-        ~(
-            (F.col("lat").eqNullSafe(F.col("jlat")))
-            & (F.col("lon").eqNullSafe(F.col("jlon")))
-        )
-    )
-    assert mismatch.count() == 0
-
-
 def test_extraction_partition_invariant(spark):
     """Same bytes out regardless of partitioning/parallelism."""
-    base = _truth(spark)
+    base = _truth(spark).select("page_id", "text")
 
     def run(df):
-        out = df.withColumn("c", extract.extract_coords_udf("text")).select(
-            "page_id", "c.lat", "c.lon"
-        )
+        out = extract.with_coords_arrow(df)
         return sorted((r.page_id, r.lat, r.lon) for r in out.collect())
 
     assert run(base.repartition(1)) == run(base.repartition(16, "page_id"))
 
 
 def test_arrow_path_matches_udf(spark):
-    """mapInArrow + RE2 (the production path) == pandas UDF, row for row."""
-    pages = synth.pages_df(spark, SF_DIR)
-    a = extract.with_coords_arrow(pages.select("page_id", "text"), keep=["page_id"])
-    arrow_rows = sorted((r.page_id, r.lat, r.lon) for r in a.collect())
-    p = pages.withColumn("c", extract.extract_coords_udf("text")).select(
-        "page_id", "c.lat", "c.lon"
-    )
-    pandas_rows = sorted((r.page_id, r.lat, r.lon) for r in p.collect())
-    assert arrow_rows == pandas_rows
-
-
-def test_all_matches_document_order(spark):
-    df = spark.createDataFrame(
-        [("geo:1.5,2.5 then (3.25, -4.75) and lat 5.5, lon 6.5",), ("no coords",)],
-        "text string",
-    )
-    rows = df.select(extract.extract_coords_all_udf("text").alias("a")).collect()
-    got = [[(m["lat"], m["lon"]) for m in r["a"]] for r in rows]
-    assert got == [[(1.5, 2.5), (3.25, -4.75), (5.5, 6.5)], []]
+    """mapInArrow + RE2 (the production path) == the Python-`re` reference
+    twin, row for row, on text and on raw HTML."""
+    pages = synth.pages_df(spark, SF_DIR).select("page_id", "text", "html").collect()
+    want_text = sorted((r.page_id, *extract_oracle.first_coord(r.text)) for r in pages)
+    want_html = sorted((r.page_id, *extract_oracle.first_coord_html(r.html)) for r in pages)
+    df = synth.pages_df(spark, SF_DIR)
+    got_text = extract.with_coords_arrow(df.select("page_id", "text"))
+    got_html = extract.with_coords_arrow(df.select("page_id", "html"), text_col="html")
+    assert sorted((r.page_id, r.lat, r.lon) for r in got_text.collect()) == want_text
+    assert sorted((r.page_id, r.lat, r.lon) for r in got_html.collect()) == want_html
 
 
 def test_html_extraction_matches_ground_truth(spark):
     """input_hint fidelity: coordinates extracted from RAW HTML bytes match
     the integer ground truth exactly (meta tag path on geo pages)."""
-    pages = synth.pages_df(spark, SF_DIR)
-    df = pages.withColumn("c", extract.extract_coords_html_udf("html"))
+    pages = synth.pages_df(spark, SF_DIR).select("page_id", "html", "lat_s", "lon_s", "has_geo")
+    df = extract.with_coords_arrow(pages, text_col="html")
     # eqNullSafe closes the three-valued-logic hole (ADVICE r02): a broken
     # extractor returning NULL on a geo page must count as a bad row, not
     # evaluate the predicate to NULL and slip through the filter
@@ -92,11 +69,11 @@ def test_html_extraction_matches_ground_truth(spark):
         (
             (F.col("has_geo") == 1)
             & (
-                ~F.col("c.lat").eqNullSafe(F.col("lat_s") / 10000.0)
-                | ~F.col("c.lon").eqNullSafe(F.col("lon_s") / 10000.0)
+                ~F.col("lat").eqNullSafe(F.col("lat_s") / 10000.0)
+                | ~F.col("lon").eqNullSafe(F.col("lon_s") / 10000.0)
             )
         )
-        | ((F.col("has_geo") == 0) & F.col("c.lat").isNotNull())
+        | ((F.col("has_geo") == 0) & F.col("lat").isNotNull())
     )
     assert bad.count() == 0
 
@@ -113,7 +90,8 @@ def test_html_to_text_byte_identical(spark):
 
 def test_html_meta_priority_and_fallback(spark):
     """Pinned HTML spec: geo.position meta wins over body text patterns;
-    without a meta the text patterns run over the whole document."""
+    without a meta the text patterns run over the whole document, byte-level
+    (a page that is not valid UTF-8 still matches)."""
     rows = [
         # meta AND conflicting body text -> meta wins
         (b'<html><head><meta name="geo.position" content="1.5000;2.5000">'
@@ -123,13 +101,14 @@ def test_html_meta_priority_and_fallback(spark):
         # nothing
         (b"<html><head></head><body><p>plain</p></body></html>",),
         (None,),
+        # not valid UTF-8 -> the ASCII pattern still matches
+        (b"\xff\xfe (3.0, 4.0)",),
     ]
-    df = spark.createDataFrame(rows, "html binary")
-    got = [
-        (r["c"]["lat"], r["c"]["lon"])
-        for r in df.select(extract.extract_coords_html_udf("html").alias("c")).collect()
-    ]
-    assert got == [(1.5, 2.5), (-3.25, 4.75), (None, None), (None, None)]
+    df = spark.createDataFrame([(i, h) for i, (h,) in enumerate(rows)], "i int, html binary")
+    out = extract.with_coords_arrow(df, text_col="html").orderBy("i").collect()
+    got = [(r["lat"], r["lon"]) for r in out]
+    assert got == [(1.5, 2.5), (-3.25, 4.75), (None, None), (None, None), (3.0, 4.0)]
+    assert got == [extract_oracle.first_coord_html(h) for (h,) in rows]
 
 
 def test_warc_ts_present_and_deterministic(spark):

@@ -1,12 +1,15 @@
-"""Hypothesis property tests: the pinned extraction spec recovers ANY
-4-decimal coordinate rendered in the three text formats and the HTML meta,
-not just the fixture's — the input_hint determinism contract generalized."""
+"""Hypothesis property tests: the production kernel (`extract.coords_arrow`,
+Arrow RE2, no Spark) recovers ANY 4-decimal coordinate rendered in the three
+text formats and the HTML meta, not just the fixture's, and agrees with the
+Python-`re` reference twin — the input_hint determinism contract generalized."""
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geoproc_spark.functions import extract
+from geoproc_spark.oracle import extract_oracle
 
 lat_s = st.integers(min_value=-850000, max_value=850000)
 lon_s = st.integers(min_value=-1800000, max_value=1800000)
@@ -22,11 +25,25 @@ def _fmt(lat_scaled: int, lon_scaled: int, style: int) -> str:
     ][style]
 
 
+def _kernel_text(text: str) -> tuple[float | None, float | None]:
+    lat, lon = extract.coords_arrow(pa.array([text], pa.string()))
+    got = (lat[0].as_py(), lon[0].as_py())
+    assert got == extract_oracle.first_coord(text)
+    return got
+
+
+def _kernel_html(html: bytes) -> tuple[float | None, float | None]:
+    lat, lon = extract.coords_arrow(pa.array([html], pa.binary()))
+    got = (lat[0].as_py(), lon[0].as_py())
+    assert got == extract_oracle.first_coord_html(html)
+    return got
+
+
 @settings(max_examples=300, deadline=None)
 @given(lat_s, lon_s, st.integers(0, 2), st.text(alphabet="abc xyz.", max_size=30))
 def test_text_extraction_recovers_any_coordinate(la, lo, style, noise):
     text = f"{noise} {_fmt(la, lo, style)} trailing."
-    got_la, got_lo = extract._first_coord(text)
+    got_la, got_lo = _kernel_text(text)
     assert got_la == float(f"{la / 10000:.4f}")
     assert got_lo == float(f"{lo / 10000:.4f}")
 
@@ -35,7 +52,7 @@ def test_text_extraction_recovers_any_coordinate(la, lo, style, noise):
 @given(lat_s, lon_s, st.integers(0, 2))
 def test_first_match_wins_over_later_mentions(la, lo, style):
     text = f"{_fmt(la, lo, style)} then {_fmt(0, 0, (style + 1) % 3)}"
-    got_la, got_lo = extract._first_coord(text)
+    got_la, got_lo = _kernel_text(text)
     assert (got_la, got_lo) == (float(f"{la / 10000:.4f}"), float(f"{lo / 10000:.4f}"))
 
 
@@ -47,7 +64,7 @@ def test_html_meta_extraction_any_coordinate(la, lo):
         f'<html><head><meta name="geo.position" content="{la_str};{lo_str}">'
         f"</head><body><p>body text</p></body></html>"
     ).encode()
-    got_la, got_lo = extract._first_coord_html(html)
+    got_la, got_lo = _kernel_html(html)
     assert (got_la, got_lo) == (float(la_str), float(lo_str))
 
 
@@ -56,9 +73,15 @@ def test_html_meta_extraction_any_coordinate(la, lo):
 def test_no_false_positives_on_near_miss_text(junk):
     """Text without a well-formed mention never extracts (no partial/greedy
     matches): strip digits-after-decimal structure by construction."""
-    if extract._COMBINED.search(junk):
+    if extract_oracle.COMBINED.search(junk):
         return  # hypothesis found a legit mention; spec allows it
-    assert extract._first_coord(junk) == (None, None)
+    assert _kernel_text(junk) == (None, None)
+
+
+def test_ascii_digits_only():
+    """RE2's \\d is [0-9]; the reference twin is pinned to match, so
+    Arabic-Indic digits extract nothing on either path."""
+    assert _kernel_text("lat \u0661.\u0665, lon \u0662.\u0665") == (None, None)
 
 
 @settings(max_examples=100, deadline=None)

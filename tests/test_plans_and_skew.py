@@ -2,6 +2,8 @@
 assertions — the 'would this survive 100x scale-up' checks (SURVEY.md §4.2,
 FIXTURES.md T4)."""
 
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -9,6 +11,7 @@ from geoproc_spark import queries as Q
 from geoproc_spark import synth
 from geoproc_spark.functions import cells
 from geoproc_spark.operators import spatial_join as sj
+from geoproc_spark.plans import geo_run
 from tests.conftest import SF_DIR
 
 
@@ -18,6 +21,15 @@ def _plan(df) -> str:
 
 def _explain_all(df) -> str:
     return df._jdf.queryExecution().toString()
+
+
+def test_geo_run_extract_single_python_pass(spark):
+    """The extract stage ships each page to Python once: one mapInArrow node
+    and no ArrowEvalPython (a lat IS NOT NULL filter pushed under a pandas
+    UDF's projection makes the plan evaluate the UDF twice)."""
+    pages = geo_run.stage_pages(SF_DIR).fn(spark, {})
+    plan = _plan(geo_run.stage_extract().fn(spark, {"pages": pages}))
+    assert re.findall(r"\b(\w*EvalPython|MapIn\w+|\w+InPandas)\b", plan) == ["MapInArrow"], plan
 
 
 def test_tpch_q6_filters_pushed_to_scan(spark):
