@@ -29,14 +29,10 @@ import numbers
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import _small
 from .operators import algebra as A
 
 TILE_KEY = A.TILE_KEY
-
-# projected_windows: window grids up to this size have their window->tile
-# mapping computed driver-side (the mapping is broadcast either way, so it
-# is small by construction); larger exports keep the distributed UDF path.
-DRIVER_WINDOW_PREP_MAX = 4096
 
 
 class Image:
@@ -532,11 +528,16 @@ class Image:
         engine's analog of the reference's projected export
         (/root/reference/geoproc/server/image.py:162-241): grid shape +
         affine from functions/grid.py (:183-207 semantics), window loop
-        (:225-241) as a Spark job — windows enumerate in SQL, each window
-        joins ONLY the source tiles it overlaps (corner-derived tile range,
-        exploded + equi-join), and one applyInPandas per window gathers its
-        pixels nearest-neighbor from the native tile grid. Pixels outside
-        the tile set are nodata (mask 0), like the reference's write_mask.
+        (:225-241) as a Spark job — windows enumerate on the driver, each
+        window joins ONLY the source tiles it overlaps (perimeter-derived
+        tile range, a broadcast local relation), and one applyInPandas per
+        window gathers its pixels nearest-neighbor from the native tile
+        grid. Pixels outside the tile set are nodata (mask 0), like the
+        reference's write_mask.
+
+        The window grid and its window->tile table are driver-side small
+        sides (operators._small): more than _small.MAX_ROWS rows raise
+        ValueError, the window count before the grid is built.
 
         Returns (windows DataFrame, grid spec dict); rows are
         (col_off, row_off, win_w, win_h, data ARRAY<ARRAY<DOUBLE>>,
@@ -593,85 +594,54 @@ class Image:
         wcols, wrows = _grid.n_windows(width, height, window_size)
         out_crs = spec["crs"]
 
-        windows = self.df.sparkSession.range(wcols * wrows).selectExpr(
-            "CAST(id AS BIGINT) AS wid",
-            f"CAST((id % {wcols}) * {window_size} AS INT) AS col_off",
-            f"CAST((id DIV {wcols}) * {window_size} AS INT) AS row_off",
-            f"CAST(least({window_size}, {width} - (id % {wcols}) * {window_size}) AS INT) AS win_w",
-            f"CAST(least({window_size}, {height} - (id DIV {wcols}) * {window_size}) AS INT) AS win_h",
-        )
-
-        # explicit (fn, returnType) form: `from __future__ import annotations`
-        # stringifies hints on nested functions, breaking pandas_udf inference
-        pad = _grid.tile_range_pad(out_crs)
-        n_tiles = 1 << z
-
-        def _needed_tiles(col_off, row_off, win_w, win_h):
-            out = []
-            for co, ro, ww, wh in zip(col_off, row_off, win_w, win_h):
-                # boundary pixel CENTERS bound the tile range. For the
-                # separable CRSs corners alone would do (gx monotone in
-                # output col, gy in row); for UTM lon/lat extremes can sit
-                # mid-edge (meridian convergence; equator crossing), so
-                # sample the full perimeter and pad (grid.tile_range_pad).
-                k = 9
-                cs = _np.linspace(co + 0.5, co + ww - 0.5, k)
-                rs = _np.linspace(ro + 0.5, ro + wh - 0.5, k)
-                xx = ox + _np.concatenate(
-                    [cs, cs, _np.full(k, cs[0]), _np.full(k, cs[-1])]
-                ) * xsize
-                yy = oy - _np.concatenate(
-                    [_np.full(k, rs[0]), _np.full(k, rs[-1]), rs, rs]
-                ) * ysize
-                lon, lat = _grid.out_xy_to_lonlat(xx, yy, out_crs)
-                tx, ty, _c, _r = _grid.sample_native_pixels(lon, lat, z, side)
-                txs = _np.arange(
-                    max(tx.min() - pad, 0),
-                    min(tx.max() + pad, n_tiles - 1) + 1,
-                    dtype=_np.int64,
-                )
-                tys = _np.arange(
-                    max(ty.min() - pad, 0),
-                    min(ty.max() + pad, n_tiles - 1) + 1,
-                    dtype=_np.int64,
-                )
-                out.append(((txs[:, None] << 32) | tys[None, :]).ravel().tolist())
-            return _pd.Series(out)
-
+        # the window grid is enumerated ONCE on the driver and feeds both
+        # the window table and the window->tile table: wtiles is broadcast
+        # below, so it is small by construction, and the bound is checked
+        # before any numpy work
         n_win = wcols * wrows
-        if n_win <= DRIVER_WINDOW_PREP_MAX:
-            # driver-side window->tile-range prep (r6): wtiles is broadcast
-            # below, i.e. REQUIRED to be small — computing it with the SAME
-            # numpy routine on the driver and shipping a local relation
-            # removes the pandas-UDF worker round-trip and its Spark job
-            # from the critical path (the move spatial_join made for its
-            # polygon prep). The distributed explode path remains for
-            # exports whose window grid exceeds the cap.
-            co = ((_np.arange(n_win) % wcols) * window_size).astype(_np.int64)
-            ro = ((_np.arange(n_win) // wcols) * window_size).astype(_np.int64)
-            ww = _np.minimum(window_size, width - co).astype(_np.int64)
-            wh = _np.minimum(window_size, height - ro).astype(_np.int64)
-            packed = _needed_tiles(co, ro, ww, wh)
-            rows = [
-                (int(w_), int(co[w_]), int(ro[w_]), int(ww[w_]), int(wh[w_]),
-                 int(pk >> 32), int(pk & 0xFFFFFFFF))
-                for w_, pks in enumerate(packed)
-                for pk in pks
-            ]
-            wtiles = self.df.sparkSession.createDataFrame(
-                rows,
-                "wid bigint, col_off int, row_off int, win_w int, win_h int, "
-                "x int, y int",
-            )
-        else:
-            needed_tiles = F.pandas_udf(_needed_tiles, T.ArrayType(T.LongType()))
-            wtiles = windows.withColumn(
-                "_pk", F.explode(needed_tiles("col_off", "row_off", "win_w", "win_h"))
-            ).select(
-                "wid", "col_off", "row_off", "win_w", "win_h",
-                F.shiftrightunsigned("_pk", 32).cast("int").alias("x"),
-                (F.col("_pk") % F.lit(1 << 32)).cast("int").alias("y"),
-            )
+        smaller = "raise window_size or scale, or export smaller bounds"
+        _small.check(n_win, "projected_windows window grid", smaller)
+        wid = _np.arange(n_win, dtype=_np.int64)
+        co = (wid % wcols) * window_size
+        ro = (wid // wcols) * window_size
+        ww = _np.minimum(window_size, width - co)
+        wh = _np.minimum(window_size, height - ro)
+        grid = list(zip(wid.tolist(), co.tolist(), ro.tolist(), ww.tolist(), wh.tolist()))
+        win_ddl = "wid bigint, col_off int, row_off int, win_w int, win_h int"
+
+        # boundary pixel CENTERS bound each window's tile range. For the
+        # separable CRSs corners alone would do (gx monotone in output col,
+        # gy in row); for UTM lon/lat extremes can sit mid-edge (meridian
+        # convergence; equator crossing), so sample the full perimeter and
+        # pad (grid.tile_range_pad). One vectorized pass over all windows.
+        k = 9
+        cs = _np.linspace(co + 0.5, co + ww - 0.5, k, axis=1)
+        rs = _np.linspace(ro + 0.5, ro + wh - 0.5, k, axis=1)
+        first_c, last_c = _np.repeat(cs[:, :1], k, 1), _np.repeat(cs[:, -1:], k, 1)
+        first_r, last_r = _np.repeat(rs[:, :1], k, 1), _np.repeat(rs[:, -1:], k, 1)
+        xx = ox + _np.concatenate([cs, cs, first_c, last_c], axis=1) * xsize
+        yy = oy - _np.concatenate([first_r, last_r, rs, rs], axis=1) * ysize
+        lon, lat = _grid.out_xy_to_lonlat(xx.ravel(), yy.ravel(), out_crs)
+        tx, ty, _c, _r = _grid.sample_native_pixels(lon, lat, z, side)
+        tx, ty = tx.reshape(n_win, 4 * k), ty.reshape(n_win, 4 * k)
+        pad = _grid.tile_range_pad(out_crs)
+        top = (1 << z) - 1
+        x0 = _np.maximum(tx.min(axis=1) - pad, 0).tolist()
+        x1 = _np.minimum(tx.max(axis=1) + pad, top).tolist()
+        y0 = _np.maximum(ty.min(axis=1) - pad, 0).tolist()
+        y1 = _np.minimum(ty.max(axis=1) + pad, top).tolist()
+        wtile_rows = [
+            (*g, x, y)
+            for g, xa, xb, ya, yb in zip(grid, x0, x1, y0, y1)
+            for x in range(xa, xb + 1)
+            for y in range(ya, yb + 1)
+        ]
+        spark = self.df.sparkSession
+        windows = _small.frame(spark, grid, win_ddl, "projected_windows window grid", smaller)
+        wtiles = _small.frame(
+            spark, wtile_rows, win_ddl + ", x int, y int",
+            "projected_windows window->tile table", smaller,
+        )
         tiles = self.df.filter(F.col("z") == z).select("x", "y", "data", "mask")
         # the window-tile list is the SMALL side (windows x tiles-per-window
         # keys, no pixel payloads) — broadcast it so the big tile table

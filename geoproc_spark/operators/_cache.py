@@ -20,7 +20,9 @@ use distinct keys.
 from __future__ import annotations
 
 import threading
+import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 _LAST: dict[str, DataFrame] = {}
@@ -59,12 +61,21 @@ def release_checkpoint_df(df: DataFrame) -> None:
     later action on a plan referencing them fails. Only call it on
     checkpoints that nothing can read anymore (superseded loop batches,
     or a previous invocation's internals under the swap contract below).
+    A DataFrame whose analyzed root is not a LogicalRDD (not a checkpoint,
+    or a checkpoint with operators on top) releases nothing and warns.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() != "LogicalRDD":
+            warnings.warn(
+                f"release_checkpoint_df: analyzed root is {plan.nodeName()}, "
+                "not a checkpoint's LogicalRDD; nothing released",
+                stacklevel=2,
+            )
+            return
         plan.rdd().unpersist(False)
-    except Exception:
-        pass  # not a LogicalRDD leaf / session gone; nothing to release
+    except Py4JError:
+        pass  # session stopped: its blocks are gone with it
 
 
 def swap_checkpoint(key: str, df: DataFrame) -> DataFrame:

@@ -1,0 +1,49 @@
+"""The bounded "small side" of a join, held on the driver.
+
+Three operators collect a side that is small by construction (a polygon
+layer, a kNN query table, an export window grid), expand it in numpy on
+the driver and ship the result back as a local relation: spatial_join's
+covering cells, knn_join's ring and cover cells, projected_windows' window
+and window->tile tables. A broadcast exchange would collect that side to
+the driver anyway, so there is no distributed fallback; instead every such
+prep goes through this module and fails loudly above one bound.
+
+The bound is checked AFTER a plain collect(): `limit(MAX_ROWS + 1)` would
+launch a second Spark job per call. The bytes of the collect itself are
+already bounded by `spark.driver.maxResultSize` (1g default); MAX_ROWS
+bounds the driver-side expansion and the broadcast relation that follow.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, Row, SparkSession
+
+# A million rows of the widest prep table (7 ints) hold ~260 MB of Python
+# tuples on the driver, and broadcast far below Spark's 8 GB build limit.
+MAX_ROWS = 1_000_000
+
+
+def check(n: int, what: str, instead: str) -> None:
+    """Raise ValueError when `n` rows of `what` exceed MAX_ROWS."""
+    if n > MAX_ROWS:
+        raise ValueError(
+            f"{what}: {n:,} rows exceed the driver-side bound of "
+            f"{MAX_ROWS:,} rows (operators._small.MAX_ROWS); {instead}"
+        )
+
+
+def collect(df: DataFrame, what: str, instead: str) -> list[Row]:
+    """Collect a small input to the driver, bounded by MAX_ROWS."""
+    rows = df.collect()
+    check(len(rows), what, instead)
+    return rows
+
+
+def frame(spark: SparkSession, rows: list, ddl: str, what: str, instead: str) -> DataFrame:
+    """The local DataFrame of driver-built `rows`, bounded by MAX_ROWS.
+
+    No broadcast hint here: callers add F.broadcast at the join site,
+    because a side that is preserved by an outer or anti join cannot be
+    the broadcast build side."""
+    check(len(rows), what, instead)
+    return spark.createDataFrame(rows, ddl)

@@ -15,21 +15,22 @@ Phase-2 correctness does not depend on phase-1 ring geometry — any >= k
 candidates give a valid bound, so Mercator y-distortion in the ring metric
 is harmless.
 
-Scale: both phases are cell equi-joins (shuffle on cell key, AQE-coalesced);
-queries are typically the small side and broadcast by Catalyst. The driver
-loop runs O(log(world/cell)) rounds in the worst case, each a single job on
-the *unresolved* queries only.
+Scale: the query side is the small side by construction. It is collected
+once through operators._small (bounded by MAX_ROWS, a clean ValueError
+above it); its ring and cover cells are computed in numpy on the driver and
+broadcast as local relations into cell equi-joins against the pages. The
+driver loop runs O(log(world/cell)) rounds in the worst case, each a single
+job on the *unresolved* queries only.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import cells
+from . import _small
 
 DEFAULT_KNN_ZOOM = 6
 SCALE = 10_000
@@ -44,8 +45,7 @@ def _pages_with_cell(pages: DataFrame, zoom: int) -> DataFrame:
 
 def _ring_cells_np(lat_s, lon_s, zoom: int, radius: int) -> list[list[int]]:
     """Cells within `radius` tiles of each point's cell (x wraps around the
-    antimeridian, y clamps to the grid) — plain numpy, shared by the pandas
-    UDF and the driver-resident query path."""
+    antimeridian, y clamps to the grid) — the phase-1 ring cells."""
     n = 1 << zoom
     xt, yt = cells.tile_xy_np(
         np.asarray(lat_s, dtype=np.float64) / SCALE,
@@ -66,7 +66,7 @@ def _ring_cells_np(lat_s, lon_s, zoom: int, radius: int) -> list[list[int]]:
 
 def _bbox_cells_np(lat_s, lon_s, d_k, zoom: int) -> list[list[int]]:
     """Covering cells of [q +- r] where r = ceil(sqrt(d_k)) scaled units —
-    plain numpy twin of the phase-2 cover UDF."""
+    the phase-2 cover cells."""
     la = np.asarray(lat_s, dtype=np.float64)
     lo = np.asarray(lon_s, dtype=np.float64)
     r = np.ceil(np.sqrt(np.asarray(d_k, dtype=np.float64)))
@@ -78,30 +78,6 @@ def _bbox_cells_np(lat_s, lon_s, d_k, zoom: int) -> list[list[int]]:
         zoom,
     )
     return [c.tolist() for c in covers]
-
-
-def _ring_cells_udf(zoom: int, radius: int):
-    """ARRAY<BIGINT> of cells within `radius` tiles of the point's cell."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def ring(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        return pd.Series(_ring_cells_np(lat_s.to_numpy(), lon_s.to_numpy(), zoom, radius))
-
-    return ring
-
-
-def _bbox_cells_udf(zoom: int):
-    """Covering cells of [q +- r] where r = ceil(sqrt(d_k)) scaled units."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover(lat_s: pd.Series, lon_s: pd.Series, d_k: pd.Series) -> pd.Series:
-        return pd.Series(
-            _bbox_cells_np(
-                lat_s.to_numpy(), lon_s.to_numpy(), d_k.to_numpy(), zoom
-            )
-        )
-
-    return cover
 
 
 def _d2():
@@ -118,16 +94,20 @@ def knn_join(
     max_rounds: int = 12,
     n_pages: int | None = None,
     k_max: int | None = None,
-    collect_queries: bool = True,
 ) -> DataFrame:
     """Exact kNN: queries(qid, qlat_s, qlon_s, k) x pages(page_id, lat_s, lon_s)
     -> (qid, page_id, rank).
 
+    The query table is the small side: it is collected to the driver once
+    (operators._small), and so is each round's ring-cell table and the
+    phase-2 cover table. Each is bounded by _small.MAX_ROWS rows; above it
+    knn_join raises ValueError — split the query table into batches.
+
     n_pages / k_max: density-seed hints. At 100 TB a count() is a full-scan
     job before any useful work — pass the row count from the table-format
     manifest (tableformat.read_manifest(path)["total_rows"]); the count
-    runs only as a fallback when no hint is given. k_max is a one-row agg
-    on the (small) query side, cheap but also hintable.
+    runs only as a fallback when no hint is given. k_max defaults to the
+    largest k of the collected queries.
 
     Duplicate-position collapse (r6): web corpora repeat exact coordinates
     massively (same venue, mirrored pages — the bench corpus holds ~400
@@ -141,16 +121,16 @@ def knn_join(
     per query."""
     from ._cache import swap_cache
 
-    qrows: list[tuple[int, int, int, int]] | None = None
-    if collect_queries:
-        # one collect serves kmax AND every round's ring metadata below
-        qrows = [
-            (int(r["qid"]), int(r["qlat_s"]), int(r["qlon_s"]), int(r["k"]))
-            for r in queries.select("qid", "qlat_s", "qlon_s", "k").collect()
-        ]
-        kmax = k_max if k_max is not None else (max((q[3] for q in qrows), default=1) or 1)
-    else:
-        kmax = k_max if k_max is not None else queries.agg(F.max("k")).first()[0] or 1
+    split = "split the query table into smaller batches and union the results"
+    # one collect serves kmax AND every round's ring metadata below
+    qrows = [
+        (int(r["qid"]), int(r["qlat_s"]), int(r["qlon_s"]), int(r["k"]))
+        for r in _small.collect(
+            queries.select("qid", "qlat_s", "qlon_s", "k"),
+            "knn_join query table", split,
+        )
+    ]
+    kmax = k_max if k_max is not None else (max((q[3] for q in qrows), default=1) or 1)
     wpos = Window.partitionBy("lat_s", "lon_s").orderBy("page_id")
     pages_c = swap_cache(
         "knn_pages_cell",
@@ -177,107 +157,27 @@ def knn_join(
     cells_needed = max(9.0, 3.0 * kmax / max(density, 1e-12))
     radius = min(1 << zoom, max(1, math.ceil((math.sqrt(cells_needed) - 1) / 2)))
 
+    # With the query rows local, each round is ONE Spark job: ring cells
+    # come from numpy (the broadcast side is a local relation), the
+    # per-query kth bound comes back via a collect of <= |unresolved| tiny
+    # rows, and convergence is a set difference in Python.
     spark = queries.sparkSession
-    if collect_queries:
-        # Driver-resident query metadata (r6): the query side is the SMALL
-        # side of a kNN join by construction — every round already ships it
-        # whole as a broadcast, so its rows fit on the driver (the same
-        # size argument spatial_join's broadcast_poly collect makes). With
-        # the rows local, each round is ONE Spark job: ring cells come from
-        # the same numpy routine the UDF wraps (no Python-worker trip, the
-        # broadcast side is a local relation), the per-query kth bound
-        # comes back via a collect of <= |unresolved| tiny rows (replacing
-        # localCheckpoint + anti-join + isEmpty — two extra jobs per
-        # round), and convergence is a set difference in Python. Pass
-        # collect_queries=False for query tables too large to hold
-        # driver-side; the fully-distributed loop below is unchanged.
-        unresolved_l = qrows
-        bounds_l: list[tuple[int, int, int, int, float]] = []
-        for _ in range(max_rounds):
-            rings = _ring_cells_np(
-                [q[1] for q in unresolved_l], [q[2] for q in unresolved_l],
-                zoom, radius,
-            )
-            qcells = spark.createDataFrame(
-                [
-                    (qid, la, lo, k, int(c))
-                    for (qid, la, lo, k), cs in zip(unresolved_l, rings)
-                    for c in cs
-                ],
-                "qid long, qlat_s long, qlon_s long, k int, _cell long",
-            )
-            cand = F.broadcast(qcells).join(pages_c, "_cell", "inner").select(
-                "qid", "qlat_s", "qlon_s", "k", "page_id", _d2()
-            )
-            wq = Window.partitionBy("qid").orderBy(
-                F.col("d2").asc(), F.col("page_id").asc()
-            )
-            kth = (
-                cand.withColumn("rn", F.row_number().over(wq))
-                .filter(F.col("rn") <= F.col("k"))
-                .groupBy("qid", "qlat_s", "qlon_s", "k")
-                .agg(F.count("*").alias("n"), F.max("d2").alias("d_k"))
-            )
-            resolved_rows = kth.filter(F.col("n") >= F.col("k")).select(
-                "qid", "qlat_s", "qlon_s", "k", "d_k"
-            ).collect()
-            bounds_l.extend(
-                (int(r["qid"]), int(r["qlat_s"]), int(r["qlon_s"]), int(r["k"]),
-                 float(r["d_k"]))
-                for r in resolved_rows
-            )
-            done_ids = {int(r["qid"]) for r in resolved_rows}
-            unresolved_l = [q for q in unresolved_l if q[0] not in done_ids]
-            if not unresolved_l:
-                break
-            radius *= 2
-        else:
-            # Degenerate corpus (< k pages anywhere): full-scan bound.
-            bounds_l.extend(
-                (qid, la, lo, k, float((4e6) ** 2 * 2))
-                for qid, la, lo, k in unresolved_l
-            )
-        # Phase 2 (driver-prepped): same certified-radius exact top-k; the
-        # cover cells come from the numpy twin of the cover UDF.
-        covers = _bbox_cells_np(
-            [b[1] for b in bounds_l], [b[2] for b in bounds_l],
-            [b[4] for b in bounds_l], zoom,
+    unresolved = qrows
+    bounds: list[tuple[int, int, int, int, float]] = []
+    for _ in range(max_rounds):
+        rings = _ring_cells_np(
+            [q[1] for q in unresolved], [q[2] for q in unresolved], zoom, radius
         )
-        qcover = spark.createDataFrame(
+        qcells = _small.frame(
+            spark,
             [
-                (qid, la, lo, k, dk, int(c))
-                for (qid, la, lo, k, dk), cs in zip(bounds_l, covers)
+                (qid, la, lo, k, int(c))
+                for (qid, la, lo, k), cs in zip(unresolved, rings)
                 for c in cs
             ],
-            "qid long, qlat_s long, qlon_s long, k int, d_k double, _cell long",
+            "qid long, qlat_s long, qlon_s long, k int, _cell long",
+            "knn_join ring cells", split,
         )
-        cand2 = (
-            F.broadcast(qcover).join(pages_c, "_cell", "inner")
-            .select("qid", "k", "page_id", _d2(), "d_k")
-            .filter(F.col("d2") <= F.col("d_k"))
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("d2").asc(), F.col("page_id").asc()
-        )
-        return (
-            cand2.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("qid", "page_id", "rank")
-        )
-
-    unresolved = queries.select("qid", "qlat_s", "qlon_s", "k")
-    bounds = None
-    for _ in range(max_rounds):
-        ring = _ring_cells_udf(zoom, radius)
-        qcells = unresolved.withColumn(
-            "_cell", F.explode(ring(F.col("qlat_s"), F.col("qlon_s")))
-        )
-        # broadcast the ring-exploded QUERY side (r6): it sits behind a
-        # pandas UDF, so Catalyst has no size estimate and planned a
-        # sort-merge join that shuffled the whole page table on _cell every
-        # round (profiled: the shuffle, not the candidate math, dominated).
-        # |unresolved| x |ring| rows is broadcast-sized by construction —
-        # queries are the small side of a kNN join.
         cand = F.broadcast(qcells).join(pages_c, "_cell", "inner").select(
             "qid", "qlat_s", "qlon_s", "k", "page_id", _d2()
         )
@@ -288,29 +188,35 @@ def knn_join(
             .groupBy("qid", "qlat_s", "qlon_s", "k")
             .agg(F.count("*").alias("n"), F.max("d2").alias("d_k"))
         )
-        # localCheckpoint (eager) truncates lineage at the round boundary:
-        # resolved is tiny (<= |queries| rows) but its PLAN holds the whole
-        # ring-explode + pages join subtree — without the cut, round r's
-        # isEmpty re-executes rounds 1..r-1 and phase 2 re-executes every
-        # round's candidate join a second time (VERDICT r02 item 8)
         resolved = kth.filter(F.col("n") >= F.col("k")).select(
             "qid", "qlat_s", "qlon_s", "k", "d_k"
-        ).localCheckpoint()
-        bounds = resolved if bounds is None else bounds.unionByName(resolved)
-        unresolved = unresolved.join(resolved.select("qid"), "qid", "left_anti")
-        if unresolved.isEmpty():
+        ).collect()
+        bounds.extend(
+            (int(r["qid"]), int(r["qlat_s"]), int(r["qlon_s"]), int(r["k"]), float(r["d_k"]))
+            for r in resolved
+        )
+        done_ids = {int(r["qid"]) for r in resolved}
+        unresolved = [q for q in unresolved if q[0] not in done_ids]
+        if not unresolved:
             break
         radius *= 2
     else:
-        # Degenerate corpus (< k pages anywhere): fall back to a full scan
-        # bound for the stragglers.
-        world = unresolved.withColumn("d_k", F.lit(float((4e6) ** 2 * 2)))
-        bounds = world if bounds is None else bounds.unionByName(world)
+        # Degenerate corpus (< k pages anywhere): full-scan bound.
+        bounds.extend((qid, la, lo, k, float((4e6) ** 2 * 2)) for qid, la, lo, k in unresolved)
 
     # Phase 2: exact top-k within the certified radius.
-    cover = _bbox_cells_udf(zoom)
-    qcover = bounds.withColumn(
-        "_cell", F.explode(cover(F.col("qlat_s"), F.col("qlon_s"), F.col("d_k")))
+    covers = _bbox_cells_np(
+        [b[1] for b in bounds], [b[2] for b in bounds], [b[4] for b in bounds], zoom
+    )
+    qcover = _small.frame(
+        spark,
+        [
+            (qid, la, lo, k, dk, int(c))
+            for (qid, la, lo, k, dk), cs in zip(bounds, covers)
+            for c in cs
+        ],
+        "qid long, qlat_s long, qlon_s long, k int, d_k double, _cell long",
+        "knn_join cover cells", split,
     )
     cand2 = (
         F.broadcast(qcover).join(pages_c, "_cell", "inner")
@@ -320,9 +226,8 @@ def knn_join(
         # disjoint, each page lives in exactly one -> no dedup needed
     )
     w = Window.partitionBy("qid").orderBy(F.col("d2").asc(), F.col("page_id").asc())
-    out = (
+    return (
         cand2.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= F.col("k"))
         .select("qid", "page_id", "rank")
     )
-    return out

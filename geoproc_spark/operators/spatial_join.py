@@ -11,9 +11,11 @@ Scale notes (100 TB / 1000 executors):
 - The big (pages) side is hash-partitioned on cell by the join shuffle; with
   a cell-prefix-partitioned table layout the shuffle is avoided entirely
   (storage-partitioned join). The polygon side is exploded x |cover| only.
-- Catalyst broadcasts the polygon side automatically when it is small; for
-  very small layers `broadcast_spatial_join` skips the shuffle AND the
-  explode by probing a broadcast bbox index inside `mapInPandas`.
+- By default (`broadcast_poly=True`) the polygon layer is collected through
+  operators._small and its covering cells are broadcast; continent-scale
+  layers pass False and shuffle both sides on cell. `broadcast_spatial_join`
+  skips the shuffle AND the explode by probing a broadcast bbox index
+  inside `mapInPandas`.
 - Hot cells (city-center skew) are handled by explicit salting
   (`salt_buckets`) plus AQE skew-join as backstop. Salting preserves
   semantics: the page side picks ONE salt per row, the polygon side is
@@ -26,7 +28,7 @@ half-integer polygon edges, synth.py).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -36,6 +38,7 @@ from pyspark.sql import types as T
 
 from ..functions import cells
 from .. import synth
+from . import _small
 
 DEFAULT_JOIN_ZOOM = 8
 
@@ -61,24 +64,36 @@ def points_in_ring_np(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nd
     return inside
 
 
-@F.pandas_udf(T.BooleanType())
-def _pip_udf(lon: pd.Series, lat: pd.Series, ring: pd.Series, fid: pd.Series) -> pd.Series:
-    """Arrow-batched PIP refine. Candidates are grouped by feature_id (an
-    int64 argsort — no per-row Python) and each distinct polygon is tested
-    against its candidate points in one vectorized ray-cast pass."""
-    out = np.zeros(len(lon), dtype=bool)
-    px = lon.to_numpy(dtype=np.float64)
-    py = lat.to_numpy(dtype=np.float64)
-    f = fid.to_numpy(dtype=np.int64)
-    order = np.argsort(f, kind="stable")
-    fs = f[order]
-    starts = np.flatnonzero(np.r_[True, fs[1:] != fs[:-1]])
-    bounds = np.r_[starts, len(fs)]
+def pip_refine_np(
+    px: np.ndarray, py: np.ndarray, fid: np.ndarray, ring_at: Callable[[int], np.ndarray]
+) -> np.ndarray:
+    """Exact refine of candidate (point, polygon) rows: row i holds point
+    (px[i], py[i]) and polygon fid[i], whose flat ring is ring_at(i).
+
+    Rows are grouped by fid (an int64 argsort — no per-row Python) and each
+    distinct polygon is tested against its candidate points in one
+    vectorized ray-cast pass."""
+    out = np.zeros(len(px), dtype=bool)
+    order = np.argsort(fid, kind="stable")
+    fs = fid[order]
+    bounds = np.r_[np.flatnonzero(np.r_[True, fs[1:] != fs[:-1]]), len(fs)]
     for a, b in zip(bounds[:-1], bounds[1:]):
         ii = order[a:b]
-        r = np.asarray(ring.iloc[ii[0]], dtype=np.float64)
-        out[ii] = points_in_ring_np(px[ii], py[ii], r)
-    return pd.Series(out)
+        out[ii] = points_in_ring_np(px[ii], py[ii], ring_at(ii[0]))
+    return out
+
+
+@F.pandas_udf(T.BooleanType())
+def _pip_udf(lon: pd.Series, lat: pd.Series, ring: pd.Series, fid: pd.Series) -> pd.Series:
+    """Arrow-batched PIP refine; each candidate row carries its ring."""
+    return pd.Series(
+        pip_refine_np(
+            lon.to_numpy(dtype=np.float64),
+            lat.to_numpy(dtype=np.float64),
+            fid.to_numpy(dtype=np.int64),
+            lambda i: np.asarray(ring.iloc[i], dtype=np.float64),
+        )
+    )
 
 
 def _pip_udf_broadcast(rings_bc):
@@ -92,18 +107,15 @@ def _pip_udf_broadcast(rings_bc):
     @F.pandas_udf(T.BooleanType())
     def pip(lon: pd.Series, lat: pd.Series, fid: pd.Series) -> pd.Series:
         rings = rings_bc.value
-        out = np.zeros(len(lon), dtype=bool)
-        px = lon.to_numpy(dtype=np.float64)
-        py = lat.to_numpy(dtype=np.float64)
         f = fid.to_numpy(dtype=np.int64)
-        order = np.argsort(f, kind="stable")
-        fs = f[order]
-        starts = np.flatnonzero(np.r_[True, fs[1:] != fs[:-1]])
-        bounds = np.r_[starts, len(fs)]
-        for a, b in zip(bounds[:-1], bounds[1:]):
-            ii = order[a:b]
-            out[ii] = points_in_ring_np(px[ii], py[ii], rings[fs[a]])
-        return pd.Series(out)
+        return pd.Series(
+            pip_refine_np(
+                lon.to_numpy(dtype=np.float64),
+                lat.to_numpy(dtype=np.float64),
+                f,
+                lambda i: rings[f[i]],
+            )
+        )
 
     return pip
 
@@ -178,6 +190,8 @@ def spatial_join(
     happily broadcast the *points* once in profiling). Polygon layers are
     almost always the small side — hint it explicitly; pass False for
     continent-scale layers, where the equi-join shuffles both sides on cell.
+    With True the layer is collected to the driver (operators._small): more
+    than _small.MAX_ROWS polygons or covering cells raise ValueError.
     """
     _check_reserved(points)
     pts = points.filter(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
@@ -194,9 +208,11 @@ def spatial_join(
         # latency per join call (profiled ~1.5 s fixed in the scaling
         # harness's pip stage, the non-scaling part of its wall)
         spark = points.sparkSession
-        rows = poly.select(
-            "feature_id", "ring", "minx", "miny", "maxx", "maxy"
-        ).collect()
+        shuffle = "pass broadcast_poly=False to shuffle-join the polygon layer"
+        rows = _small.collect(
+            poly.select("feature_id", "ring", "minx", "miny", "maxx", "maxy"),
+            "spatial_join polygon layer", shuffle,
+        )
         rings_bc = spark.sparkContext.broadcast(
             {r["feature_id"]: np.asarray(r["ring"], dtype=np.float64) for r in rows}
         )
@@ -213,7 +229,10 @@ def spatial_join(
             for c in cov
         ]
         poly_cells = F.broadcast(
-            spark.createDataFrame(pairs, "feature_id long, _cell long")
+            _small.frame(
+                spark, pairs, "feature_id long, _cell long",
+                "spatial_join covering cells", shuffle,
+            )
         )
     else:
         poly_cells = with_covering_cells(poly, zoom).select(
@@ -405,16 +424,7 @@ def broadcast_spatial_join(
             if len(pi) == 0:
                 yield pdf.iloc[:0].assign(feature_id=np.array([], dtype=np.int64))
                 continue
-            keep = np.zeros(len(pi), dtype=bool)
-            # group candidate pairs by polygon: one vectorized ray-cast per
-            # DISTINCT matched polygon over its candidate points
-            order = np.argsort(fi, kind="stable")
-            fo = fi[order]
-            bounds = np.r_[np.flatnonzero(np.r_[True, fo[1:] != fo[:-1]]), len(fo)]
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                ii = order[a:b]
-                j = fi[ii[0]]
-                keep[ii] = points_in_ring_np(lon[pi[ii]], lat[pi[ii]], index.rings[j])
+            keep = pip_refine_np(lon[pi], lat[pi], fi, lambda i: index.rings[fi[i]])
             pi, fi = pi[keep], fi[keep]
             out = pdf.iloc[pi][pt_cols].reset_index(drop=True)
             out["feature_id"] = index.fids[fi]

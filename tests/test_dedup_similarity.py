@@ -302,6 +302,24 @@ def test_connected_components_edge_cache_is_single_pass(spark):
     assert got == {(1, 2), (2, 1), (2, 3), (3, 2)}
 
 
+def test_release_checkpoint_df_warns_on_non_checkpoint(spark):
+    """Releasing a DataFrame that is not a localCheckpoint (analyzed root
+    not a LogicalRDD) releases nothing and says so; a real checkpoint
+    releases silently."""
+    import warnings
+
+    import pytest
+
+    from geoproc_spark.operators import _cache
+
+    with pytest.warns(UserWarning, match="Range, not a checkpoint"):
+        _cache.release_checkpoint_df(spark.range(3))
+    ck = spark.range(3).localCheckpoint()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        _cache.release_checkpoint_df(ck)
+
+
 def test_canonical_url_normalization_cases(spark):
     """The canonical-URL spec: scheme/'www.'/fragment/tracking-params/
     trailing-slash collapse; surviving params sort; case folds."""

@@ -275,3 +275,29 @@ def test_export_projected_3857_output_and_broadcast_plan(spark, tmp_path):
         assert np.array_equal(gm, want_m), (r.col_off, r.row_off)
         n_empty += (not hit)
     assert n_empty > 0  # the widened bounds really produced nodata windows
+
+
+def test_export_queries_declare_true_max_zoom(spark, monkeypatch):
+    """tile_export_projected / tile_export_utm pass max_zoom=synth.TILE_Z
+    as declared metadata so projected_windows skips its max-z job; the
+    declared value must equal max(z) of the tile table they export."""
+    from pyspark.sql import functions as F
+
+    from geoproc_spark import queries as Q
+    from tests.conftest import SF_DIR
+
+    declared = []
+    from_df = Image.from_df
+
+    def spy(df, *args, **kwargs):
+        declared.append((df, kwargs.get("max_zoom")))
+        return from_df(df, *args, **kwargs)
+
+    monkeypatch.setattr(Image, "from_df", spy)
+    reg = {**Q.SPARK_QUERIES, **Q.EXTRA_SPARK_QUERIES}
+    for name in ("tile_export_projected", "tile_export_utm"):
+        reg[name](spark, SF_DIR)
+    assert len(declared) == 2
+    for df, max_zoom in declared:
+        assert max_zoom is not None
+        assert max_zoom == df.agg(F.max("z")).first()[0]

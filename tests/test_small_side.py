@@ -1,0 +1,80 @@
+"""The bounded driver-side small side (operators/_small.py): every operator
+that collects or builds a small side on the driver fails with a clean
+ValueError above MAX_ROWS, naming what to do instead."""
+
+import pytest
+
+from geoproc_spark import synth
+from geoproc_spark.image import Image
+from geoproc_spark.operators import _small
+from geoproc_spark.operators import knn as knn_op
+from geoproc_spark.operators import spatial_join as sj
+
+
+def test_knn_oversized_query_table_fails_cleanly(spark, monkeypatch):
+    pages = spark.createDataFrame(
+        [(1, 0, 0), (2, 10, 10)], "page_id long, lat_s long, lon_s long"
+    )
+    queries = spark.createDataFrame(
+        [(0, 0, 0, 1), (1, 5, 5, 1), (2, 9, 9, 1)],
+        "qid long, qlat_s long, qlon_s long, k int",
+    )
+    monkeypatch.setattr(_small, "MAX_ROWS", 2)
+    with pytest.raises(ValueError, match=r"knn_join query table: 3 rows .* bound of 2 rows"):
+        knn_op.knn_join(queries, pages, n_pages=2)
+
+
+def test_spatial_join_oversized_polygon_layer_fails_cleanly(spark, monkeypatch):
+    pts = spark.createDataFrame(
+        [(1, 48.8566, 2.3522), (2, -33.8688, 151.2093)],
+        "page_id long, lat double, lon double",
+    )
+    poly = sj.polygons_df(spark)
+    want = sorted(
+        map(tuple, sj.spatial_join(pts, poly).select("page_id", "feature_id").collect())
+    )
+    monkeypatch.setattr(_small, "MAX_ROWS", 2)
+    with pytest.raises(ValueError, match=r"polygon layer: .*broadcast_poly=False"):
+        sj.spatial_join(pts, poly)
+    # the advertised way out holds nothing on the driver
+    got = sorted(
+        map(
+            tuple,
+            sj.spatial_join(pts, poly, broadcast_poly=False)
+            .select("page_id", "feature_id")
+            .collect(),
+        )
+    )
+    assert got == want
+
+
+def test_projected_windows_oversized_grid_fails_before_any_job(spark, monkeypatch):
+    from geoproc_spark.functions import grid as G
+
+    img = Image.from_df(
+        synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX,
+        max_zoom=synth.TILE_Z,
+    )
+    bounds = (-6.0, 40.0, -0.5, 50.0)
+    spec = G.export_grid_spec(bounds, 10000.0, crs="epsg:32630")
+    wcols, wrows = G.n_windows(spec["width"], spec["height"], 32)
+    assert wcols * wrows > 2
+    monkeypatch.setattr(_small, "MAX_ROWS", 2)
+
+    def no_numpy_work(*_a, **_k):
+        raise AssertionError("window->tile prep ran before the bound check")
+
+    monkeypatch.setattr(G, "sample_native_pixels", no_numpy_work)
+    sc = spark.sparkContext
+    sc.setJobGroup("small_side_guard", "projected_windows guard")
+    try:
+        with pytest.raises(
+            ValueError, match=rf"window grid: {wcols * wrows} rows .*window_size"
+        ):
+            img.projected_windows(
+                scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("small_side_guard")) == []

@@ -195,10 +195,10 @@ def test_broadcast_join_nan_coordinates_never_match(spark):
 
 
 def test_knn_sparse_multi_round_flat_lineage(spark):
-    """A sparse corpus forces several ring-expansion rounds; the per-round
-    localCheckpoint must (a) keep the final plan free of the per-round
-    candidate-join subtrees (bounded Exchange count regardless of rounds)
-    and (b) leave the exact result intact vs numpy brute force."""
+    """A sparse corpus forces several ring-expansion rounds; each round's
+    bounds come back to the driver, so (a) the final plan is free of the
+    per-round candidate-join subtrees (bounded Exchange count regardless
+    of rounds) and (b) the exact result matches numpy brute force."""
     from geoproc_spark.operators import knn as knn_op
 
     # 8 pages scattered ~continental distances apart; k=3 with a tiny seed
@@ -223,10 +223,10 @@ def test_knn_sparse_multi_round_flat_lineage(spark):
     assert got == want
 
 
-def test_knn_collect_and_distributed_paths_agree(spark):
-    """knn_join's driver-resident query path (collect_queries=True, the
-    default) and the fully-distributed loop must return identical exact
-    top-k, including multi-round ring expansion and the brute-force twin."""
+def test_knn_mixed_k_multi_round_matches_brute_force(spark):
+    """Exact top-k with per-query k (k_max derived from the collected
+    queries) across multi-round ring expansion, against the brute-force
+    twin; the plan runs no Python UDF."""
     from geoproc_spark.operators import knn as knn_op
 
     pts = [
@@ -238,19 +238,10 @@ def test_knn_collect_and_distributed_paths_agree(spark):
         [(0, 0, 0, 3), (1, 500000, 900000, 2)],
         "qid long, qlat_s long, qlon_s long, k int",
     )
-    got_c = {
-        (r.qid, r.page_id, r.rank)
-        for r in knn_op.knn_join(
-            queries, pages, zoom=6, n_pages=8, collect_queries=True
-        ).collect()
-    }
-    got_d = {
-        (r.qid, r.page_id, r.rank)
-        for r in knn_op.knn_join(
-            queries, pages, zoom=6, n_pages=8, collect_queries=False
-        ).collect()
-    }
-    assert got_c == got_d
+    out = knn_op.knn_join(queries, pages, zoom=6, n_pages=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
+    got = {(r.qid, r.page_id, r.rank) for r in out.collect()}
     want = set()
     arr = np.array(pts, dtype=np.int64)
     for qid, qla, qlo, k in [(0, 0, 0, 3), (1, 500000, 900000, 2)]:
@@ -258,4 +249,4 @@ def test_knn_collect_and_distributed_paths_agree(spark):
         order = np.lexsort((arr[:, 0], d2))[:k]
         for rank, j in enumerate(order, start=1):
             want.add((qid, int(arr[j, 0]), rank))
-    assert got_c == want
+    assert got == want
