@@ -4,11 +4,16 @@
 Usage: python BENCH/dump_plans.py OUT_DIR SUFFIX name1 name2 ...
 Writes OUT_DIR/<name>_<SUFFIX>.txt. Runs from whatever repo root is on
 sys.path[0] — invoke with cwd set to the tree whose plans you want.
+
+Besides registry queries, the name `geo_run_extract` runs the pipeline's
+pages and extract stages into a temporary directory and dumps the final
+(post-AQE) plan of the extract snapshot's write.
 """
 
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.getcwd())
@@ -16,6 +21,19 @@ sys.path.insert(0, os.getcwd())
 OUT_DIR, SUFFIX = sys.argv[1], sys.argv[2]
 NAMES = sys.argv[3:]
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+
+def geo_run_extract_write_plan(spark) -> str:
+    from geoproc_spark.plans import geo_run
+    from geoproc_spark.plans.pipeline import Pipeline
+
+    with tempfile.TemporaryDirectory() as d:
+        Pipeline("plans", d).run(spark, geo_run.geo_stages(SF)[:2])
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    writes = [execs.apply(i) for i in range(execs.size())]
+    writes = [e for e in writes if e.description().startswith("parquet at")]
+    return writes[-1].physicalPlanDescription() + "\n"
 
 
 def main():
@@ -30,11 +48,14 @@ def main():
     reg = {**Q.SPARK_QUERIES, **Q.EXTRA_SPARK_QUERIES}
     for name in NAMES:
         try:
-            df = reg[name](spark, SF)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            txt = buf.getvalue()
+            if name == "geo_run_extract":
+                txt = geo_run_extract_write_plan(spark)
+            else:
+                df = reg[name](spark, SF)
+                buf = io.StringIO()
+                with redirect_stdout(buf):
+                    df.explain("formatted")
+                txt = buf.getvalue()
         except Exception as exc:  # noqa: BLE001
             txt = f"ERROR building {name}: {exc!r}\n"
         path = os.path.join(OUT_DIR, f"{name}_{SUFFIX}.txt")

@@ -37,8 +37,8 @@ def swap_cache(key: str, df: DataFrame) -> DataFrame:
     if prev is not None and prev is not cached:
         try:
             prev.unpersist()
-        except Exception:
-            pass  # session may be gone; nothing to release
+        except Py4JError:
+            pass  # session stopped: its cache is gone with it
     return cached
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from . import _small
 
 
 def pack_sequences(docs: DataFrame, seq_len: int = 2048) -> DataFrame:
@@ -77,7 +78,10 @@ def mixture_resample(docs: DataFrame, weights: dict[str, float]) -> DataFrame:
     (plan-asserted in test_corpus_ops)."""
     spark = docs.sparkSession
     entries = [(s, int(w), round((w - int(w)) * 10000)) for s, w in weights.items()]
-    wdf = spark.createDataFrame(entries, "source string, _base int, _frac int")
+    wdf = _small.frame(
+        spark, entries, "source string, _base int, _frac int",
+        "mixture_resample weights", "pass fewer sources",
+    )
     joined = docs.select("doc_id", "source").join(F.broadcast(wdf), "source", "left_outer")
     base = F.coalesce(F.col("_base"), F.lit(1))
     frac = F.coalesce(F.col("_frac"), F.lit(0))

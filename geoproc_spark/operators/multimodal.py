@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import _small
+
 ASSET_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType()),
@@ -73,7 +75,7 @@ def assets_df(spark: SparkSession, n: int = 200) -> DataFrame:
     rows = [
         (i, kinds[i % 3], "FAKE", make_payload(i, kinds[i % 3])) for i in range(n)
     ]
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _small.frame(spark, rows, ASSET_SCHEMA, "assets_df", "pass a smaller n")
 
 
 def _decode_fake(codec: str, payload: bytes):

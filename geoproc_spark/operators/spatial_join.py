@@ -135,7 +135,7 @@ def polygons_df(spark: SparkSession) -> DataFrame:
             T.StructField("maxy", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(feats, schema)
+    return _small.frame(spark, feats, schema, "polygon layer", "read a large layer from a table")
 
 
 def with_covering_cells(poly: DataFrame, zoom: int = DEFAULT_JOIN_ZOOM) -> DataFrame:

@@ -28,6 +28,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import _small
 from ..sources import tableformat as tf
 
 
@@ -134,8 +135,10 @@ class Pipeline:
                             r["created_ms"],
                         )
                     )
-        return spark.createDataFrame(
+        return _small.frame(
+            spark,
             flat,
             "run_id string, stage string, resumed boolean, partition_id int, "
             "input_rows long, output_rows long, bytes long, wall_ms long, created_ms long",
+            "pipeline metrics", f"read {journal} with spark.read.json",
         )

@@ -15,6 +15,12 @@ Layout:
     <path>/metadata/snap-<n>.json   {schema, partition_spec, base, files[], summary}
     <path>/metadata/version-hint.text   latest snapshot number
 
+Partitioned writes are hash-distributed by the partition columns (a
+`rebalance` hint; Iceberg's default `write.distribution-mode=hash`), so
+each partition value gets about one file, not one per upstream task: AQE
+coalesces small partitions and splits skewed ones (hot cells). Reads take
+the schema from the manifest, so no footer-inference job runs.
+
 Commit ordering is Iceberg's write-data-then-commit: data files land in a
 fresh snapshot-scoped directory first, the manifest second, the
 version-hint pointer LAST — a crash at any point leaves the previous
@@ -31,6 +37,7 @@ from typing import Any
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _meta_dir(path: str) -> str:
@@ -91,7 +98,7 @@ def write_table(
     data = os.path.join(_data_dir(path), f"snap-{snap_id}")
     writer = df.write.mode(mode)
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
+        writer = df.hint("rebalance", *partition_by).write.mode(mode).partitionBy(*partition_by)
     writer.parquet(data)
 
     files = []
@@ -139,14 +146,16 @@ def read_table(spark: SparkSession, path: str, snapshot: int | None = None) -> D
 
     Always reads exactly the manifest's file list with `basePath` set to the
     snapshot's data directory, so Hive-style partition columns (e.g. the
-    extract stage's cell_p) are inferred identically for current and
-    time-travel reads."""
+    extract stage's cell_p) come back on current and time-travel reads.
+    The schema, partition columns included, is the manifest's: Spark
+    infers nothing from the parquet footers."""
     m = read_manifest(path, snapshot)
     if m is None:
         raise FileNotFoundError(f"no snapshot metadata under {path}")
     base = os.path.join(path, m.get("base", "data"))
     files = [os.path.join(path, f["path"]) for f in m["files"]]
-    return spark.read.option("basePath", base).parquet(*files)
+    schema = StructType.fromJson(m["schema"])
+    return spark.read.schema(schema).option("basePath", base).parquet(*files)
 
 
 def table_exists(path: str) -> bool:

@@ -320,6 +320,25 @@ def test_release_checkpoint_df_warns_on_non_checkpoint(spark):
         _cache.release_checkpoint_df(ck)
 
 
+def test_swap_cache_propagates_non_py4j_release_errors(spark):
+    """swap_cache forgives only py4j errors (a stopped session) when it
+    unpersists the previous holder; any other failure propagates."""
+    import pytest
+
+    from geoproc_spark.operators import _cache
+
+    class Broken:
+        def unpersist(self):
+            raise RuntimeError("unpersist failed")
+
+    _cache._LAST["swap_cache_test"] = Broken()
+    try:
+        with pytest.raises(RuntimeError, match="unpersist failed"):
+            _cache.swap_cache("swap_cache_test", spark.range(3))
+    finally:
+        _cache.release("swap_cache_test")
+
+
 def test_canonical_url_normalization_cases(spark):
     """The canonical-URL spec: scheme/'www.'/fragment/tracking-params/
     trailing-slash collapse; surviving params sort; case folds."""
@@ -534,6 +553,7 @@ def test_mixture_resample_scales_to_thousands_of_sources(spark):
     out = corpus_op.mixture_resample(docs, weights)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan  # no shuffle
     assert "CASE WHEN (source" not in plan
     rows = out.collect()
     per = {}

@@ -1,6 +1,7 @@
 """Table format + checkpointed pipeline: snapshots, time travel, resume
 equivalence (FIXTURES.md T7)."""
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
@@ -93,8 +94,6 @@ def test_geo_pipeline_end_to_end_resume_identical(spark, tmp_path):
     assert sorted(joined) == direct
 
     # extract stage is cell-prefix partitioned on disk (partition pruning)
-    import os
-
     mext = tf.read_manifest(f"{base}/geo/extract")
     snap_dir = os.path.join(f"{base}/geo/extract", mext["base"])
     parts = [d for d in os.listdir(snap_dir) if d.startswith("cell_p=")]
@@ -102,6 +101,52 @@ def test_geo_pipeline_end_to_end_resume_identical(spark, tmp_path):
     # ...and the partition column survives a time-travel read (basePath)
     tt = tf.read_table(spark, f"{base}/geo/extract", snapshot=mext["snapshot_id"])
     assert "cell_p" in tt.columns
+
+
+def _parquet_files(d):
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+def test_extract_snapshot_one_file_per_partition_value(spark, tmp_path):
+    """Partitioned snapshot writes are hash-distributed by the partition
+    column first: every cell_p= directory of the extract snapshot holds
+    exactly one parquet file, with the rows and partition values of the
+    stage's own DataFrame, however many tasks produce those rows."""
+    pages = geo_run.stage_pages(SF_DIR)
+    stages = [
+        Stage("pages", lambda s, i: pages.fn(s, i).repartition(4)),
+        geo_run.stage_extract(),
+    ]
+    out = Pipeline("one", str(tmp_path)).run(spark, stages)
+    p = str(tmp_path / "one" / "extract")
+    snap_dir = os.path.join(p, tf.read_manifest(p)["base"])
+    parts = [d for d in os.listdir(snap_dir) if d.startswith("cell_p=")]
+    assert len(parts) > 1
+    for d in parts:
+        assert len(_parquet_files(os.path.join(snap_dir, d))) == 1, d
+    direct = stages[1].fn(spark, {"pages": out["pages"]})
+    assert _sorted(out["extract"]) == _sorted(direct.select(*out["extract"].columns))
+    want = {f"cell_p={r.cell_p}" for r in direct.select("cell_p").distinct().collect()}
+    assert set(parts) == want
+
+
+def test_read_table_schema_from_manifest_matches_inferred(spark, tmp_path):
+    """read_table takes its schema from the manifest instead of inferring
+    it from parquet footers; column order and types (the cell_p partition
+    column included) equal the inferred read's, for the current snapshot
+    and for a time-travel read."""
+    out = Pipeline("sch", str(tmp_path)).run(spark, geo_run.geo_stages(SF_DIR)[:2])
+    p = str(tmp_path / "sch" / "extract")
+    tf.write_table(out["extract"].limit(50), p, partition_by=["cell_p"])
+    for snap in (None, 1):
+        m = tf.read_manifest(p, snap)
+        base = os.path.join(p, m["base"])
+        files = [os.path.join(p, f["path"]) for f in m["files"]]
+        inferred = spark.read.option("basePath", base).parquet(*files)
+        got = tf.read_table(spark, p, snapshot=snap)
+        assert got.schema == inferred.schema
+        assert got.columns[-1] == "cell_p"
+        assert got.count() == m["total_rows"]
 
 def test_metrics_record_input_rows_lineage(spark, tmp_path):
     """north_rule lineage: each stage's recorded input_rows equals its
@@ -137,8 +182,6 @@ def test_metrics_record_input_rows_lineage(spark, tmp_path):
 def test_expire_snapshots(spark, tmp_path):
     """Iceberg-style maintenance: old snapshots' data+metadata go away, the
     kept ones stay fully readable, the current pointer is untouched."""
-    import os
-
     p = str(tmp_path / "t")
     for n in (10, 20, 30):
         tf.write_table(spark.range(n).selectExpr("id", "id % 3 AS k"), p, partition_by=["k"])

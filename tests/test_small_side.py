@@ -78,3 +78,51 @@ def test_projected_windows_oversized_grid_fails_before_any_job(spark, monkeypatc
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup("small_side_guard")) == []
+
+
+def test_frame_is_a_local_relation_with_create_dataframe_rows(spark):
+    """_small.frame plans a JVM LocalRelation (no Python RDD behind it) and
+    holds exactly the rows createDataFrame(rows, ddl) holds, for every
+    column type the driver-built tables use, nulls, dict rows and no rows."""
+    ddl = (
+        "a long, b int, c double, d string, e binary, "
+        "f array<double>, g array<array<double>>"
+    )
+    rows = [
+        (1, 2, 0.5, "x", b"\x00\xff", [1.0, 2.5], [[1.0], [2.0, 3.0]]),
+        (None, None, None, None, None, None, None),
+        (-(2**62), -7, -1e300, "", b"", [], [[]]),
+        (3, 4, 1.25, "é", b"ab", [None, 1.0], [None, [None]]),
+    ]
+    names = [f.split()[0] for f in ddl.split(", ")]
+    for data in (rows, [dict(zip(names, r)) for r in rows], []):
+        df = _small.frame(spark, data, ddl, "t", "n/a")
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+        want = spark.createDataFrame(rows if data else [], ddl)
+        assert df.schema == want.schema
+        assert df.collect() == want.collect()
+
+
+def test_no_python_rdd_local_tables_outside_small():
+    """Tooling guard: the operator and plan layers build driver-side tables
+    only through _small.frame, so a createDataFrame over a Python list (a
+    Python-RDD scan on every read) cannot creep back in."""
+    import ast
+    import pathlib
+
+    import geoproc_spark
+
+    root = pathlib.Path(geoproc_spark.__file__).parent
+    offenders = []
+    for sub in ("operators", "plans"):
+        for path in sorted((root / sub).glob("*.py")):
+            if path.name == "_small.py":
+                continue
+            for node in ast.walk(ast.parse(path.read_text())):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                ):
+                    offenders.append(f"{sub}/{path.name}:{node.lineno}")
+    assert offenders == []
