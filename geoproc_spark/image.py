@@ -34,6 +34,10 @@ from .operators import algebra as A
 
 TILE_KEY = A.TILE_KEY
 
+# COG payloads held on the driver at once while export_geotiff_cog streams
+# its tiles (one range partition): 64 tiles ≈ 32 MB at 256 px.
+STREAM_PARTITION_TILES = 64
+
 
 class Image:
     """A lazy multi-band tiled image: tile-row DataFrame + driver-side schema.
@@ -763,68 +767,6 @@ class Image:
             )
         return spec
 
-    def export_geotiff(
-        self,
-        path: str,
-        scale: float,
-        crs: str = "epsg:4326",
-        bounds: tuple[float, float, float, float] | None = None,
-        in_crs: str = "epsg:4326",
-        window_size: int = 256,
-        max_pixels: int = 1 << 26,
-    ) -> dict:
-        """Write an ACTUAL .tif — the reference's literal documented
-        workflow `img.export("out.tif", scale=10, crs="epsg:32630")`
-        (server/image.py:162-241), via sources/geotiff.write_geotiff
-        (pure-numpy baseline GeoTIFF, no GDAL). The resample runs
-        DISTRIBUTED (projected_windows). Up to `max_pixels` (default 64M px
-        ≈ 512 MB float64/band) the single-file assembly collects windows to
-        the driver and writes the byte-stable uncompressed-strip layout;
-        BEYOND the bound it no longer refuses (VERDICT r04 #5) — it
-        dispatches to `export_geotiff_cog`, which encodes deflate TIFF
-        tiles inside executor tasks and streams them into one tiled COG
-        with O(windows-per-partition) driver memory.
-
-        Nodata pixels are written as NaN with a GDAL_NODATA tag, so
-        read_geotiff reconstructs the same mask. Returns the grid spec."""
-        import math as _math
-
-        import numpy as _np
-
-        from .sources import geotiff as _gt
-
-        wdf, spec = self.projected_windows(
-            scale, crs=crs, bounds=bounds, in_crs=in_crs, window_size=window_size
-        )
-        w, h, nb = spec["width"], spec["height"], self.n_bands
-        if w * h > max_pixels:
-            # past the driver-assembly bound the SCALE path takes over
-            # automatically (VERDICT r04 #5): executor-side tile encode +
-            # an O(1)-memory streaming concat into one tiled deflate COG
-            return self.export_geotiff_cog(
-                path,
-                scale,
-                crs=crs,
-                bounds=bounds,
-                in_crs=in_crs,
-                window_size=window_size,
-            )
-        data = _np.zeros((nb, h, w), dtype=_np.float64)
-        valid = _np.zeros((h, w), dtype=bool)
-        for row in wdf.toLocalIterator():
-            ww, wh = row["win_w"], row["win_h"]
-            sl = (slice(row["row_off"], row["row_off"] + wh),
-                  slice(row["col_off"], row["col_off"] + ww))
-            for b in range(nb):
-                data[b][sl] = _np.asarray(row["data"][b]).reshape(wh, ww)
-            valid[sl] = _np.asarray(row["mask"]).reshape(wh, ww) == 255
-        data[:, ~valid] = _math.nan
-        ob = spec["out_bounds"]
-        raw = _gt.write_geotiff(data, ob, crs=spec["crs"], nodata=_math.nan)
-        with open(path, "wb") as fh:
-            fh.write(raw)
-        return spec
-
     def export_geotiff_cog(
         self,
         path: str,
@@ -833,9 +775,10 @@ class Image:
         bounds: tuple[float, float, float, float] | None = None,
         in_crs: str = "epsg:4326",
         window_size: int = 256,
-        tiles_per_stream_partition: int = 64,
     ) -> dict:
-        """SCALE-path single-file export: one tiled deflate GeoTIFF (the
+        """Write an ACTUAL .tif — the reference's literal documented
+        workflow `img.export("out.tif", scale=10, crs="epsg:32630")`
+        (server/image.py:162-241), as one tiled deflate GeoTIFF (the
         reference's COG write profile, server/image.py:210-219) of any
         size up to the classic-TIFF 4 GiB offset limit, produced
         DISTRIBUTED.
@@ -850,8 +793,9 @@ class Image:
         assemble the header/IFD, and stream the payloads in tile order
         through toLocalIterator onto the end of the file. Peak driver
         memory is one range partition of payloads
-        (`tiles_per_stream_partition` tiles ≈ 32 MB at 256px), never the
-        raster.
+        (STREAM_PARTITION_TILES tiles), never the raster. Nodata pixels
+        are written as NaN with a GDAL_NODATA tag, so read_geotiff
+        reconstructs the same mask.
 
         Returns the grid spec. The output is readable by read_geotiff and
         by any TIFF reader that handles tiled+deflate (GDAL's default)."""
@@ -934,8 +878,8 @@ class Image:
             # offset, so a post-hoc check never ran for real >4 GiB
             # exports) — same chunks, same streaming write either way
             prefix, data_off, _big = _gt.assemble_tiff_auto(entries, counts)
-            n_parts = max(1, (n_tiles + tiles_per_stream_partition - 1)
-                          // tiles_per_stream_partition)
+            n_parts = max(1, (n_tiles + STREAM_PARTITION_TILES - 1)
+                          // STREAM_PARTITION_TILES)
             ordered = chunks.repartitionByRange(
                 n_parts, "tile_idx"
             ).sortWithinPartitions("tile_idx")

@@ -2,11 +2,12 @@
 
 Three operators collect a side that is small by construction (a polygon
 layer, a kNN query table, an export window grid), expand it in numpy on
-the driver and ship the result back as a local relation: spatial_join's
-covering cells, knn_join's ring and cover cells, projected_windows' window
-and window->tile tables. A broadcast exchange would collect that side to
-the driver anyway, so there is no distributed fallback; instead every such
-prep goes through this module and fails loudly above one bound.
+the driver and ship the result back: spatial_join's cell index as a
+broadcast variable, knn_join's ring and cover cells and projected_windows'
+window and window->tile tables as local relations. A broadcast would
+collect that side to the driver anyway, so there is no distributed
+fallback; instead every such prep goes through this module and fails
+loudly above one bound.
 
 `frame` builds every driver-side table of the operator and plan layers as
 ONE Arrow table: a JVM `LocalRelation` (`LocalTableScan`), where

@@ -7,11 +7,10 @@ portable md5-derived hashes, so a SQL oracle reproduces them bit-for-bit.
 Scale notes:
 - exact dedup: one hash aggregate on md5(text) — map-side partial combine,
   no driver involvement.
-- MinHash + SimHash signatures: ZERO-shuffle per-row higher-order
-  expressions (shingle-hash array -> array_min/aggregate folds per
-  permutation/bit, all inside one whole-stage-codegen projection). At
-  10^12 docs the signature pass is a pure map — it scales with scan
-  bandwidth and nothing else.
+- MinHash + SimHash signatures: ZERO-shuffle Arrow+numpy kernels
+  (functions/textkern), one pass per Arrow batch. At 10^12 docs the
+  signature pass is a pure map — it scales with scan bandwidth and
+  nothing else. Their JVM-fold twins live in oracle/signature_hof.
 - LSH bucket join: the only shuffle; self-equi-join on (band_id, band_key).
   Hot buckets (boilerplate text) are exactly the skew case — AQE skew-join
   splits them, and max_bucket_size drops degenerate buckets from pairing.
@@ -77,57 +76,13 @@ def minhash_signatures(docs: DataFrame, perms: list[tuple[int, int, int]]) -> Da
     kernel (functions/textkern), ZERO shuffles, ONE scan.
 
     r6 optimization: the previous JVM aggregate()/zip_with fold
-    (`minhash_signatures_hof` below) runs INTERPRETED — Spark does not
-    codegen HOF lambdas — at 16 lambda calls per shingle; profiled 38 s at
-    sf1.0 vs ~2 s for the numpy kernel doing identical arithmetic
-    (bit-parity pinned by test_textkern_parity + the unchanged oracles)."""
+    (oracle/signature_hof.minhash_signatures_hof) runs INTERPRETED — Spark
+    does not codegen HOF lambdas — at 16 lambda calls per shingle; profiled
+    38 s at sf1.0 vs ~2 s for the numpy kernel doing identical arithmetic
+    (bit-parity pinned by tests/test_textkern.py + the unchanged oracles)."""
     from ..functions import textkern as TK
 
     return TK.minhash_signatures(docs, perms)
-
-
-def minhash_signatures_hof(docs: DataFrame, perms: list[tuple[int, int, int]]) -> DataFrame:
-    """JVM-expression twin of minhash_signatures (kept as the zero-Python
-    reference implementation; parity-tested against the kernel).
-
-    ZERO shuffles, ONE pass (VERDICT r03): a single aggregate() fold
-    carries all n minima in one array accumulator — per shingle hash x,
-    zip_with pairs each running minimum with its (a, b) permutation params
-    (a constant-folded literal struct array) and takes
-    least(m, (a*x + b) % P). Replaces n separate
-    array_min(transform(...)) folds (n passes over the shingle array per
-    row — the same single-accumulator trick that cut SimHash 40%).
-    a*x stays in int64: a < 2^31, x < 2^32 -> a*x < 2^63 (same bound the
-    DuckDB oracle's arithmetic relies on).
-
-    The per-perm columns unpack from the fold in a SECOND projection;
-    CollapseProject leaves it split because the fold alias is non-cheap and
-    referenced n times (inlining would re-run the fold per column)."""
-    n = len(perms)
-    pstructs = ", ".join(f"named_struct('a', {a}L, 'b', {b}L)" for _, a, b in perms)
-    fold = (
-        f"aggregate(h, array_repeat({TX.H32_P}L, {n}), "
-        f"(acc, x) -> zip_with(acc, array({pstructs}), "
-        f"(m, p) -> least(m, (p.a * x + p.b) % {TX.H32_P}L)))"
-    )
-    # unpack by LIST POSITION (enumerate), not by pid value: the fold's
-    # accumulator is ordered by the perms list, so a caller passing
-    # non-sequential pids would otherwise read the wrong (or a missing)
-    # slot — pid only names the output column (ADVICE r04)
-    cols = [
-        f"element_at(mins, {i + 1}) AS mh{pid}"
-        for i, (pid, _, _) in enumerate(perms)
-    ]
-    return (
-        docs.selectExpr("doc_id", f"{_shingle_h32_expr()} AS h")
-        # docs too short to shingle have NO signature (the fold over an
-        # empty array returns the all-P init; the exploded/oracle form
-        # produces no rows for them) — drop, or every short doc would
-        # share one degenerate band key
-        .filter("size(h) > 0")
-        .selectExpr("doc_id", f"{fold} AS mins")
-        .selectExpr("doc_id", *cols)
-    )
 
 
 def lsh_bands(
@@ -200,44 +155,13 @@ def simhash(docs: DataFrame, n_bits: int = 60) -> DataFrame:
     (bit_j(h) ? +1 : -1) is positive. 60 bits (the portable hash width).
     Arrow+numpy kernel (functions/textkern) — ZERO shuffles, ONE scan.
 
-    r6 optimization: the JVM fold (`simhash_hof` below) costs 60
-    interpreted lambda calls per shingle (HOFs are never codegen'd) —
+    r6 optimization: the JVM fold (oracle/signature_hof.simhash_hof) costs
+    60 interpreted lambda calls per shingle (HOFs are never codegen'd) —
     profiled 38.6 s at sf1.0 vs 4.3 s for the identical-value numpy kernel
-    (parity pinned by test_textkern_parity + the unchanged oracle)."""
+    (parity pinned by tests/test_textkern.py + the unchanged oracle)."""
     from ..functions import textkern as TK
 
     return TK.simhash(docs, n_bits=n_bits)
-
-
-def simhash_hof(docs: DataFrame, n_bits: int = 60) -> DataFrame:
-    """JVM-expression twin of simhash (zero-Python reference; parity-tested
-    against the kernel).
-
-    ZERO shuffles, ONE pass (VERDICT r02): a single aggregate() fold
-    carries all `n_bits` counters as one array accumulator (zip_with per
-    shingle), then one zip_with packs the sign bits — inside one codegen'd
-    projection, no explode, no groupBy. Replaces the previous n_bits
-    separate folds (n_bits passes over the shingle array; profiled ~1.5x
-    faster at equal partitioning and identical output)."""
-    sh = TX.shingles_sql_spark("split(text, ' ')", 3)
-    hashes = f"transform({sh}, g -> CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT))"
-    counters = (
-        f"aggregate(h, array_repeat(0L, {n_bits}), "
-        f"(acc, x) -> zip_with(acc, sequence(0, {n_bits - 1}), "
-        f"(c, i) -> c + CASE WHEN (x >> i) % 2 = 1 THEN 1L ELSE -1L END))"
-    )
-    pack = (
-        f"aggregate(zip_with({counters}, sequence(0, {n_bits - 1}), "
-        f"(c, i) -> CASE WHEN c > 0 THEN shiftleft(1L, i) ELSE 0L END), "
-        f"0L, (a, y) -> a + y)"
-    )
-    return (
-        docs.selectExpr("doc_id", f"{hashes} AS h")
-        # no shingles -> no signature (matches the exploded/oracle form,
-        # which emits no rows for docs shorter than the shingle width)
-        .filter("size(h) > 0")
-        .selectExpr("doc_id", f"{pack} AS simhash")
-    )
 
 
 def hamming_distance(a, b):

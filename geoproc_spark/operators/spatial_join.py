@@ -1,27 +1,29 @@
 """Point-in-polygon spatial join — the engine's headline operator.
 
 Filter-refine, Raptor-style (PAPERS.md): polygons get a covering-cell set at
-a fixed zoom; pages get their point cell at the same zoom; an equi-join on
-cell produces candidates; an exact vectorized ray-cast refines. Maps the
+a fixed zoom; pages get their point cell at the same zoom; matching cells
+produce candidates; an exact vectorized ray-cast refines. Maps the
 reference's only join — the spatially-aligned zip join of
 /root/reference/geoproc/server/image.py:295-301, where both children are
-evaluated for the same window key — onto a Spark equi-join on cell key.
+evaluated for the same window key — onto cell-keyed candidate generation.
 
 Scale notes (100 TB / 1000 executors):
-- The big (pages) side is hash-partitioned on cell by the join shuffle; with
-  a cell-prefix-partitioned table layout the shuffle is avoided entirely
-  (storage-partitioned join). The polygon side is exploded x |cover| only.
 - By default (`broadcast_poly=True`) the polygon layer is collected through
-  operators._small and its covering cells are broadcast; continent-scale
-  layers pass False and shuffle both sides on cell. `broadcast_spatial_join`
-  skips the shuffle AND the explode by probing a broadcast bbox index
-  inside `mapInPandas`.
-- Hot cells (city-center skew) are handled by explicit salting
-  (`salt_buckets`) plus AQE skew-join as backstop. Salting preserves
-  semantics: the page side picks ONE salt per row, the polygon side is
-  replicated across all salts, so no duplicates are produced.
+  operators._small and packed into a CellBboxIndex (sorted cell-keyed
+  ranges); the index is broadcast and every Arrow batch of points probes
+  it and refines inside ONE mapInPandas pass — no join, no shuffle, one
+  Python boundary per batch.
+- Continent-scale layers pass `broadcast_poly=False`: the covering cells
+  are exploded and equi-joined on cell, hash-partitioning both sides
+  (with a cell-prefix-partitioned layout, `bucketed_spatial_join`, the
+  pages side never moves).
+- Hot cells (city-center skew) on the shuffle join are handled by explicit
+  salting (`salt_buckets`) plus AQE skew-join as backstop. Salting
+  preserves semantics: the page side picks ONE salt per row, the polygon
+  side is replicated across all salts, so no duplicates are produced. The
+  broadcast probe has no shuffle, so salting it is an error.
 
-Both paths produce identical (page_id, feature_id) sets; strict-interior
+All paths produce identical (page_id, feature_id) sets; strict-interior
 semantics (boundary points excluded — fixtures keep integer points off the
 half-integer polygon edges, synth.py).
 """
@@ -96,30 +98,6 @@ def _pip_udf(lon: pd.Series, lat: pd.Series, ring: pd.Series, fid: pd.Series) ->
     )
 
 
-def _pip_udf_broadcast(rings_bc):
-    """PIP refine over (lon, lat, feature_id) ONLY — ring geometry comes
-    from a broadcast {feature_id: flat ring ndarray} looked up inside the
-    worker (r6, guide §4: pass only the columns the function needs). The
-    old per-row `ring` column duplicated the polygon into EVERY candidate
-    row crossing the Arrow boundary — ~160 B x 12M candidates at sf1.0,
-    profiled at half the refine stage's wall."""
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series, fid: pd.Series) -> pd.Series:
-        rings = rings_bc.value
-        f = fid.to_numpy(dtype=np.int64)
-        return pd.Series(
-            pip_refine_np(
-                lon.to_numpy(dtype=np.float64),
-                lat.to_numpy(dtype=np.float64),
-                f,
-                lambda i: rings[f[i]],
-            )
-        )
-
-    return pip
-
-
 # ------------------------------------------------------------- polygon layer
 def polygons_df(spark: SparkSession) -> DataFrame:
     """The fixture polygon layer as general closed rings (FIXTURES.md T2)."""
@@ -179,68 +157,39 @@ def spatial_join(
     lon_col: str = "lon",
     broadcast_poly: bool = True,
 ) -> DataFrame:
-    """Covering-cell equi-join + exact PIP refine (the scale path).
+    """Covering-cell filter + exact PIP refine (the scale path).
 
     points: any DataFrame with (lat_col, lon_col) in degrees + id columns.
     Returns points' columns + feature_id, one row per (point, containing
     polygon). Rows with null coordinates are dropped (no geo -> no match).
 
-    broadcast_poly: the exploded polygon side goes through a pandas UDF, so
-    Catalyst has no size estimate and can pick the wrong build side (it
-    happily broadcast the *points* once in profiling). Polygon layers are
-    almost always the small side — hint it explicitly; pass False for
-    continent-scale layers, where the equi-join shuffles both sides on cell.
-    With True the layer is collected to the driver (operators._small): more
-    than _small.MAX_ROWS polygons or covering cells raise ValueError.
+    broadcast_poly=True (polygon layers are almost always the small side):
+    the layer is collected to the driver (operators._small), packed into a
+    CellBboxIndex and broadcast; each Arrow batch of points probes it and
+    refines in ONE mapInPandas pass — the points are neither shuffled nor
+    joined. More than _small.MAX_ROWS polygons or (cell, polygon) pairs
+    raise ValueError. Pass False for continent-scale layers: the covering
+    cells are exploded and equi-joined on cell, shuffling both sides.
+
+    salt_buckets (shuffle join only, so ValueError with broadcast_poly):
+    the point side picks one salt per row, the polygon side is replicated
+    across all salts, so hot cells spread without duplicate rows.
     """
+    if broadcast_poly and salt_buckets and salt_buckets > 1:
+        raise ValueError(
+            "salt_buckets spreads the shuffle join's hot cells; the broadcast "
+            "probe has no shuffle to salt — pass broadcast_poly=False to salt"
+        )
     _check_reserved(points)
     pts = points.filter(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
-    pts = pts.withColumn("_cell", cells.cell_id_col(F.col(lat_col), F.col(lon_col), zoom))
-
-    rings_bc = None
     if broadcast_poly:
-        # the caller declared the layer broadcast-sized, so its raw rows
-        # fit on the driver: ONE collect feeds (a) a broadcast
-        # {feature_id: ring} dict so candidate rows stay ring-free (r6 —
-        # see _pip_udf_broadcast) and (b) the covering-cell table, computed
-        # driver-side in numpy and shipped as a LocalTableScan — the old
-        # pandas-UDF covering pass cost two extra Spark jobs of pure
-        # latency per join call (profiled ~1.5 s fixed in the scaling
-        # harness's pip stage, the non-scaling part of its wall)
-        spark = points.sparkSession
-        shuffle = "pass broadcast_poly=False to shuffle-join the polygon layer"
-        rows = _small.collect(
-            poly.select("feature_id", "ring", "minx", "miny", "maxx", "maxy"),
-            "spatial_join polygon layer", shuffle,
-        )
-        rings_bc = spark.sparkContext.broadcast(
-            {r["feature_id"]: np.asarray(r["ring"], dtype=np.float64) for r in rows}
-        )
-        covers = cells.covering_cells_np(
-            np.array([r["minx"] for r in rows]),
-            np.array([r["miny"] for r in rows]),
-            np.array([r["maxx"] for r in rows]),
-            np.array([r["maxy"] for r in rows]),
-            zoom,
-        )
-        pairs = [
-            (int(r["feature_id"]), int(c))
-            for r, cov in zip(rows, covers)
-            for c in cov
-        ]
-        poly_cells = F.broadcast(
-            _small.frame(
-                spark, pairs, "feature_id long, _cell long",
-                "spatial_join covering cells", shuffle,
-            )
-        )
-    else:
-        poly_cells = with_covering_cells(poly, zoom).select(
-            "feature_id", "ring", F.explode("covering_cells").alias("_cell")
-        )
+        return _probe_join(pts, poly, zoom, lat_col, lon_col)
 
+    pts = pts.withColumn("_cell", cells.cell_id_col(F.col(lat_col), F.col(lon_col), zoom))
+    poly_cells = with_covering_cells(poly, zoom).select(
+        "feature_id", "ring", F.explode("covering_cells").alias("_cell")
+    )
     if salt_buckets and salt_buckets > 1:
-        # Page side picks one salt; polygon side replicated over all salts.
         # Salt on a hash of ALL point columns: hashing only the first column
         # silently degrades to a constant salt when a caller's leading column
         # is low-cardinality (e.g. a lat passed first).
@@ -254,16 +203,9 @@ def spatial_join(
     else:
         joined = pts.join(poly_cells, "_cell", "inner")
 
-    if rings_bc is not None:
-        refined = joined.filter(
-            _pip_udf_broadcast(rings_bc)(
-                F.col(lon_col), F.col(lat_col), F.col("feature_id")
-            )
-        )
-    else:
-        refined = joined.filter(
-            _pip_udf(F.col(lon_col), F.col(lat_col), F.col("ring"), F.col("feature_id"))
-        )
+    refined = joined.filter(
+        _pip_udf(F.col(lon_col), F.col(lat_col), F.col("ring"), F.col("feature_id"))
+    )
     return refined.drop("_cell", "_salt", "ring")
 
 
@@ -381,38 +323,40 @@ class CellBboxIndex:
         return pi[keep], fi[keep]
 
 
-def broadcast_spatial_join(
-    points: DataFrame,
-    poly_rows: list[dict],
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    zoom: int = DEFAULT_JOIN_ZOOM,
+def _probe_join(
+    pts: DataFrame, poly: DataFrame, zoom: int, lat_col: str, lon_col: str
 ) -> DataFrame:
-    """Broadcast cell-index join (small-to-medium polygon layers; no shuffle).
-
-    `poly_rows` is the collected polygon layer (feature_id, ring, bbox). A
-    packed CellBboxIndex is broadcast; each Arrow batch of points probes it
-    via binary search (candidate pairs), then the exact ray-cast refines.
-    The distributed analog of the reference evaluating a constant image per
-    window (/root/reference/geoproc/server/image.py:120-139): the small side
-    rides along to every partition.
+    """spatial_join's broadcast path: the collected layer is packed into a
+    CellBboxIndex and broadcast; each Arrow batch of (non-null) points
+    probes it via binary search (candidate pairs), then the exact ray-cast
+    refines. The distributed analog of the reference evaluating a constant
+    image per window (/root/reference/geoproc/server/image.py:120-139):
+    the small side rides along to every partition.
     """
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(CellBboxIndex(poly_rows, zoom))
+    instead = "pass broadcast_poly=False to shuffle-join the polygon layer"
+    rows = _small.collect(
+        poly.select("feature_id", "ring", "minx", "miny", "maxx", "maxy"),
+        "spatial_join polygon layer", instead,
+    )
+    if not rows:  # an empty layer matches nothing
+        return pts.withColumn("feature_id", F.lit(None).cast("long")).filter(F.lit(False))
+    index = CellBboxIndex(rows, zoom)
+    _small.check(len(index.flat_poly), "spatial_join covering cells", instead)
+    bc = pts.sparkSession.sparkContext.broadcast(index)
 
     out_schema = T.StructType(
-        points.schema.fields + [T.StructField("feature_id", T.LongType())]
+        pts.schema.fields + [T.StructField("feature_id", T.LongType())]
     )
-    pt_cols = points.columns
+    pt_cols = pts.columns
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         index = bc.value
         for pdf in batches:
             lon = pdf[lon_col].to_numpy(dtype=np.float64)
             lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            # non-null NaN coordinates pass the isNotNull filter below but
-            # must never reach the float->int64 cell cast (UB in numpy):
-            # park them on an off-grid sentinel the index cannot match
+            # non-null NaN coordinates pass the isNotNull filter but must
+            # never reach the float->int64 cell cast (UB in numpy): park
+            # them at (0, 0) and drop their candidates
             bad = np.isnan(lon) | np.isnan(lat)
             if bad.any():
                 lon = np.where(bad, 0.0, lon)
@@ -430,6 +374,4 @@ def broadcast_spatial_join(
             out["feature_id"] = index.fids[fi]
             yield out
 
-    # Null coords never match: filter early so the cell probe sees no NaNs
-    pts = points.filter(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
     return pts.mapInPandas(probe, out_schema)

@@ -171,7 +171,7 @@ WHERE p.has_geo = 1
 
 @query("geo_pip_join", _PIP_ORACLE)
 def geo_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Covering-cell equi-join + exact PIP refine (the scale path)."""
+    """Covering-cell filter + exact PIP refine (the scale path)."""
     pts = _pages_with_coords(spark, sf_dir)
     poly = sj.polygons_df(spark)
     return sj.spatial_join(pts.select("page_id", "lat", "lon"), poly).select(
@@ -181,22 +181,24 @@ def geo_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("geo_pip_join_salted", _PIP_ORACLE, driver=False)
 def geo_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join with explicit 8-way salting — must be semantics-preserving.
+    """The shuffle join with 8-way salting — must be semantics-preserving.
     driver=False: shares _PIP_ORACLE with geo_pip_join; pytest keeps it
     oracle-checked without spending a driver slot (VERDICT r04 #4)."""
     pts = _pages_with_coords(spark, sf_dir)
     poly = sj.polygons_df(spark)
     return sj.spatial_join(
-        pts.select("page_id", "lat", "lon"), poly, salt_buckets=8
+        pts.select("page_id", "lat", "lon"), poly, salt_buckets=8, broadcast_poly=False
     ).select("page_id", "feature_id")
 
 
 @query("geo_pip_join_broadcast", _PIP_ORACLE)
 def geo_pip_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast bbox-index variant (no shuffle; small polygon layers)."""
+    """The broadcast cell-index probe, requested explicitly (no join, no
+    shuffle; small polygon layers)."""
     pts = _pages_with_coords(spark, sf_dir)
-    return sj.broadcast_spatial_join(
-        pts.select("page_id", "lat", "lon"), synth.polygon_rings()
+    poly = sj.polygons_df(spark)
+    return sj.spatial_join(
+        pts.select("page_id", "lat", "lon"), poly, broadcast_poly=True
     ).select("page_id", "feature_id")
 
 

@@ -94,98 +94,71 @@ def test_read_chunky_planar_config():
     assert np.array_equal(g["data"], data)
 
 
-def test_export_geotiff_roundtrip(spark, tmp_path):
-    """The reference's literal workflow: export an actual .tif (UTM CRS),
-    read it back with the independent reader, and get the same pixels and
-    mask the distributed window table carries."""
+def _utm_fixture_export(spark, path):
+    """Export the tile fixture onto a UTM 30N grid as one .tif at `path`
+    and assemble the same window table on the driver: returns the image,
+    the grid spec, the window pixels (NaN where masked) and the valid mask."""
     from geoproc_spark import synth
 
     img = Image.from_df(
         synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX
     )
-    out = tmp_path / "out.tif"
     bounds = (-6.0, 40.0, -0.5, 50.0)
-    spec = img.export_geotiff(
-        str(out), scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
+    spec = img.export_geotiff_cog(
+        path, scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
     )
-    g = gt.read_geotiff(out.read_bytes())
-    assert g["crs"] == "epsg:32630"
-    assert g["data"].shape == (2, spec["height"], spec["width"])
-    assert np.allclose(g["bounds"], spec["out_bounds"])
-
-    # reassemble the distributed window table driver-side and compare
     wdf, _ = img.projected_windows(
         scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
     )
-    want = np.zeros((2, spec["height"], spec["width"]))
+    want = np.full((2, spec["height"], spec["width"]), np.nan)
     vmask = np.zeros((spec["height"], spec["width"]), dtype=bool)
     for r in wdf.collect():
         sl = (slice(r["row_off"], r["row_off"] + r["win_h"]),
               slice(r["col_off"], r["col_off"] + r["win_w"]))
+        valid = np.asarray(r["mask"]).reshape(r["win_h"], r["win_w"]) == 255
         for b in range(2):
-            want[b][sl] = np.asarray(r["data"][b]).reshape(r["win_h"], r["win_w"])
-        vmask[sl] = np.asarray(r["mask"]).reshape(r["win_h"], r["win_w"]) == 255
+            px = np.asarray(r["data"][b]).reshape(r["win_h"], r["win_w"])
+            want[b][sl] = np.where(valid, px, np.nan)
+        vmask[sl] = valid
+    return img, spec, want, vmask
+
+
+def test_export_geotiff_roundtrip(spark, tmp_path):
+    """The reference's literal workflow: export an actual .tif (UTM CRS),
+    read it back with the independent reader, and get the same pixels and
+    mask the distributed window table carries."""
+    out = tmp_path / "out.tif"
+    _, spec, want, vmask = _utm_fixture_export(spark, str(out))
+    g = gt.read_geotiff(out.read_bytes())
+    assert g["crs"] == "epsg:32630"
+    assert g["data"].shape == (2, spec["height"], spec["width"])
+    assert np.allclose(g["bounds"], spec["out_bounds"])
     assert vmask.any() and not vmask.all()  # fixture has both valid + nodata
     assert (g["mask"] == np.where(vmask, 255, 0)).all()
     assert np.array_equal(g["data"][:, vmask], want[:, vmask])
     assert np.isnan(g["data"][:, ~vmask]).all()
 
-    # past max_pixels the export no longer refuses: it dispatches to the
-    # distributed COG path (tested in depth below)
-    spec2 = img.export_geotiff(
-        str(tmp_path / "big.tif"), scale=10000.0, crs="epsg:32630",
-        bounds=bounds, window_size=32, max_pixels=16,
-    )
-    g2 = gt.read_geotiff((tmp_path / "big.tif").read_bytes())
-    assert g2["data"].shape == (2, spec2["height"], spec2["width"])
 
-
-def test_export_geotiff_cog_distributed_matches_driver_path(spark, tmp_path):
-    """VERDICT r04 #5: the scale-path single-file export — executor-side
-    tile encode + streaming concat — must be BYTE-IDENTICAL to the
-    driver-assembled writer at the same profile (deflate, tiled
-    window_size), and read back to the same pixels/mask as the
-    uncompressed-strip export."""
+def test_export_geotiff_cog_distributed_matches_driver_path(spark, tmp_path, monkeypatch):
+    """VERDICT r04 #5: the single-file export — executor-side tile encode +
+    streaming concat — must be BYTE-IDENTICAL to write_geotiff at the same
+    profile (deflate, tiled window_size) over the window table assembled
+    on the driver."""
     import math
 
-    from geoproc_spark import synth
+    from geoproc_spark import image as image_mod
 
-    img = Image.from_df(
-        synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX
-    )
-    bounds = (-6.0, 40.0, -0.5, 50.0)
     cog = tmp_path / "cog.tif"
-    spec = img.export_geotiff_cog(
-        str(cog), scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32,
-        tiles_per_stream_partition=3,  # force multiple stream partitions
-    )
-    raw = cog.read_bytes()
-    g = gt.read_geotiff(raw)
-    assert g["crs"] == "epsg:32630"
-    assert g["data"].shape == (2, spec["height"], spec["width"])
-
-    # driver-assembled twin at the SAME profile -> byte-identical file
-    strip = tmp_path / "strip.tif"
-    img.export_geotiff(
-        str(strip), scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
-    )
-    gs = gt.read_geotiff(strip.read_bytes())
-    want = gt.write_geotiff(
-        gs["data"], spec["out_bounds"], crs=spec["crs"], nodata=math.nan,
+    # force multiple stream partitions
+    monkeypatch.setattr(image_mod, "STREAM_PARTITION_TILES", 3)
+    img, spec, want, _ = _utm_fixture_export(spark, str(cog))
+    assert cog.read_bytes() == gt.write_geotiff(
+        want, spec["out_bounds"], crs=spec["crs"], nodata=math.nan,
         compression="deflate", tile=(32, 32),
     )
-    assert raw == want
-
-    # and pixel/mask parity with the strip export
-    vm = gs["mask"] == 255
-    assert (g["mask"] == gs["mask"]).all()
-    assert (g["data"][:, vm] == gs["data"][:, vm]).all()
-    assert np.isnan(g["data"][:, ~vm]).all()
 
     with pytest.raises(ValueError, match="multiple of 16"):
-        img.export_geotiff_cog(
-            str(cog), scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=30
-        )
+        img.export_geotiff_cog(str(cog), scale=10000.0, crs="epsg:32630", window_size=30)
 
 
 def test_distributed_ingest_matches_numpy_algebra(spark, tmp_path):
@@ -378,7 +351,7 @@ def test_export_geotiff_lcc_lambert93(spark, tmp_path):
     )
     out = tmp_path / "l93.tif"
     bounds = (-6.0, 40.0, -0.5, 50.0)
-    spec = img.export_geotiff(
+    spec = img.export_geotiff_cog(
         str(out), scale=20000.0, crs="epsg:2154", bounds=bounds, window_size=32
     )
     g = gt.read_geotiff(out.read_bytes())

@@ -1,7 +1,8 @@
 """Spatial-join operator: PIP kernel vs shapely-free numpy oracle, path
-equivalence (covering-cell vs salted vs broadcast), concave polygons."""
+equivalence (broadcast probe vs shuffle join vs salted), concave polygons."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from geoproc_spark import synth
@@ -58,19 +59,30 @@ def test_join_paths_equivalent(spark):
     pts = _points(spark)
     poly = sj.polygons_df(spark)
 
-    plain = sj.spatial_join(pts, poly).select("page_id", "feature_id")
-    salted = sj.spatial_join(pts, poly, salt_buckets=4).select("page_id", "feature_id")
-    bcast = sj.broadcast_spatial_join(pts, synth.polygon_rings()).select(
+    probe = sj.spatial_join(pts, poly).select("page_id", "feature_id")
+    shuffle = sj.spatial_join(pts, poly, broadcast_poly=False).select(
         "page_id", "feature_id"
     )
-    a = sorted(map(tuple, plain.collect()))
-    b = sorted(map(tuple, salted.collect()))
-    c = sorted(map(tuple, bcast.collect()))
+    salted = sj.spatial_join(pts, poly, salt_buckets=4, broadcast_poly=False).select(
+        "page_id", "feature_id"
+    )
+    a = sorted(map(tuple, probe.collect()))
+    b = sorted(map(tuple, shuffle.collect()))
+    c = sorted(map(tuple, salted.collect()))
     assert a == b == c
     assert len(a) > 0
     # overlapping nested boxes: hot pages must match several features
-    multi = plain.groupBy("page_id").count().filter("count > 1").count()
+    multi = probe.groupBy("page_id").count().filter("count > 1").count()
     assert multi > 0
+
+
+def test_salting_requires_shuffle_join(spark):
+    """Salting spreads the shuffle join's hot cells; the broadcast probe has
+    no shuffle, so asking for both fails before any job runs."""
+    pts = _points(spark)
+    poly = sj.polygons_df(spark)
+    with pytest.raises(ValueError, match="broadcast_poly=False"):
+        sj.spatial_join(pts, poly, salt_buckets=4)
 
 
 def test_join_partition_invariant(spark):
@@ -130,8 +142,29 @@ def test_cell_index_candidates_vs_dense_matrix():
     assert got == want and len(want) > 0
 
 
+def test_probe_bounds_covering_cell_pairs(spark, monkeypatch):
+    """The probe's second driver-side bound: a layer whose row count fits
+    but whose (cell, polygon) pairs do not fails before any probe runs."""
+    from geoproc_spark.operators import _small
+
+    poly = sj.polygons_df(spark)
+    n_poly = len(synth.polygon_rings())
+    assert len(sj.CellBboxIndex(synth.polygon_rings()).flat_poly) > n_poly
+    monkeypatch.setattr(_small, "MAX_ROWS", n_poly)
+    with pytest.raises(ValueError, match=r"covering cells: .*broadcast_poly=False"):
+        sj.spatial_join(_points(spark), poly)
+
+
+def test_probe_empty_polygon_layer(spark):
+    """An empty layer matches nothing (and keeps the output schema)."""
+    poly = sj.polygons_df(spark).limit(0)
+    out = sj.spatial_join(_points(spark), poly)
+    assert out.columns == ["page_id", "lat", "lon", "feature_id"]
+    assert out.count() == 0
+
+
 def test_broadcast_join_10k_polygons(spark):
-    """Scale fixture: 10k polygons through the broadcast cell-index join,
+    """Scale fixture: 10k polygons through the broadcast cell-index probe,
     results equal the shuffle-based covering-cell join, within time budget
     (the old dense-matrix probe was O(n*m) per batch)."""
     import time
@@ -167,7 +200,7 @@ def test_broadcast_join_10k_polygons(spark):
     bcast = sorted(
         map(
             tuple,
-            sj.broadcast_spatial_join(pts, polys)
+            sj.spatial_join(pts, poly_df)
             .select("page_id", "feature_id")
             .collect(),
         )
@@ -176,7 +209,9 @@ def test_broadcast_join_10k_polygons(spark):
     shuffle = sorted(
         map(
             tuple,
-            sj.spatial_join(pts, poly_df).select("page_id", "feature_id").collect(),
+            sj.spatial_join(pts, poly_df, broadcast_poly=False)
+            .select("page_id", "feature_id")
+            .collect(),
         )
     )
     assert bcast == shuffle and len(bcast) > 0
@@ -190,7 +225,7 @@ def test_broadcast_join_nan_coordinates_never_match(spark):
         [(1, 48.8566, 2.3522), (2, float("nan"), 2.3522), (3, 48.8566, float("nan"))],
         "page_id long, lat double, lon double",
     )
-    got = sj.broadcast_spatial_join(pts, synth.polygon_rings()).select("page_id").collect()
+    got = sj.spatial_join(pts, sj.polygons_df(spark)).select("page_id").collect()
     assert {r.page_id for r in got} == {1}
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from geoproc_spark import synth
 from geoproc_spark.functions import textkern as TK
-from geoproc_spark.operators import dedup as dd
+from geoproc_spark.oracle import signature_hof as hof
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -27,13 +27,13 @@ def _rows(df):
 
 
 def test_simhash_kernel_matches_hof(spark, docs):
-    assert _rows(TK.simhash(docs)) == _rows(dd.simhash_hof(docs))
+    assert _rows(TK.simhash(docs)) == _rows(hof.simhash_hof(docs))
 
 
 def test_minhash_kernel_matches_hof(spark, docs):
     perms = synth.minhash_perms()
     assert _rows(TK.minhash_signatures(docs, perms)) == _rows(
-        dd.minhash_signatures_hof(docs, perms)
+        hof.minhash_signatures_hof(docs, perms)
     )
 
 
@@ -81,7 +81,7 @@ def test_cc_base_matches_jvm_base_and_sigs(spark, docs):
     assert got == want
     mh_cols = [f"mh{p}" for p, _, _ in perms]
     got_mh = _rows(base.filter("mh0 IS NOT NULL").select("doc_id", *mh_cols))
-    want_mh = _rows(dd.minhash_signatures_hof(docs, perms))
+    want_mh = _rows(hof.minhash_signatures_hof(docs, perms))
     assert got_mh == want_mh
 
 
