@@ -5,9 +5,15 @@ Usage: python BENCH/dump_plans.py OUT_DIR SUFFIX name1 name2 ...
 Writes OUT_DIR/<name>_<SUFFIX>.txt. Runs from whatever repo root is on
 sys.path[0] — invoke with cwd set to the tree whose plans you want.
 
-Besides registry queries, the name `geo_run_extract` runs the pipeline's
-pages and extract stages into a temporary directory and dumps the final
-(post-AQE) plan of the extract snapshot's write.
+Besides registry queries, three names build their plans from a run:
+- `geo_run_extract` runs the pipeline's pages and extract stages into a
+  temporary directory and dumps the final (post-AQE) plan of the extract
+  snapshot's write;
+- `raster_tile` builds the raster_tiles benchmark's tile table (seed 11,
+  perfbench/raster_tiles.py) and dumps the plan of one single-tile
+  request for its expression `abs(img - img.select(["B3"])) * 2`;
+- `raster_cog` runs that benchmark's COG export of the expression and
+  dumps the final plan of every SQL execution the export ran, in order.
 """
 
 import io
@@ -36,6 +42,33 @@ def geo_run_extract_write_plan(spark) -> str:
     return writes[-1].physicalPlanDescription() + "\n"
 
 
+def raster_plan(spark, name: str) -> str:
+    sys.path.insert(0, os.path.join(os.getcwd(), "perfbench"))
+    import raster_tiles as R
+
+    with tempfile.TemporaryDirectory() as d:
+        bench = R.RasterTiles(11, d)
+        bench.build_inputs(spark)
+        expr = bench._expression(spark)
+        if name == "raster_tile":
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                expr.tile(R.ZOOM, R.X0 + 1, R.Y0 + 1).explain("formatted")
+            return buf.getvalue()
+        store = spark._jsparkSession.sharedState().statusStore()
+        first = store.executionsList().size()
+        expr.export_geotiff_cog(
+            os.path.join(d, "export.tif"), R.COG_SCALE, crs=R.COG_CRS,
+            bounds=R.COG_BOUNDS, window_size=R.COG_WINDOW,
+        )
+        execs = store.executionsList()
+        return "".join(
+            f"== execution {i - first}: {execs.apply(i).description().split(' at ')[0]} ==\n"
+            f"{execs.apply(i).physicalPlanDescription()}\n"
+            for i in range(first, execs.size())
+        )
+
+
 def main():
     from pyspark.sql import functions as F
 
@@ -50,6 +83,8 @@ def main():
         try:
             if name == "geo_run_extract":
                 txt = geo_run_extract_write_plan(spark)
+            elif name in ("raster_tile", "raster_cog"):
+                txt = raster_plan(spark, name)
             else:
                 df = reg[name](spark, SF)
                 buf = io.StringIO()

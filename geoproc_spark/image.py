@@ -2,12 +2,15 @@
 
 The reference client (/root/reference/geoproc/image.py) builds a JSON call
 graph per operation and ships it to a server for window-at-a-time pull
-evaluation. Here the DataFrame lineage IS the call graph: every operator
-returns a new `Image` wrapping an unevaluated DataFrame, and Catalyst plays
-the role of the server's `eval_image` interpreter
-(/root/reference/geoproc/server/image.py:542-549). Nothing touches pixels
-until an action (export/collect/stats) runs — the same two-level laziness
-the reference gets from closure composition.
+evaluation. Here the call graph is Column expressions over a tile-source
+DataFrame: every operator returns a new `Image` with rewritten per-band
+expressions (or, for two different sources, over their outer-join
+alignment), and Catalyst plays the role of the server's `eval_image`
+interpreter (reference geoproc/server/image.py:542-549). Nothing
+touches pixels until an action (export/collect/stats) runs — the same
+two-level laziness the reference gets from closure composition — and a
+single-tile request reads one tile of the source, as the reference pulls
+one window through its closure tree.
 
 API parity with the reference client class (geoproc/image.py):
   load, constant, select, export, band_names/info,
@@ -26,7 +29,7 @@ from __future__ import annotations
 
 import numbers
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import _small
@@ -35,30 +38,65 @@ from .operators import algebra as A
 TILE_KEY = A.TILE_KEY
 
 # COG payloads held on the driver at once while export_geotiff_cog streams
-# its tiles (one range partition): 64 tiles ≈ 32 MB at 256 px.
+# its tiles (about one partition): 64 tiles ≈ 32 MB at 256 px.
 STREAM_PARTITION_TILES = 64
+
+# the export window grid's driver-side table, and what to do when it is
+# too large for the driver (operators._small)
+_WIN_DDL = "wid bigint, col_off int, row_off int, win_w int, win_h int"
+_WIN_SMALLER = "raise window_size or scale, or export smaller bounds"
+
+
+def _cog_block(plane, ws: int) -> bytes:
+    """One deflated GeoTIFF tile: a (h, w) float64 plane with NaN nodata,
+    padded to ws x ws."""
+    import zlib
+
+    import numpy as _np
+
+    blk = _np.zeros((ws, ws), dtype="<f8")
+    blk[: plane.shape[0], : plane.shape[1]] = plane
+    return zlib.compress(blk.tobytes(), 6)
 
 
 class Image:
-    """A lazy multi-band tiled image: tile-row DataFrame + driver-side schema.
+    """A lazy multi-band tiled image: a tile source plus pixel expressions.
 
-    `df` columns: z INT, x INT, y INT, data ARRAY<ARRAY<DOUBLE>> (bands x
-    pixels), mask ARRAY<INT> (uint8-valued, 255 = valid). `scalar` images
-    (from `constant`) are boundless: they have no df and fold into kernels.
+    `source` is the DataFrame that defines the tile set (one row per tile
+    key z, x, y). `bands` holds one ARRAY<DOUBLE> Column expression per
+    band and `mask` one ARRAY<INT> expression (uint8-valued, 255 = valid),
+    all over `source`; per-band expressions keep a chain of ops linear in
+    the band count (see operators.algebra). Band selection, abs, scalar
+    ops and the vis ops rewrite the expressions and keep the source, so an
+    image derived from one source is one projection of it, and a binary op
+    between two images of the same source object is too (tile keys are
+    unique, so aligning a source with itself is the identity). Only images
+    over different sources align through a full outer join
+    (algebra.outer_align), whose result is the new image's source.
+    `df` is the tile-row table (z, x, y, data ARRAY<ARRAY<DOUBLE>>, mask)
+    the expressions define. `scalar` images (from `constant`) are
+    boundless: they have no source and fold into kernels.
     """
 
     def __init__(
         self,
-        df: DataFrame | None,
+        source: DataFrame | None,
         band_names: list[str],
         dtype: str,
         n_px: int,
         scalar: float | None = None,
         min_zoom: int | None = None,
         max_zoom: int | None = None,
+        bands: list[Column] | None = None,
+        mask: Column | None = None,
     ):
-        self.df = df
+        self.source = source
         self.band_names = list(band_names)
+        # default: the source's own `data` and `mask` columns
+        if bands is None:
+            bands = [F.col("data")[i] for i in range(len(self.band_names))]
+        self.bands = bands
+        self.mask = F.col("mask") if mask is None else mask
         self.dtype = dtype
         self.n_px = n_px
         self.scalar = scalar
@@ -66,6 +104,36 @@ class Image:
         # unknown (derive with with_zoom_range / functions.cells.min_max_zoom)
         self.min_zoom = min_zoom
         self.max_zoom = max_zoom
+
+    @property
+    def df(self) -> DataFrame | None:
+        """The tile rows (z, x, y, data, mask); None for a constant."""
+        if self.source is None:
+            return None
+        return self.source.select(
+            *TILE_KEY, F.array(*self.bands).alias("data"), self.mask.alias("mask")
+        )
+
+    def _derive(
+        self,
+        bands: list[Column],
+        mask: Column,
+        band_names: list[str] | None = None,
+        dtype: str | None = None,
+        source: DataFrame | None = None,
+    ) -> "Image":
+        """A new image over this image's source (or `source`) with the same
+        pixel count and zoom range."""
+        return Image(
+            self.source if source is None else source,
+            self.band_names if band_names is None else band_names,
+            self.dtype if dtype is None else dtype,
+            self.n_px,
+            min_zoom=self.min_zoom,
+            max_zoom=self.max_zoom,
+            bands=bands,
+            mask=mask,
+        )
 
     # ------------------------------------------------------------- sources
     @classmethod
@@ -187,8 +255,12 @@ class Image:
                         mm.ravel().tolist(),
                     )
                 )
-        df = spark.createDataFrame(
-            rows, "z int, x int, y int, data array<array<double>>, mask array<int>"
+        df = _small.frame(
+            spark,
+            rows,
+            "z int, x int, y int, data array<array<double>>, mask array<int>",
+            "Image.from_array tile rows",
+            "cut large scenes per task with sources.geotiff.ingest_geotiffs",
         )
         names = band_names or [f"B{i+1}" for i in range(nb)]
         return cls(df, names, "float64", side * side, min_zoom=zoom, max_zoom=zoom)
@@ -207,7 +279,7 @@ class Image:
             "band_names": self.band_names,
             "dtype": self.dtype,
             "n_px": self.n_px,
-            "boundless": self.df is None,
+            "boundless": self.source is None,
             "min_zoom": self.min_zoom,
             "max_zoom": self.max_zoom,
         }
@@ -224,16 +296,23 @@ class Image:
 
         mn, mx = _cells.min_max_zoom(width_px, height_px, resolution)
         return Image(
-            self.df, self.band_names, self.dtype, self.n_px, self.scalar, mn, mx
+            self.source, self.band_names, self.dtype, self.n_px, self.scalar, mn, mx,
+            self.bands, self.mask,
         )
 
     def tile(self, z: int, x: int, y: int) -> DataFrame:
         """Single-tile fetch with the P4 min-zoom gate (reference
         geoproc/server/app.py:145-149: tiles below min_zoom are refused —
         rendering them would pull the whole image through one request) and
-        the P3 bounds predicate (tiles outside the data 204 to empty). The
-        (z,x,y) filter prunes partitions when the table is written
-        partitioned by z (see export)."""
+        the P3 bounds predicate (tiles outside the data 204 to empty).
+
+        The tile key passes through the pixel projection, so Catalyst
+        pushes the (z,x,y) filter into the tile source: for an image
+        derived from one source (binary ops between images of that source
+        included) it reaches the parquet scan, which prunes the z
+        partition and skips row groups on x/y, so one request reads one
+        tile. An image aligned across different sources filters above the
+        outer join, which reads both sides whole."""
         if self.min_zoom is not None and z < self.min_zoom:
             raise ValueError(
                 f"zoom {z} below min_zoom {self.min_zoom} (P4 gate, reference app.py:145-149)"
@@ -246,7 +325,7 @@ class Image:
     def select(self, bands: list[str] | list[int]) -> "Image":
         """Band projection; validates names against the schema like the
         server select (/root/reference/geoproc/server/image.py:141-160).
-        Pure column slicing — Catalyst prunes the untouched bands."""
+        Pure expression slicing over the same source."""
         idxs = []
         for b in bands:
             if isinstance(b, int):
@@ -256,15 +335,7 @@ class Image:
                     raise ValueError(f"band {b!r} not in {self.band_names}")
                 idxs.append(self.band_names.index(b))
         names = [self.band_names[i] for i in idxs]
-        df = self.df.select(
-            *TILE_KEY,
-            F.array(*[F.col("data")[i] for i in idxs]).alias("data"),
-            "mask",
-        )
-        return Image(
-            df, names, self.dtype, self.n_px,
-            min_zoom=self.min_zoom, max_zoom=self.max_zoom,
-        )
+        return self._derive([self.bands[i] for i in idxs], self.mask, names)
 
     # ------------------------------------------------------------- algebra
     def _binary(self, other, op: str, reverse: bool = False) -> "Image":
@@ -274,27 +345,30 @@ class Image:
             raise ValueError("at least one operand must have tiles")
 
         if other.scalar is not None:  # image op constant
-            data = A.scalar_data(op, F.col("data"), other.scalar, self.n_bands, reverse=reverse)
-            df = self.df.select(*TILE_KEY, data.alias("data"), A.full_mask(self.n_px).alias("mask"))
-            return Image(
-                df, self.band_names, "float64", self.n_px,
-                min_zoom=self.min_zoom, max_zoom=self.max_zoom,
-            )
+            data = A.scalar_data(op, self.bands, other.scalar, self.n_bands, reverse=reverse)
+            return self._derive(data, A.full_mask(self.n_px), dtype="float64")
         if self.scalar is not None:  # constant op image
             return other._binary(self, op, reverse=not reverse)
 
         a, b = (other, self) if reverse else (self, other)
-        j = A.outer_align(a.df, b.df, a.n_bands, b.n_bands, self.n_px)
-        data = A.binary_data(op, F.col("_da"), F.col("_db"), a.n_bands, b.n_bands)
-        mask = A.mask_union(F.col("_ma"), F.col("_mb"))
-        df = j.select(*TILE_KEY, data.alias("data"), mask.alias("mask"))
+        if a.source is b.source:
+            # one source: its tile keys are unique, so the alignment is the
+            # identity and the op is one more projection of that source
+            source, da, ma, db, mb = a.source, a.bands, a.mask, b.bands, b.mask
+        else:
+            source = A.outer_align(a.df, b.df, a.n_bands, b.n_bands, self.n_px)
+            da, ma, db, mb = (F.col(c) for c in ("_da", "_ma", "_db", "_mb"))
         # left operand's band names AND zoom range
         # (/root/reference/geoproc/server/image.py:312-315)
         names = a.band_names if len(a.band_names) == max(a.n_bands, b.n_bands) else [
             f"B{i+1}" for i in range(max(a.n_bands, b.n_bands))
         ]
-        return Image(
-            df, names, "float64", self.n_px, min_zoom=a.min_zoom, max_zoom=a.max_zoom
+        return a._derive(
+            A.binary_data(op, da, db, a.n_bands, b.n_bands),
+            A.mask_union(ma, mb),
+            names,
+            "float64",
+            source,
         )
 
     def __add__(self, o):
@@ -346,47 +420,22 @@ class Image:
     __hash__ = None
 
     def __abs__(self):
-        df = self.df.select(
-            *TILE_KEY, A.abs_data(F.col("data"), self.n_bands).alias("data"), "mask"
-        )
-        return Image(
-            df, self.band_names, self.dtype, self.n_px,
-            min_zoom=self.min_zoom, max_zoom=self.max_zoom,
-        )
+        return self._derive(A.abs_data(self.bands, self.n_bands), self.mask)
 
     # ------------------------------------------------------- visualization
     def rescale(self, rng) -> "Image":
         ranges = A.expand_scale_range(rng, self.n_bands)
-        df = self.df.select(
-            *TILE_KEY, A.rescale_data(F.col("data"), ranges).alias("data"), "mask"
-        )
-        return Image(
-            df, self.band_names, "float64", self.n_px,
-            min_zoom=self.min_zoom, max_zoom=self.max_zoom,
-        )
+        return self._derive(A.rescale_data(self.bands, ranges), self.mask, dtype="float64")
 
     def with_gain_bias_gamma(self, gain: float = 1.0, bias: float = 0.0, gamma: float = 1.0) -> "Image":
         """F8 vis params — declared by the reference's VisualizationParams
         (geoproc/models.py:11-13) but never applied by its server; see
         algebra.gain_bias_gamma_data for the semantics implemented here."""
-        df = self.df.select(
-            *TILE_KEY,
-            A.gain_bias_gamma_data(F.col("data"), self.n_bands, gain, bias, gamma).alias("data"),
-            "mask",
-        )
-        return Image(
-            df, self.band_names, "float64", self.n_px,
-            min_zoom=self.min_zoom, max_zoom=self.max_zoom,
-        )
+        data = A.gain_bias_gamma_data(self.bands, self.n_bands, gain, bias, gamma)
+        return self._derive(data, self.mask, dtype="float64")
 
     def with_opacity(self, opacity: float) -> "Image":
-        df = self.df.select(
-            *TILE_KEY, "data", A.opacity_mask(F.col("mask"), opacity).alias("mask")
-        )
-        return Image(
-            df, self.band_names, self.dtype, self.n_px,
-            min_zoom=self.min_zoom, max_zoom=self.max_zoom,
-        )
+        return self._derive(self.bands, A.opacity_mask(self.mask, opacity))
 
     def build_overview(self) -> "Image":
         """One pyramid level up (z-1 parents from 2x2 children) — the
@@ -395,9 +444,9 @@ class Image:
         missing quadrants fully masked. Chain for deeper pyramids."""
         from .operators import tiles as _tiles
 
-        df = _tiles.build_parent_tiles(self.df, self.n_bands, self.n_px)
         return Image(
-            df, self.band_names, self.dtype, self.n_px,
+            _tiles.build_parent_tiles(self.df, self.n_bands, self.n_px),
+            self.band_names, self.dtype, self.n_px,
             min_zoom=None if self.min_zoom is None else max(0, self.min_zoom - 1),
             max_zoom=self.max_zoom,
         )
@@ -418,7 +467,6 @@ class Image:
         from pyspark.sql import types as T
 
         from .functions import png as _png
-        from .operators import algebra as _A
 
         bands = [band] if isinstance(band, (str, int)) else list(band)
         if len(bands) not in (1, 3):
@@ -428,11 +476,7 @@ class Image:
         if opacity < 1.0:
             r = r.with_opacity(opacity)
         side = int(math.isqrt(self.n_px))
-        rendered = r.df.select(
-            *TILE_KEY,
-            _A.uint8_data(F.col("data"), nb).alias("data"),
-            "mask",
-        )
+        rendered = r._derive(A.uint8_data(r.bands, nb), r.mask).df
 
         # no annotations: `from __future__ import annotations` stringifies
         # hints on nested functions, breaking pandas_udf inference — the
@@ -519,39 +563,27 @@ class Image:
         _w, _s, e, n = _cells.tile_bounds_np([zoom], [r[1]], [r[2]])
         return (float(w[0]), float(s[0]), float(e[0]), float(n[0]))
 
-    def projected_windows(
+    def _window_join(
         self,
         scale: float,
-        crs: str = "epsg:4326",
-        bounds: tuple[float, float, float, float] | None = None,
-        in_crs: str = "epsg:4326",
-        window_size: int = 256,
+        crs: str,
+        bounds: tuple[float, float, float, float] | None,
+        in_crs: str,
+        window_size: int,
         native_zoom: int | None = None,
-    ) -> tuple[DataFrame, dict]:
-        """The output-CRS/scale export grid, resampled DISTRIBUTED — the
-        engine's analog of the reference's projected export
-        (/root/reference/geoproc/server/image.py:162-241): grid shape +
-        affine from functions/grid.py (:183-207 semantics), window loop
-        (:225-241) as a Spark job — windows enumerate on the driver, each
-        window joins ONLY the source tiles it overlaps (perimeter-derived
-        tile range, a broadcast local relation), and one applyInPandas per
-        window gathers its pixels nearest-neighbor from the native tile
-        grid. Pixels outside the tile set are nodata (mask 0), like the
-        reference's write_mask.
+    ):
+        """The export window grid, each window joined to the source tiles it
+        overlaps, and the per-window gather kernel.
 
-        The window grid and its window->tile table are driver-side small
-        sides (operators._small): more than _small.MAX_ROWS rows raise
-        ValueError, the window count before the grid is built.
-
-        Returns (windows DataFrame, grid spec dict); rows are
-        (col_off, row_off, win_w, win_h, data ARRAY<ARRAY<DOUBLE>>,
-        mask ARRAY<INT>) — the COG-window table form of the output raster.
-        """
+        Returns (spec, grid, wtiles, tiles, joined, gather): `grid` is the
+        driver-side window list of (wid, col_off, row_off, win_w, win_h)
+        in row-major order, `wtiles` the window->tile table, `tiles` the
+        native-zoom tile rows, `joined` their broadcast inner join (windows
+        that reach no tile have no row), and `gather(pdf)` turns one
+        window's joined rows into its (bands x pixels) data and mask."""
         import math as _math
 
         import numpy as _np
-        import pandas as _pd
-        from pyspark.sql import types as T
 
         from .functions import grid as _grid
 
@@ -603,15 +635,13 @@ class Image:
         # below, so it is small by construction, and the bound is checked
         # before any numpy work
         n_win = wcols * wrows
-        smaller = "raise window_size or scale, or export smaller bounds"
-        _small.check(n_win, "projected_windows window grid", smaller)
+        _small.check(n_win, "projected_windows window grid", _WIN_SMALLER)
         wid = _np.arange(n_win, dtype=_np.int64)
         co = (wid % wcols) * window_size
         ro = (wid // wcols) * window_size
         ww = _np.minimum(window_size, width - co)
         wh = _np.minimum(window_size, height - ro)
         grid = list(zip(wid.tolist(), co.tolist(), ro.tolist(), ww.tolist(), wh.tolist()))
-        win_ddl = "wid bigint, col_off int, row_off int, win_w int, win_h int"
 
         # boundary pixel CENTERS bound each window's tile range. For the
         # separable CRSs corners alone would do (gx monotone in output col,
@@ -641,10 +671,9 @@ class Image:
             for y in range(ya, yb + 1)
         ]
         spark = self.df.sparkSession
-        windows = _small.frame(spark, grid, win_ddl, "projected_windows window grid", smaller)
         wtiles = _small.frame(
-            spark, wtile_rows, win_ddl + ", x int, y int",
-            "projected_windows window->tile table", smaller,
+            spark, wtile_rows, _WIN_DDL + ", x int, y int",
+            "projected_windows window->tile table", _WIN_SMALLER,
         )
         tiles = self.df.filter(F.col("z") == z).select("x", "y", "data", "mask")
         # the window-tile list is the SMALL side (windows x tiles-per-window
@@ -652,22 +681,11 @@ class Image:
         # never shuffles for the join; the only Exchange left is the
         # per-window gather. A broadcast side cannot be the preserved side
         # of an outer join, so tile-less windows (possible when the export
-        # bounds exceed the tile set) are emitted separately below as
-        # all-nodata windows built in pure SQL.
+        # bounds exceed the tile set) have no row here; callers emit them
+        # as all-nodata windows.
         joined = F.broadcast(wtiles).join(tiles, ["x", "y"], "inner")
 
-        schema = T.StructType(
-            [
-                T.StructField("col_off", T.IntegerType()),
-                T.StructField("row_off", T.IntegerType()),
-                T.StructField("win_w", T.IntegerType()),
-                T.StructField("win_h", T.IntegerType()),
-                T.StructField("data", T.ArrayType(T.ArrayType(T.DoubleType()))),
-                T.StructField("mask", T.ArrayType(T.IntegerType())),
-            ]
-        )
-
-        def assemble(pdf: _pd.DataFrame) -> _pd.DataFrame:
+        def gather(pdf):
             co = int(pdf["col_off"].iloc[0])
             ro = int(pdf["row_off"].iloc[0])
             ww = int(pdf["win_w"].iloc[0])
@@ -691,12 +709,64 @@ class Image:
                 tm = _np.asarray(row["mask"], dtype=_np.int64)
                 data[:, sel] = td[:, src]
                 mask[sel] = tm[src]
+            return data, mask
+
+        return spec, grid, wtiles, tiles, joined, gather
+
+    def projected_windows(
+        self,
+        scale: float,
+        crs: str = "epsg:4326",
+        bounds: tuple[float, float, float, float] | None = None,
+        in_crs: str = "epsg:4326",
+        window_size: int = 256,
+        native_zoom: int | None = None,
+    ) -> tuple[DataFrame, dict]:
+        """The output-CRS/scale export grid, resampled DISTRIBUTED — the
+        engine's analog of the reference's projected export
+        (reference geoproc/server/image.py:162-241): grid shape +
+        affine from functions/grid.py (:183-207 semantics), window loop
+        (:225-241) as a Spark job — windows enumerate on the driver, each
+        window joins ONLY the source tiles it overlaps (perimeter-derived
+        tile range, a broadcast local relation), and one applyInPandas per
+        window gathers its pixels nearest-neighbor from the native tile
+        grid. Pixels outside the tile set are nodata (mask 0), like the
+        reference's write_mask.
+
+        The window grid and its window->tile table are driver-side small
+        sides (operators._small): more than _small.MAX_ROWS rows raise
+        ValueError, the window count before the grid is built.
+
+        Returns (windows DataFrame, grid spec dict); rows are
+        (col_off, row_off, win_w, win_h, data ARRAY<ARRAY<DOUBLE>>,
+        mask ARRAY<INT>) — the COG-window table form of the output raster.
+        """
+        import pandas as _pd
+        from pyspark.sql import types as T
+
+        spec, grid, wtiles, tiles, joined, gather = self._window_join(
+            scale, crs, bounds, in_crs, window_size, native_zoom
+        )
+        nb = self.n_bands
+        schema = T.StructType(
+            [
+                T.StructField("col_off", T.IntegerType()),
+                T.StructField("row_off", T.IntegerType()),
+                T.StructField("win_w", T.IntegerType()),
+                T.StructField("win_h", T.IntegerType()),
+                T.StructField("data", T.ArrayType(T.ArrayType(T.DoubleType()))),
+                T.StructField("mask", T.ArrayType(T.IntegerType())),
+            ]
+        )
+
+        def assemble(pdf: _pd.DataFrame) -> _pd.DataFrame:
+            data, mask = gather(pdf)
             return _pd.DataFrame(
                 {
-                    "col_off": [co],
-                    "row_off": [ro],
-                    "win_w": [ww],
-                    "win_h": [wh],
+                    "col_off": [int(pdf["col_off"].iloc[0])],
+                    "row_off": [int(pdf["row_off"].iloc[0])],
+                    "win_w": [int(pdf["win_w"].iloc[0])],
+                    "win_h": [int(pdf["win_h"].iloc[0])],
                     "data": [[list(b) for b in data]],
                     "mask": [mask.tolist()],
                 }
@@ -718,6 +788,9 @@ class Image:
         matched = wtiles.join(
             F.broadcast(tiles.select("x", "y")), ["x", "y"], "left_semi"
         ).select("wid")
+        windows = _small.frame(
+            wtiles.sparkSession, grid, _WIN_DDL, "projected_windows window grid", _WIN_SMALLER
+        )
         empty = (
             windows.join(F.broadcast(matched), "wid", "left_anti")
             .selectExpr(
@@ -784,23 +857,31 @@ class Image:
         DISTRIBUTED.
 
         Shape: the export window grid IS the TIFF tile grid (window_size
-        must be a multiple of 16, the TIFF tile-dim rule). Each window
-        task pads its block to the full tile, stamps nodata as NaN, and
-        deflates the payload inside mapInPandas — all pixel work and all
-        compression happen on executors. The driver then does exactly two
-        cheap things: collect the (tile_idx, byte-count) list (one small
-        row per tile — the precomputed-offsets half of the COG layout) to
-        assemble the header/IFD, and stream the payloads in tile order
-        through toLocalIterator onto the end of the file. Peak driver
-        memory is one range partition of payloads
-        (STREAM_PARTITION_TILES tiles), never the raster. Nodata pixels
-        are written as NaN with a GDAL_NODATA tag, so read_geotiff
-        reconstructs the same mask.
+        must be a multiple of 16, the TIFF tile-dim rule). One
+        groupBy("wid").applyInPandas pass over the window->tile join
+        gathers each window's pixels (the same kernel as
+        projected_windows), pads each band to the full tile, stamps nodata
+        as NaN and deflates it: every pixel crosses into Python once, and
+        all compression happens on executors. The pass's rows
+        (tile_idx, payload) are cached; the driver then does three cheap
+        things: collect the (tile_idx, byte-count) list (one small row per
+        tile) to assemble the header/IFD, fill the windows no source tile
+        reaches with one deflated all-nodata block per window shape, and
+        write every payload at its offset in tile order, in whatever order
+        toLocalIterator delivers the cached partitions. The pass is
+        partitioned on wid into ceil(tiles / STREAM_PARTITION_TILES)
+        partitions, so peak driver memory is about STREAM_PARTITION_TILES
+        payloads, never the raster. Every tile is checked to be written
+        exactly once. Nodata pixels are written as NaN with a
+        GDAL_NODATA tag, so read_geotiff reconstructs the same mask.
 
         Returns the grid spec. The output is readable by read_geotiff and
         by any TIFF reader that handles tiled+deflate (GDAL's default)."""
         import numpy as _np
+        import pandas as _pd
+        from pyspark.sql import types as T
 
+        from .operators._cache import release, swap_cache
         from .sources import geotiff as _gt
 
         if window_size % 16:
@@ -808,16 +889,30 @@ class Image:
                 f"window_size must be a multiple of 16 for a tiled TIFF, "
                 f"got {window_size}"
             )
-        wdf, spec = self.projected_windows(
-            scale, crs=crs, bounds=bounds, in_crs=in_crs, window_size=window_size
+        spec, grid, _wtiles, _tiles, joined, gather = self._window_join(
+            scale, crs, bounds, in_crs, window_size
         )
         w, h, nb = spec["width"], spec["height"], self.n_bands
         ws = window_size
-        ta, td = (w + ws - 1) // ws, (h + ws - 1) // ws
-        tpb = ta * td
+        # the window grid is the tile grid, row-major: window wid is tile
+        # wid of every band plane
+        tpb = len(grid)
+        n_tiles = nb * tpb
 
-        import pandas as _pd
-        from pyspark.sql import types as T
+        def encode(pdf: _pd.DataFrame) -> _pd.DataFrame:
+            wid = int(pdf["wid"].iloc[0])
+            ww, wh = int(pdf["win_w"].iloc[0]), int(pdf["win_h"].iloc[0])
+            data, mask = gather(pdf)
+            valid = mask.reshape(wh, ww) == 255
+            return _pd.DataFrame(
+                {
+                    "tile_idx": [b * tpb + wid for b in range(nb)],
+                    "payload": [
+                        _cog_block(_np.where(valid, data[b].reshape(wh, ww), _np.nan), ws)
+                        for b in range(nb)
+                    ],
+                }
+            )
 
         out_schema = T.StructType(
             [
@@ -825,43 +920,29 @@ class Image:
                 T.StructField("payload", T.BinaryType()),
             ]
         )
-
-        def encode(batches):
-            import zlib
-
-            for pdf in batches:
-                idxs, payloads = [], []
-                for _, r in pdf.iterrows():
-                    ww, wh = int(r["win_w"]), int(r["win_h"])
-                    tx, ty = int(r["col_off"]) // ws, int(r["row_off"]) // ws
-                    m = _np.asarray(r["mask"], dtype=_np.int64).reshape(wh, ww)
-                    for b in range(nb):
-                        blk = _np.zeros((ws, ws), dtype="<f8")
-                        d = _np.asarray(r["data"][b], dtype=_np.float64).reshape(
-                            wh, ww
-                        )
-                        d = _np.where(m == 255, d, _np.nan)
-                        blk[:wh, :ww] = d
-                        idxs.append(b * tpb + ty * ta + tx)
-                        payloads.append(zlib.compress(blk.tobytes(), 6))
-                yield _pd.DataFrame({"tile_idx": idxs, "payload": payloads})
-
-        from .operators._cache import swap_cache
-
-        chunks = swap_cache("export_cog_chunks", wdf.mapInPandas(encode, out_schema))
+        n_parts = max(1, (n_tiles + STREAM_PARTITION_TILES - 1) // STREAM_PARTITION_TILES)
+        chunks = swap_cache(
+            "export_cog_chunks",
+            joined.repartition(n_parts, "wid").groupBy("wid").applyInPandas(encode, out_schema),
+        )
         try:
-            sizes = {
-                r["tile_idx"]: r["n"]
-                for r in chunks.select(
-                    "tile_idx", F.length("payload").alias("n")
-                ).collect()
-            }
-            n_tiles = nb * tpb
-            if len(sizes) != n_tiles:
+            sizes = dict(
+                chunks.select("tile_idx", F.length("payload")).collect()
+            )
+            reached = {i % tpb for i in sizes}
+            nodata, fill = {}, {}
+            for wid, _co, _ro, ww, wh in grid:
+                if wid not in reached:
+                    if (wh, ww) not in nodata:
+                        nodata[(wh, ww)] = _cog_block(_np.full((wh, ww), _np.nan), ws)
+                    for b in range(nb):
+                        fill[b * tpb + wid] = nodata[(wh, ww)]
+            if len(sizes) + len(fill) != n_tiles:
                 raise ValueError(
-                    f"window table produced {len(sizes)} tiles, expected {n_tiles}"
+                    f"window table produced {len(sizes) + len(fill)} tiles, "
+                    f"expected {n_tiles}"
                 )
-            counts = [sizes[i] for i in range(n_tiles)]
+            counts = [sizes[i] if i in sizes else len(fill[i]) for i in range(n_tiles)]
             entries = _gt.geotiff_tags(
                 nb,
                 h,
@@ -878,27 +959,30 @@ class Image:
             # offset, so a post-hoc check never ran for real >4 GiB
             # exports) — same chunks, same streaming write either way
             prefix, data_off, _big = _gt.assemble_tiff_auto(entries, counts)
-            n_parts = max(1, (n_tiles + STREAM_PARTITION_TILES - 1)
-                          // STREAM_PARTITION_TILES)
-            ordered = chunks.repartitionByRange(
-                n_parts, "tile_idx"
-            ).sortWithinPartitions("tile_idx")
-            expect = 0
+            offsets = data_off + _np.cumsum([0] + counts[:-1])
+            written = _np.zeros(n_tiles, dtype=bool)
             with open(path, "wb") as fh:
                 fh.write(prefix)
-                for row in ordered.toLocalIterator():
-                    if row["tile_idx"] != expect:
-                        raise ValueError(
-                            f"tile stream out of order: got {row['tile_idx']}, "
-                            f"expected {expect}"
-                        )
-                    fh.write(bytes(row["payload"]))
-                    expect += 1
-            if expect != n_tiles:
-                raise ValueError(f"tile stream ended at {expect}/{n_tiles}")
-        finally:
-            from .operators._cache import release
 
+                def put(idx: int, payload: bytes) -> None:
+                    if written[idx] or len(payload) != counts[idx]:
+                        raise ValueError(
+                            f"tile {idx} written twice or resized "
+                            f"({len(payload)} bytes, {counts[idx]} collected)"
+                        )
+                    fh.seek(int(offsets[idx]))
+                    fh.write(payload)
+                    written[idx] = True
+
+                for idx, payload in fill.items():
+                    put(idx, payload)
+                for row in chunks.toLocalIterator():
+                    put(row["tile_idx"], row["payload"])
+            if not written.all():
+                raise ValueError(
+                    f"tile stream wrote {int(written.sum())}/{n_tiles} tiles"
+                )
+        finally:
             release("export_cog_chunks")
         return spec
 

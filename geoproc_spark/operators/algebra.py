@@ -15,10 +15,21 @@ Here a tile row is (z, x, y, data ARRAY<ARRAY<DOUBLE>>, mask ARRAY<INT>)
 — data is bands x pixels, one uint8-valued mask plane per tile (the
 ImageData model of rio-tiler, reference image.py:25). All kernels are
 Catalyst higher-order functions (transform / zip_with) — whole-stage
-codegen, zero Python in the pixel path. Alignment of two images is a full
-outer join on the tile key: a tile absent from one side contributes zero
-data and zero mask, exactly like rio-tiler returning an all-masked window
-outside an image's bounds.
+codegen, zero Python in the pixel path.
+
+The data kernels take their image operands as anything indexable by band
+(an ARRAY<ARRAY<DOUBLE>> Column, or a list of per-band ARRAY<DOUBLE>
+Columns) and return a list of per-band Columns; `F.array(*bands)` makes
+the tile's data column. Each output band then references only the input
+bands it reads, so a chain of ops stays linear in the band count instead
+of re-embedding every band of its input in every output band.
+
+Two images over the same tile source need no alignment: tile keys are
+unique, so Image ops combine their expressions row by row. Only images
+over different sources align through `outer_align`, a full outer join on
+the tile key: a tile absent from one side contributes zero data and zero
+mask, exactly like rio-tiler returning an all-masked window outside an
+image's bounds.
 """
 
 from __future__ import annotations
@@ -83,7 +94,7 @@ def _arith(op: str):
     }[op]
 
 
-def binary_data(op: str, a: Column, b: Column, n_bands_a: int, n_bands_b: int) -> Column:
+def binary_data(op: str, a, b, n_bands_a: int, n_bands_b: int) -> list[Column]:
     """Elementwise op over bands x pixels; 1-band sides broadcast (numpy
     broadcasting semantics, as the reference's raw ufunc call would)."""
     f = _arith(op)
@@ -93,24 +104,22 @@ def binary_data(op: str, a: Column, b: Column, n_bands_a: int, n_bands_b: int) -
         ba = a[min(i, n_bands_a - 1)] if n_bands_a == 1 else a[i]
         bb = b[min(i, n_bands_b - 1)] if n_bands_b == 1 else b[i]
         bands.append(F.zip_with(ba, bb, lambda x, y: f(x, y).cast("double")))
-    return F.array(*bands)
+    return bands
 
 
-def scalar_data(op: str, a: Column, scalar: float, n_bands: int, reverse: bool = False) -> Column:
+def scalar_data(op: str, a, scalar: float, n_bands: int, reverse: bool = False) -> list[Column]:
     """Image op constant — the reference promotes scalars to boundless
     constant images (/root/reference/geoproc/image.py:187); here the scalar
     folds straight into the per-pixel lambda."""
     f = _arith(op)
     s = F.lit(float(scalar))
     fn = (lambda x: f(s, x)) if reverse else (lambda x: f(x, s))
-    return F.array(
-        *[F.transform(a[i], lambda x: fn(x).cast("double")) for i in range(n_bands)]
-    )
+    return [F.transform(a[i], lambda x: fn(x).cast("double")) for i in range(n_bands)]
 
 
-def abs_data(a: Column, n_bands: int) -> Column:
+def abs_data(a, n_bands: int) -> list[Column]:
     """Unary abs keeps dtype and mask (/root/reference/geoproc/server/image.py:243-257)."""
-    return F.array(*[F.transform(a[i], lambda x: F.abs(x)) for i in range(n_bands)])
+    return [F.transform(a[i], lambda x: F.abs(x)) for i in range(n_bands)]
 
 
 def mask_union(a: Column, b: Column) -> Column:
@@ -119,7 +128,7 @@ def mask_union(a: Column, b: Column) -> Column:
     return F.zip_with(a, b, lambda x, y: F.greatest(x, y))
 
 
-def rescale_data(a: Column, ranges: list[tuple[float, float]]) -> Column:
+def rescale_data(a, ranges: list[tuple[float, float]]) -> list[Column]:
     """Linear rescale to 0..255 per band
     (/root/reference/geoproc/server/app.py:162-168); `ranges` is already
     expanded per band (expand_scale_range, app.py:55-61). The reference's
@@ -137,7 +146,7 @@ def rescale_data(a: Column, ranges: list[tuple[float, float]]) -> Column:
                 lambda x: (F.greatest(lo_l, F.least(hi_l, x)) - lo_l) / span * F.lit(255.0),
             )
         )
-    return F.array(*bands)
+    return bands
 
 
 def opacity_mask(mask: Column, opacity: float) -> Column:
@@ -151,8 +160,8 @@ def opacity_mask(mask: Column, opacity: float) -> Column:
 
 
 def gain_bias_gamma_data(
-    a: Column, n_bands: int, gain: float = 1.0, bias: float = 0.0, gamma: float = 1.0
-) -> Column:
+    a, n_bands: int, gain: float = 1.0, bias: float = 0.0, gamma: float = 1.0
+) -> list[Column]:
     """F8: gain/bias/gamma are DECLARED in the reference's
     VisualizationParams (/root/reference/geoproc/models.py:11-13) but never
     consumed by its server — implemented here with the standard vis
@@ -167,17 +176,15 @@ def gain_bias_gamma_data(
         v = F.greatest(zero, F.least(one, g * x / F.lit(255.0) + b))
         return F.pow(v, inv_gamma) * F.lit(255.0)
 
-    return F.array(*[F.transform(a[i], fn) for i in range(n_bands)])
+    return [F.transform(a[i], fn) for i in range(n_bands)]
 
 
-def uint8_data(a: Column, n_bands: int) -> Column:
+def uint8_data(a, n_bands: int) -> list[Column]:
     """Final render cast: float [0,255] -> uint8 by truncation, numpy
     `.astype(np.uint8)` semantics after the clamped rescale (the PNG encode
     step of /root/reference/geoproc/server/app.py:176-178). Values are
     already in range; floor == truncation for non-negative input."""
-    return F.array(
-        *[F.transform(a[i], lambda x: F.floor(x).cast("int")) for i in range(n_bands)]
-    )
+    return [F.transform(a[i], lambda x: F.floor(x).cast("int")) for i in range(n_bands)]
 
 
 def expand_scale_range(rng, n_bands: int) -> list[tuple[float, float]]:
@@ -192,7 +199,12 @@ def outer_align(a: DataFrame, b: DataFrame, n_bands_a: int, n_bands_b: int, n_px
     """Full outer join on the tile key with zero-fill — the distributed
     analog of both children evaluating the same window
     (/root/reference/geoproc/server/image.py:295-301), where a child
-    without data there returns an all-masked block."""
+    without data there returns an all-masked block.
+
+    Only images over different tile sources need it: Image ops between
+    images of one source combine that source's rows directly. The join
+    reads both sides whole, and a (z, x, y) filter above it cannot reach
+    either scan."""
     aa = a.select(*TILE_KEY, F.col("data").alias("_da"), F.col("mask").alias("_ma"))
     bb = b.select(*TILE_KEY, F.col("data").alias("_db"), F.col("mask").alias("_mb"))
     j = aa.join(bb, TILE_KEY, "full_outer")

@@ -450,7 +450,7 @@ def tile_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = Image.from_df(synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX)
     r = a.select(["B1"]).rescale((10.0, 70.0)).with_opacity(0.4)
     rendered = r.df.select(
-        "z", "x", "y", A.uint8_data(F.col("data"), 1).alias("data"), "mask"
+        "z", "x", "y", F.array(*A.uint8_data(F.col("data"), 1)).alias("data"), "mask"
     )
     return rendered.select(
         "z",

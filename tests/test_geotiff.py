@@ -94,19 +94,29 @@ def test_read_chunky_planar_config():
     assert np.array_equal(g["data"], data)
 
 
+UTM_BOUNDS = (-6.0, 40.0, -0.5, 50.0)
+
+
 def _utm_fixture_export(spark, path):
     """Export the tile fixture onto a UTM 30N grid as one .tif at `path`
     and assemble the same window table on the driver: returns the image,
     the grid spec, the window pixels (NaN where masked) and the valid mask."""
+    img = _utm_fixture(spark)
+    spec = img.export_geotiff_cog(
+        path, scale=10000.0, crs="epsg:32630", bounds=UTM_BOUNDS, window_size=32
+    )
+    return (img, spec, *_utm_window_table(img, spec, UTM_BOUNDS))
+
+
+def _utm_fixture(spark):
     from geoproc_spark import synth
 
-    img = Image.from_df(
-        synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX
-    )
-    bounds = (-6.0, 40.0, -0.5, 50.0)
-    spec = img.export_geotiff_cog(
-        path, scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
-    )
+    return Image.from_df(synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX)
+
+
+def _utm_window_table(img, spec, bounds):
+    """The export's window pixels (NaN where masked) and valid mask, from
+    the projected_windows table collected on the driver."""
     wdf, _ = img.projected_windows(
         scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
     )
@@ -120,7 +130,7 @@ def _utm_fixture_export(spark, path):
             px = np.asarray(r["data"][b]).reshape(r["win_h"], r["win_w"])
             want[b][sl] = np.where(valid, px, np.nan)
         vmask[sl] = valid
-    return img, spec, want, vmask
+    return want, vmask
 
 
 def test_export_geotiff_roundtrip(spark, tmp_path):
@@ -140,10 +150,13 @@ def test_export_geotiff_roundtrip(spark, tmp_path):
 
 
 def test_export_geotiff_cog_distributed_matches_driver_path(spark, tmp_path, monkeypatch):
-    """VERDICT r04 #5: the single-file export — executor-side tile encode +
-    streaming concat — must be BYTE-IDENTICAL to write_geotiff at the same
-    profile (deflate, tiled window_size) over the window table assembled
-    on the driver."""
+    """VERDICT r04 #5: the single-file export — executor-side gather and
+    tile encode in one pass, payloads written at precomputed offsets —
+    must be BYTE-IDENTICAL to write_geotiff at the same profile (deflate,
+    tiled window_size) over the window table assembled on the driver,
+    also when the bounds reach past the tile set (windows no tile reaches
+    are all nodata). The export runs in one pass: no Union or anti-join
+    for the empty windows, and fewer jobs than the two-pass export."""
     import math
 
     from geoproc_spark import image as image_mod
@@ -151,11 +164,43 @@ def test_export_geotiff_cog_distributed_matches_driver_path(spark, tmp_path, mon
     cog = tmp_path / "cog.tif"
     # force multiple stream partitions
     monkeypatch.setattr(image_mod, "STREAM_PARTITION_TILES", 3)
-    img, spec, want, _ = _utm_fixture_export(spark, str(cog))
-    assert cog.read_bytes() == gt.write_geotiff(
-        want, spec["out_bounds"], crs=spec["crs"], nodata=math.nan,
-        compression="deflate", tile=(32, 32),
-    )
+    img = _utm_fixture(spark)
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    # max_jobs: one job per streamed partition plus the encode pass. The
+    # two-pass export (window assembly, anti-joined empty windows, then a
+    # tile encode and a range re-shuffle to stream in order) ran 16 and 21
+    # jobs on these bounds.
+    for bounds, max_jobs in ((UTM_BOUNDS, 12), ((-6.0, 40.0, 6.0, 50.0), 17)):
+        group = f"cog_export_{bounds[2]}"
+        first_exec = store.executionsList().size()
+        sc.setJobGroup(group, "export_geotiff_cog")
+        try:
+            spec = img.export_geotiff_cog(
+                str(cog), scale=10000.0, crs="epsg:32630", bounds=bounds, window_size=32
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        execs = store.executionsList()
+        plans = [execs.apply(i).physicalPlanDescription() for i in range(first_exec, execs.size())]
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+        want, vmask = _utm_window_table(img, spec, bounds)
+        assert cog.read_bytes() == gt.write_geotiff(
+            want, spec["out_bounds"], crs=spec["crs"], nodata=math.nan,
+            compression="deflate", tile=(32, 32),
+        ), bounds
+        windows = [
+            vmask[r : r + 32, c : c + 32]
+            for r in range(0, spec["height"], 32)
+            for c in range(0, spec["width"], 32)
+        ]
+        if bounds != UTM_BOUNDS:
+            assert not all(w.any() for w in windows)  # some windows are all nodata
+        assert any("FlatMapGroupsInPandas" in p for p in plans)
+        assert not any("Union" in p or "LeftAnti" in p for p in plans), plans
+        assert n_jobs <= max_jobs, (bounds, n_jobs)
 
     with pytest.raises(ValueError, match="multiple of 16"):
         img.export_geotiff_cog(str(cog), scale=10000.0, crs="epsg:32630", window_size=30)

@@ -9,6 +9,7 @@ import pytest
 from geoproc_spark import synth
 from geoproc_spark.image import Image
 from geoproc_spark.oracle import numpy_oracle as O
+from tests.test_image_api import ARITH, COMPARE
 
 
 def _collect(img: Image):
@@ -59,9 +60,12 @@ BINOPS = [
 @pytest.mark.parametrize("name,op", BINOPS)
 def test_binary_image_image(imgs, name, op):
     """2-band x 1-band with partial tile overlap: bounds-union, mask-union,
-    float64 promotion, broadcast — all at once."""
+    float64 promotion, broadcast — all at once. Different tile sets align
+    through a full outer join."""
     a, b, na, nb = imgs
-    got = _collect(op(a, b))
+    out = op(a, b)
+    assert "FullOuter" in _plan(out.df)
+    got = _collect(out)
     want = O.binary(op, na, nb, 2, 1, synth.TILE_PX)
     _assert_tiles_equal(got, want)
 
@@ -136,7 +140,7 @@ def test_render_uint8_chain(imgs):
     a, _, na, _ = imgs
     r = a.select(["B1"]).rescale((10.0, 70.0)).with_opacity(0.5)
     rendered = r.df.select(
-        "z", "x", "y", A.uint8_data(F.col("data"), 1).alias("data"), "mask"
+        "z", "x", "y", F.array(*A.uint8_data(F.col("data"), 1)).alias("data"), "mask"
     )
     got = {}
     for row in rendered.collect():
@@ -248,3 +252,69 @@ def test_export_sidecar_roundtrip_metadata(spark, imgs, tmp_path):
     back = Image.load(spark, path)
     assert back.n_bands == 2 and back.n_px == synth.TILE_PX
     assert (back.min_zoom, back.max_zoom) == (9, 14)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("op", ARITH + COMPARE)
+def test_same_source_op_matches_outer_join(spark, imgs, op):
+    """An op between two images of one source is one projection of that
+    source, with no join, and gives what the outer-join alignment gives
+    over the same rows (a second from_df over them is another source)."""
+    a, *_ = imgs
+    twin = Image.from_df(synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX)
+    same = getattr(a, op)(a.select(["B2"]))
+    joined = getattr(a, op)(twin.select(["B2"]))
+    assert "Join" not in _plan(same.df)
+    assert "FullOuter" in _plan(joined.df)
+    _assert_tiles_equal(_collect(same), _collect(joined))
+
+
+def test_same_source_chain_matches_outer_join(spark, imgs):
+    """abs / select / scalar chains mixed with same-source binary ops."""
+    a, *_ = imgs
+    twin = Image.from_df(synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX)
+
+    def chain(x, y):
+        d = abs(x - y.select(["B1"]) * 2.0)
+        return (d / (3.0 - y) + x.select([1, 0])).rescale((0.0, 50.0)).with_opacity(0.5)
+
+    same = chain(a, a)
+    assert "Join" not in _plan(same.df)
+    _assert_tiles_equal(_collect(same), _collect(chain(a, twin)))
+
+
+def test_tile_request_is_one_projection_of_the_scan(spark, tmp_path):
+    """The tile request for abs(img - img.select(["B3"])) * 2 over an
+    exported table plans as a projection of the parquet scan: no join, no
+    Exchange, the tile's x/y pushed into the scan; its pixels are the
+    numpy oracle's."""
+    rng = np.random.default_rng(5)
+    data = rng.integers(0, 200, size=(3, 32, 48)).astype(np.float64)
+    mask = np.where(rng.random((32, 48)) < 0.2, 0, 255)
+    path = str(tmp_path / "tiles")
+    Image.from_array(spark, data, 6, 10, 20, tile_side=16, mask=mask).export(path)
+    img = Image.load(spark, path)
+    expr = abs(img - img.select(["B3"])) * 2.0
+    tile = expr.tile(6, 11, 21)
+    plan = _plan(tile)
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert "EqualTo(x,11)" in plan and "EqualTo(y,21)" in plan, plan
+
+    tiles = {
+        (6, 10 + tx, 20 + ty): (
+            data[:, ty * 16 : (ty + 1) * 16, tx * 16 : (tx + 1) * 16].reshape(3, 256),
+            mask[ty * 16 : (ty + 1) * 16, tx * 16 : (tx + 1) * 16].reshape(256),
+        )
+        for ty in range(2)
+        for tx in range(3)
+    }
+    b3 = {k: (d[2:3], m) for k, (d, m) in tiles.items()}
+    want = O.scalar_op(
+        operator.mul, O.abs_(O.binary(operator.sub, tiles, b3, 3, 1, 256)), 2.0
+    )
+    got = _collect(Image.from_df(tile, 3, 256))
+    _assert_tiles_equal(got, {(6, 11, 21): want[(6, 11, 21)]})
+    assert expr.tile(6, 13, 21).count() == 0  # outside the tile set

@@ -104,25 +104,25 @@ def test_frame_is_a_local_relation_with_create_dataframe_rows(spark):
 
 
 def test_no_python_rdd_local_tables_outside_small():
-    """Tooling guard: the operator and plan layers build driver-side tables
-    only through _small.frame, so a createDataFrame over a Python list (a
-    Python-RDD scan on every read) cannot creep back in."""
+    """Tooling guard: the operator and plan layers and the Image API build
+    driver-side tables only through _small.frame, so a createDataFrame over
+    a Python list (a Python-RDD scan on every read) cannot creep back in."""
     import ast
     import pathlib
 
     import geoproc_spark
 
     root = pathlib.Path(geoproc_spark.__file__).parent
+    paths = [*(root / "operators").glob("*.py"), *(root / "plans").glob("*.py"), root / "image.py"]
     offenders = []
-    for sub in ("operators", "plans"):
-        for path in sorted((root / sub).glob("*.py")):
-            if path.name == "_small.py":
-                continue
-            for node in ast.walk(ast.parse(path.read_text())):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "createDataFrame"
-                ):
-                    offenders.append(f"{sub}/{path.name}:{node.lineno}")
+    for path in sorted(paths):
+        if path.name == "_small.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
     assert offenders == []
