@@ -94,23 +94,6 @@ def n_windows(width: int, height: int, window_size: int = WINDOW_SIZE) -> tuple[
     )
 
 
-def window_rect(
-    wid: int, width: int, height: int, window_size: int = WINDOW_SIZE
-) -> tuple[int, int, int, int]:
-    """Row-major window id -> (col_off, row_off, win_w, win_h). Edge windows
-    clip to the raster; usable both driver-side and as the scalar twin of
-    the SQL enumeration in Image.export_projected."""
-    wcols, _ = n_windows(width, height, window_size)
-    wc, wr = wid % wcols, wid // wcols
-    col_off, row_off = wc * window_size, wr * window_size
-    return (
-        col_off,
-        row_off,
-        min(window_size, width - col_off),
-        min(window_size, height - row_off),
-    )
-
-
 def out_xy_to_lonlat(x: np.ndarray, y: np.ndarray, crs: str):
     """Output-CRS coordinates -> (lon, lat) degrees (any registry CRS)."""
     return cells.to_lonlat_np(x, y, crs)

@@ -47,11 +47,6 @@ H32_P = 4294967291  # largest prime < 2^32 (functions/text.H32_P)
 _MAX_CHUNK_SHINGLES = 1 << 18
 
 
-def _md5_60(g: bytes) -> int:
-    """First 60 bits of md5 as int (== int(hexdigest[:15], 16))."""
-    return int.from_bytes(hashlib.md5(g).digest()[:8], "big") >> 4
-
-
 def _doc_hashes(text: str | None, k: int, distinct: bool) -> list[int] | None:
     """60-bit shingle hashes of one doc, in shingle order; None if the doc
     is too short to shingle (or null)."""
@@ -232,7 +227,7 @@ def doc_stats(docs: DataFrame, keep: tuple[str, ...] = ("doc_id",)) -> DataFrame
     """Per-doc token statistics in ONE Arrow pass: (keep..., n_chars,
     n_tokens, n_uniq, n_stop, max_token_len, n_dup_tokens, top_bigram_n).
 
-    Twin of functions/text.quality_metrics + repetition_metrics, which
+    Twin of oracle/text_hof.quality_metrics + repetition_metrics, which
     chain interpreted JVM HOFs (filter/transform/array_sort + an
     aggregate run-length fold) and re-evaluate split() per metric. Values
     are bit-identical (parity-pinned by test_textkern_parity), including

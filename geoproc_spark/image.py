@@ -881,7 +881,6 @@ class Image:
         import pandas as _pd
         from pyspark.sql import types as T
 
-        from .operators._cache import release, swap_cache
         from .sources import geotiff as _gt
 
         if window_size % 16:
@@ -921,9 +920,11 @@ class Image:
             ]
         )
         n_parts = max(1, (n_tiles + STREAM_PARTITION_TILES - 1) // STREAM_PARTITION_TILES)
-        chunks = swap_cache(
-            "export_cog_chunks",
-            joined.repartition(n_parts, "wid").groupBy("wid").applyInPandas(encode, out_schema),
+        chunks = (
+            joined.repartition(n_parts, "wid")
+            .groupBy("wid")
+            .applyInPandas(encode, out_schema)
+            .persist()
         )
         try:
             sizes = dict(
@@ -983,7 +984,7 @@ class Image:
                     f"tile stream wrote {int(written.sum())}/{n_tiles} tiles"
                 )
         finally:
-            release("export_cog_chunks")
+            chunks.unpersist()
         return spec
 
     def export(self, path: str, partition_zooms: bool = True, rows_per_file: int = 4096) -> None:

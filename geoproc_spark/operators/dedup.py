@@ -64,13 +64,6 @@ def _shingle_h32_expr(k: int = 3) -> str:
     )
 
 
-def doc_shingle_hashes(docs: DataFrame, k: int = 3) -> DataFrame:
-    """(doc_id, h32) per DISTINCT k-gram shingle — the exploded (long) form,
-    for callers that need the hash stream; the signature operators below
-    use the array form and never shuffle it."""
-    return docs.selectExpr("doc_id", f"explode({_shingle_h32_expr(k)}) AS h32")
-
-
 def minhash_signatures(docs: DataFrame, perms: list[tuple[int, int, int]]) -> DataFrame:
     """Wide signature row per doc: (doc_id, mh0..mh{n-1}) — Arrow+numpy
     kernel (functions/textkern), ZERO shuffles, ONE scan.
@@ -215,7 +208,6 @@ def connected_components(
     "batches": driver round-trips} for loop-shape assertions.
     """
     from . import _cache
-    from ._cache import swap_cache
 
     # edges are re-joined EVERY round: persist them, or each iteration
     # re-executes the caller's whole pair-generation lineage (LSH + jaccard
@@ -231,8 +223,7 @@ def connected_components(
     # via a union with a distinct-endpoints frame — a Union node defeats
     # InMemoryRelation substitution for its whole subtree in this Spark
     # build and would re-run the caller's pair pipeline per materialization.
-    edges = swap_cache(
-        "cc_edges",
+    edges = (
         pairs.selectExpr(
             "explode(array(named_struct('src', doc_a, 'dst', doc_b), "
             "named_struct('src', doc_b, 'dst', doc_a), "
@@ -240,7 +231,8 @@ def connected_components(
             "named_struct('src', doc_b, 'dst', doc_b))) AS e"
         )
         .select("e.src", "e.dst")
-        .repartition("src"),
+        .repartition("src")
+        .persist()
     )
     # the active set: only docs that have at least one edge propagate
     labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
@@ -282,12 +274,12 @@ def connected_components(
                 .agg(*aggs)
                 .withColumnRenamed("dst", "doc_id")
             )
-        # localCheckpoint (eager), NOT persist: each batch references the
-        # previous labels TWICE (nbr_min + outer join), so the LOGICAL plan
-        # doubles per round — persist caches data but not the plan, and a
-        # diameter-d graph OOMs the driver during analysis at ~2^d nodes
-        # (found by the chain test). The checkpoint truncates lineage to a
-        # leaf, keeping plan size CONSTANT per batch.
+        # localCheckpoint (eager), NOT persist: a round is one join + one
+        # aggregate over the previous labels, so without truncation each
+        # batch's plan grows by every round run so far (persist caches
+        # data, not the plan). The checkpoint cuts lineage to a leaf,
+        # keeping plan size CONSTANT per batch, and lets the superseded
+        # batch be released as soon as its successor materializes (below).
         old_batch = prev
         cur = cur.localCheckpoint()
         # labels only ever decrease, so `< _old` == "the final round of the
@@ -310,11 +302,11 @@ def connected_components(
             break
     if stats is not None:
         stats["rounds"], stats["batches"] = done, batches
-    # the FINAL batch's checkpoint backs the returned plan: keep it alive,
-    # but register it so the NEXT invocation releases it (the swap_cache
-    # single-copy contract, terminal for checkpoints — see _cache)
+    # the FINAL batch's checkpoint backs the returned plan, so it belongs to
+    # the result (the ContextCleaner reclaims it once the caller drops it);
+    # the edges are read by no plan once a batch has materialized
     if prev is not None:
-        _cache.adopt_checkpoint("cc_labels_final", prev)
+        edges.unpersist()
     active = prev.drop("_old") if prev is not None else labels
     # restore singletons: every id not in the active set is its own
     # component. The right side is the (tiny) near-dup label table —

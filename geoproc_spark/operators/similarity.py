@@ -169,10 +169,6 @@ def _cosine_cols(a: str, b: str):
     return cos(a, b)
 
 
-def with_cosine(pairs: DataFrame, a_col: str = "emb_a", b_col: str = "emb_b") -> DataFrame:
-    return pairs.withColumn("cos", _cosine_cols(a_col, b_col))
-
-
 # ----------------------------------------------------------------- IVF index
 def centroids_np(sample_mat: np.ndarray, n_lists: int = 16, iters: int = 3) -> np.ndarray:
     """Deterministic Lloyd k-means on a pre-normalized sample matrix — the
@@ -509,7 +505,7 @@ def quantize_int8(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
     # scale materialized as a COLUMN before the per-element lambda uses it:
     # an inline expression inside a higher-order lambda body is re-evaluated
     # per array element (the array_max fold would run d times per row ->
-    # O(d^2); see functions/text.repetition_metrics for the same trap).
+    # O(d^2); see oracle/text_hof.repetition_metrics for the same trap).
     staged = df.select(
         *keep,
         dbl.alias("_dbl"),

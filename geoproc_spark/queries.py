@@ -78,10 +78,6 @@ def _pages_with_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract.with_coords_arrow(pages)
 
 
-def _pages_cte() -> str:
-    return synth.pages_sql()
-
-
 # ------------------------------------------------------------ geo_extract_cells
 _xt12, _yt12 = cells.tile_sql("lat_s / 10000.0", "lon_s / 10000.0", EXTRACT_ZOOM)
 _cell12 = cells.cell_id_sql("lat_s / 10000.0", "lon_s / 10000.0", EXTRACT_ZOOM)
@@ -760,9 +756,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist bands before the self-join so the join's two sides read ONE
     # materialization (the same reuse lsh_candidate_pairs gets from its
     # own swap_cache)
-    bands = swap_cache(
-        "dedup_cc_bands", dd.lsh_bands(sigs, len(perms), rows_per_band=4)
-    )
+    bands = dd.lsh_bands(sigs, len(perms), rows_per_band=4).persist()
     cand = (
         bands.selectExpr("doc_id AS doc_a", "band_id", "band_key")
         .join(bands.selectExpr("doc_id AS doc_b", "band_id", "band_key"), ["band_id", "band_key"])
@@ -801,18 +795,11 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near's stragglers (guide §2.6).
     from concurrent.futures import ThreadPoolExecutor
 
-    from .operators import _cache as _ck
+    from .operators._cache import release_checkpoint_df
 
-    # swap_checkpoint (r6): same two checkpoints as before, but each
-    # invocation releases the previous one's blocks deterministically —
-    # without it every bench repeat pinned another near/exact/labels
-    # checkpoint until the ContextCleaner happened to GC the handles
-    # (profiled 156 -> 330 MB creep over 4 reps, see _cache).
     with ThreadPoolExecutor(max_workers=2) as pool:
-        near_ck, exact_ck = pool.map(
-            lambda kv: _ck.swap_checkpoint(kv[0], kv[1]),
-            (("dedup_cc_near", near), ("dedup_cc_exact", exact)),
-        )
+        near_ck, exact_ck = pool.map(lambda df: df.localCheckpoint(), (near, exact))
+    bands.unpersist()
     pairs = near_ck.unionByName(exact_ck).distinct()
     # check_every=3 (r6): near-dup graphs are near-cliques (diameter <= 2
     # by construction: members pair through a shared canonical), so 3
@@ -820,7 +807,13 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round) — running them as ONE batch halves the driver round-trips
     # (batches 2 -> 1, same 3 rounds). Chains still converge in O(log d)
     # batches via the doubling schedule (3, 6, 12, ...).
-    return dd.connected_components(base.select("doc_id"), pairs, check_every=3)
+    try:
+        return dd.connected_components(base.select("doc_id"), pairs, check_every=3)
+    finally:
+        # the pairs are consumed by the loop's first batch; the result reads
+        # only the label checkpoint and base (see operators/_cache)
+        release_checkpoint_df(near_ck)
+        release_checkpoint_df(exact_ck)
 
 
 @query(

@@ -31,8 +31,10 @@ ENGINE_CONF = {
     # less I/O.
     "spark.sql.parquet.compression.codec": "zstd",
     # Long-lived sessions run MANY queries: unreferenced broadcasts,
-    # shuffle files and RDD metadata are only released when the
-    # ContextCleaner sees a JVM GC, and the default periodic-GC interval
+    # shuffle files, RDD metadata and the localCheckpoints that back
+    # returned results (they belong to the result, see operators/_cache)
+    # are only released when the ContextCleaner sees a JVM GC — it is the
+    # release path for result-owned checkpoints. The default periodic-GC interval
     # (30 min) exceeds a whole bench/pipeline session — profiled as a
     # monotonic repeat-over-repeat slowdown that a forced System.gc()
     # reproducibly removed (r6). 2 min keeps the cleaner's backlog bounded

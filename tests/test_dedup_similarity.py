@@ -302,6 +302,72 @@ def test_connected_components_edge_cache_is_single_pass(spark):
     assert got == {(1, 2), (2, 1), (2, 3), (3, 2)}
 
 
+def _persistent_rdd_ids_above(spark, mark: int) -> set[int]:
+    return {i for i in spark.sparkContext._jsc.getPersistentRDDs().keySet() if i > mark}
+
+
+def _rdd_id_mark(spark) -> int:
+    """An RDD id no earlier RDD exceeds (ids are allocated in order)."""
+    return spark.sparkContext.emptyRDD()._jrdd.id()
+
+
+def _components(df) -> dict[int, int]:
+    return {r.doc_id: r.component for r in df.collect()}
+
+
+def test_connected_components_results_stay_live(spark):
+    """A result stays readable after a later call: the checkpoint behind
+    the first call's labels belongs to that result, so the second call
+    (over a different pair set) must not release it."""
+    ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    first = dd.connected_components(
+        ids, spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "doc_a long, doc_b long")
+    )
+    second = dd.connected_components(
+        ids, spark.createDataFrame([(2, 3), (5, 6), (6, 7)], "doc_a long, doc_b long")
+    )
+    assert _components(second) == {0: 0, 1: 1, 2: 2, 3: 2, 4: 4, 5: 5, 6: 5, 7: 5}
+    assert _components(first) == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6, 7: 7}
+
+
+def test_dedup_components_concurrent_calls(spark):
+    """Two dedup_components calls on two threads each return a result that,
+    collected after both calls, equals a single call's result."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from geoproc_spark import queries as Q
+
+    want = _components(Q.dedup_components(spark, SF_DIR))
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        results = list(pool.map(lambda _: Q.dedup_components(spark, SF_DIR), range(2)))
+    for df in results:
+        assert _components(df) == want
+
+
+def test_materializations_owned_by_call(spark):
+    """What a call leaves persisted is exactly what its result reads:
+    connected_components keeps only its final label checkpoint;
+    dedup_components keeps that plus the dedup base cache (swap_cache)
+    that the result reads doc_id from. Edges, bands and the near/exact
+    pair checkpoints are released before the call returns."""
+    from geoproc_spark import queries as Q
+
+    ids = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (3, 4)], "doc_a long, doc_b long")
+    mark = _rdd_id_mark(spark)
+    cc = dd.connected_components(ids, pairs)
+    assert len(_persistent_rdd_ids_above(spark, mark)) == 1
+    assert _components(cc) == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
+
+    # the second call repeats the first's plans: it must not evict the base
+    # cache it just asked for along with the first call's
+    for _ in range(2):
+        mark = _rdd_id_mark(spark)
+        out = Q.dedup_components(spark, SF_DIR)
+        assert len(_persistent_rdd_ids_above(spark, mark)) == 2
+        assert out.count() > 0
+
+
 def test_release_checkpoint_df_warns_on_non_checkpoint(spark):
     """Releasing a DataFrame that is not a localCheckpoint (analyzed root
     not a LogicalRDD) releases nothing and says so; a real checkpoint
@@ -336,7 +402,7 @@ def test_swap_cache_propagates_non_py4j_release_errors(spark):
         with pytest.raises(RuntimeError, match="unpersist failed"):
             _cache.swap_cache("swap_cache_test", spark.range(3))
     finally:
-        _cache.release("swap_cache_test")
+        _cache._LAST.pop("swap_cache_test").unpersist()
 
 
 def test_canonical_url_normalization_cases(spark):
@@ -391,7 +457,7 @@ def test_repetition_filter_drops_looping_text(spark):
     """The Gopher-style gate: a doc that is one phrase looping must be
     dropped; normal prose passes; a doc made of one repeated token is
     caught by the duplicate-token rule."""
-    from geoproc_spark.functions import text as TX
+    from geoproc_spark.oracle import text_hof as TX
 
     docs = spark.createDataFrame(
         [
@@ -415,7 +481,7 @@ def test_repetition_modal_count_matches_bruteforce(spark):
     import random
     from collections import Counter
 
-    from geoproc_spark.functions import text as TX
+    from geoproc_spark.oracle import text_hof as TX
 
     rng = random.Random(7)
     vocab = ["aa", "bb", "cc", "dd"]
@@ -444,7 +510,7 @@ def test_repetition_long_doc_is_not_quadratic(spark):
     task); the sorted run-length fold must finish in seconds."""
     import time
 
-    from geoproc_spark.functions import text as TX
+    from geoproc_spark.oracle import text_hof as TX
 
     n = 100_000
     body = " ".join(f"t{i % 50_021}" for i in range(n))

@@ -90,7 +90,7 @@ def test_doc_stats_matches_jvm_metrics(spark):
     column, including the JVM null conventions, on the fixture corpus plus
     hand-built edge docs (null text, empty text, single token, looping
     bigrams)."""
-    from geoproc_spark.functions import text as TX
+    from geoproc_spark.oracle import text_hof as TX
 
     synth.load_tables(spark, SF_DIR, ["documents"])
     edge = spark.createDataFrame(
