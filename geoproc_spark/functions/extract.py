@@ -25,13 +25,8 @@ compare against lives in `oracle/extract_oracle.py`.
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _NUM = r"-?\d+\.\d+"
 # The three alternatives are disjoint, so RE2's leftmost match is the first
@@ -86,26 +81,3 @@ def with_coords_arrow(df, text_col: str = "text", keep: list[str] | None = None)
     # mapInArrow is opaque to the optimizer: project first so only the
     # columns the output needs cross into Python
     return df.select(*keep, text_col).mapInArrow(run, out_schema)
-
-
-# ------------------------------------------------------------ HTML -> text
-# The input_hint corpus carries `html BINARY` next to `text` (BASELINE.json):
-# a pinned wrapper embedding the page text in <p>...</p> plus, on geotagged
-# pages, a geo.position meta tag (synth._HTML_SQL).
-_BODY_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
-
-
-@F.pandas_udf(T.StringType())
-def html_to_text_udf(html: pd.Series) -> pd.Series:
-    """Extracted text from HTML — the input_hint's per-url invariant: the
-    result must be byte-identical to the page's `text` column (the corpus
-    embeds text losslessly in <p>...</p>; non-greedy span for robustness)."""
-
-    def one(h):
-        if h is None:
-            return None
-        s = h.decode("utf-8") if isinstance(h, (bytes, bytearray)) else h
-        m = _BODY_RE.search(s)
-        return m.group(1) if m is not None else ""
-
-    return pd.Series([one(h) for h in html])

@@ -47,18 +47,6 @@ _WIN_DDL = "wid bigint, col_off int, row_off int, win_w int, win_h int"
 _WIN_SMALLER = "raise window_size or scale, or export smaller bounds"
 
 
-def _cog_block(plane, ws: int) -> bytes:
-    """One deflated GeoTIFF tile: a (h, w) float64 plane with NaN nodata,
-    padded to ws x ws."""
-    import zlib
-
-    import numpy as _np
-
-    blk = _np.zeros((ws, ws), dtype="<f8")
-    blk[: plane.shape[0], : plane.shape[1]] = plane
-    return zlib.compress(blk.tobytes(), 6)
-
-
 class Image:
     """A lazy multi-band tiled image: a tile source plus pixel expressions.
 
@@ -907,7 +895,9 @@ class Image:
                 {
                     "tile_idx": [b * tpb + wid for b in range(nb)],
                     "payload": [
-                        _cog_block(_np.where(valid, data[b].reshape(wh, ww), _np.nan), ws)
+                        _gt.encode_tile(
+                            _np.where(valid, data[b].reshape(wh, ww), _np.nan), (ws, ws), True
+                        )
                         for b in range(nb)
                     ],
                 }
@@ -935,7 +925,8 @@ class Image:
             for wid, _co, _ro, ww, wh in grid:
                 if wid not in reached:
                     if (wh, ww) not in nodata:
-                        nodata[(wh, ww)] = _cog_block(_np.full((wh, ww), _np.nan), ws)
+                        blank = _np.full((wh, ww), _np.nan)
+                        nodata[(wh, ww)] = _gt.encode_tile(blank, (ws, ws), True)
                     for b in range(nb):
                         fill[b * tpb + wid] = nodata[(wh, ww)]
             if len(sizes) + len(fill) != n_tiles:

@@ -49,21 +49,6 @@ def exact_dup_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_h32_expr(k: int = 3) -> str:
-    """Spark-SQL expression: ARRAY<BIGINT> of 32-bit-reduced hashes of each
-    DISTINCT k-gram shingle of `text` — a per-row higher-order expression,
-    no explode, no shuffle.
-
-    Shingles, not tokens: with a small vocabulary token sets of unrelated
-    docs overlap heavily and MinHash degenerates; the k-gram space is
-    |V|^k so random docs share almost nothing."""
-    sh = TX.shingles_sql_spark("split(text, ' ')", k)
-    return (
-        f"transform({sh}, g -> CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)"
-        f" % {TX.H32_P})"
-    )
-
-
 def minhash_signatures(docs: DataFrame, perms: list[tuple[int, int, int]]) -> DataFrame:
     """Wide signature row per doc: (doc_id, mh0..mh{n-1}) — Arrow+numpy
     kernel (functions/textkern), ZERO shuffles, ONE scan.

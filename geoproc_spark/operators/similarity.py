@@ -1,35 +1,39 @@
 """Similarity search over embedding columns (ARRAY<FLOAT>).
 
-Design: every hot path is a *broadcast-GEMM* — the small side (queries /
-hyperplanes / the near-dup reference block) is collected to a numpy matrix,
-broadcast once, and each Arrow batch of the scan side does one
-`batch_matrix @ small_matrix.T` inside mapInPandas. BLAS beats per-element
-JVM folds by orders of magnitude, and the scan side never shuffles.
+Design: every top-k path is one *broadcast probe*. The query table (the
+small side) is collected once through operators._small, its probe state is
+computed in numpy on the driver and broadcast, and ONE mapInPandas pass
+over the corpus keeps a partial top-k per query and Arrow batch; the scan
+side never shuffles, and a row_number window ranks the candidates.
 
-- `cosine_topk`: exact top-k. Per-batch partial top-k bounds the shuffle to
-  (q x k) rows per batch; a window rank finishes globally.
-- `random_hyperplane_buckets` + `ann_topk_lsh`: sign-LSH bucketing (seeded
-  deterministic planes) with optional hamming-1 multi-probe; exact re-rank
-  inside buckets. The scale path: bucket id doubles as partition key.
+- `cosine_topk`: exact top-k, one `batch_matrix @ queries.T` GEMM per batch.
+- `ann_topk_lsh` / `ivf_topk` / `probe_ivf_index`: bucketed ANN through one
+  kernel (`_bucket_topk`). The driver computes each query's probe keys —
+  its sign-LSH code (plus the hamming-1 codes under multi_probe) or its
+  `nprobe` nearest IVF lists; each corpus row finds its own bucket, meets
+  the queries probing that bucket through a sorted-key lookup, and each
+  pair is scored by a per-pair einsum over normalized rows.
 - `embedding_near_dups`: all pairs above a cosine threshold. Default is
   banded sign-LSH bucketing with the exact GEMM per bucket (fully
   distributed, no driver collect); the broadcast all-pairs kernel is the
   small-corpus fast path, chosen only under an explicit row-count hint.
 
-Dot products for the *bucketing* stay deterministic across partitionings
-(fixed plane matrix, row-wise GEMM); top-k ranks are stable because random
+Bucket keys stay deterministic across partitionings (fixed plane and
+centroid matrices, row-wise GEMM); top-k ranks are stable because random
 -embedding similarity gaps dwarf BLAS reduction-order noise.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import _small
 
 
 def _matrix(col: pd.Series) -> np.ndarray:
@@ -42,11 +46,41 @@ def _normalize(m: np.ndarray) -> np.ndarray:
     return m / n
 
 
-def _collect_matrix(df: DataFrame, id_col: str, emb_col: str = "embedding"):
-    rows = df.select(id_col, emb_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    return ids, mat
+_QUERIES_SMALLER = "the query table is the broadcast side: probe with fewer queries per call"
+
+
+def _collect_side(df: DataFrame, id_col: str, what: str, dim=0, instead=_QUERIES_SMALLER):
+    """(ids, raw float64 matrix) of a small side: one bounded driver
+    collect. No rows give a (0, dim) matrix, so driver-side numpy still
+    runs and the probe returns no rows."""
+    rows = _small.collect(df.select(id_col, "embedding"), what, instead)
+    mat = _matrix([r[1] for r in rows]) if rows else np.empty((0, dim))
+    return np.array([r[0] for r in rows], dtype=np.int64), mat
+
+
+def _ranked_probe(
+    corpus: DataFrame, state: tuple, score: Callable[[tuple, pd.DataFrame], pd.DataFrame], k: int
+) -> DataFrame:
+    """Broadcast `state` (query ids first), map every corpus Arrow batch
+    through `score` to its (qid, vec_id, cos) partial top-k, and keep the
+    global top k per qid."""
+    spark = corpus.sparkSession
+    if not len(state[0]):
+        return _small.frame(spark, [], "qid bigint, vec_id bigint, rank int", "top-k", "")
+    bc = spark.sparkContext.broadcast(state)
+
+    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        st = bc.value
+        for pdf in batches:
+            yield score(st, pdf)
+
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+    return (
+        corpus.mapInPandas(probe, "qid bigint, vec_id bigint, cos double")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "vec_id", "rank")
+    )
 
 
 def cosine_topk(
@@ -58,40 +92,63 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k neighbors: (qid, vec_id, rank). Self-matches excluded,
     ties broken by vec_id. Queries must be the small side (broadcast)."""
-    spark = corpus.sparkSession
-    qids, qmat = _collect_matrix(queries, qid_col)
-    bc = spark.sparkContext.broadcast((qids, _normalize(qmat)))
+    qids, qmat = _collect_side(queries, qid_col, "cosine_topk query table")
 
-    schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
+    def score(state: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        q_ids, q = state
+        c = _normalize(_matrix(pdf["embedding"]))
+        vids = pdf[vid_col].to_numpy(dtype=np.int64)
+        s = c @ q.T  # (batch, nq)
+        s[vids[:, None] == q_ids[None, :]] = -np.inf  # exclude self
+        kk = min(k, s.shape[0])
+        top = np.argpartition(-s, kk - 1, axis=0)[:kk]  # (kk, nq) partial
+        qi = np.repeat(q_ids[None, :], kk, axis=0).ravel()
+        vi = vids[top].ravel()
+        co = np.take_along_axis(s, top, axis=0).ravel()
+        keep = np.isfinite(co)
+        return pd.DataFrame({"qid": qi[keep], "vec_id": vi[keep], "cos": co[keep]})
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, q = bc.value
-        for pdf in batches:
-            c = _normalize(_matrix(pdf["embedding"]))
-            vids = pdf[vid_col].to_numpy(dtype=np.int64)
-            s = c @ q.T  # (batch, nq)
-            s[vids[:, None] == q_ids[None, :]] = -np.inf  # exclude self
-            kk = min(k, s.shape[0])
-            top = np.argpartition(-s, kk - 1, axis=0)[:kk]  # (kk, nq) partial
-            qi = np.repeat(q_ids[None, :], kk, axis=0).ravel()
-            vi = vids[top].ravel()
-            co = np.take_along_axis(s, top, axis=0).ravel()
-            keep = np.isfinite(co)
-            yield pd.DataFrame({"qid": qi[keep], "vec_id": vi[keep], "cos": co[keep]})
+    return _ranked_probe(corpus, (qids, _normalize(qmat)), score, k)
 
-    cand = corpus.mapInPandas(probe, schema)
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "rank")
-    )
+
+def _bucket_topk(
+    corpus: DataFrame,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    probe_keys: np.ndarray,
+    corpus_keys: Callable[[pd.DataFrame, np.ndarray], np.ndarray],
+    k: int,
+    emb_col: str = "embedding",
+) -> DataFrame:
+    """Top-k of each query over the corpus rows in the buckets it probes.
+
+    probe_keys: (n_queries, n_probes) distinct bucket keys per query.
+    corpus_keys(pdf, raw_matrix): the one bucket key of each corpus row.
+    A corpus row lives in one bucket, so each (query, row) pair is scored
+    at most once; the per-batch cut keeps k pairs per query in
+    (cos DESC, vec_id) order, the order the final rank uses."""
+    keys = probe_keys.ravel()
+    order = np.argsort(keys, kind="stable")
+    owner = np.repeat(np.arange(len(qids)), probe_keys.shape[1])[order]
+
+    def score(state: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        q_ids, q, keys, owner = state
+        m = _matrix(pdf[emb_col])
+        vids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        ck = corpus_keys(pdf, m)
+        lo = np.searchsorted(keys, ck, "left")
+        n = np.searchsorted(keys, ck, "right") - lo
+        ci = np.repeat(np.arange(len(ck)), n)  # corpus row of each pair
+        qi = owner[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())]
+        keep = vids[ci] != q_ids[qi]  # exclude self
+        ci, qi = ci[keep], qi[keep]
+        cos = np.einsum("ij,ij->i", q[qi], _normalize(m)[ci])
+        by = np.lexsort((vids[ci], -cos, qi))
+        ci, qi, cos = ci[by], qi[by], cos[by]
+        top = np.arange(len(qi)) - np.searchsorted(qi, qi) < k
+        return pd.DataFrame({"qid": q_ids[qi[top]], "vec_id": vids[ci[top]], "cos": cos[top]})
+
+    return _ranked_probe(corpus, (qids, _normalize(qmat), keys[order], owner), score, k)
 
 
 def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
@@ -99,21 +156,9 @@ def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def random_hyperplane_buckets(
-    df: DataFrame, planes: np.ndarray, emb_col: str = "embedding"
-) -> DataFrame:
-    """Add `bucket` = sign-LSH code (BIGINT): one GEMM per Arrow batch."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(planes, dtype=np.float64))
-    weights = (1 << np.arange(len(planes), dtype=np.int64))
-
-    @F.pandas_udf(T.LongType())
-    def code(emb: pd.Series) -> pd.Series:
-        p = bc.value
-        signs = (_matrix(emb) @ p.T) > 0
-        return pd.Series(signs @ weights)
-
-    return df.withColumn("bucket", code(emb_col))
+def _sign_codes(m: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Sign-LSH code (int64) of each row of a raw embedding matrix."""
+    return ((m @ planes.T) > 0) @ (1 << np.arange(len(planes), dtype=np.int64))
 
 
 def ann_topk_lsh(
@@ -129,44 +174,13 @@ def ann_topk_lsh(
     multi_probe: additionally probe every bucket at hamming distance 1 from
     the query's code — standard multi-probe LSH, recall for candidate
     volume without growing the bucket table."""
-    qb = random_hyperplane_buckets(
-        queries.select(F.col("qid"), F.col("embedding").alias("emb_q")), planes, "emb_q"
-    )
+    planes = np.asarray(planes, dtype=np.float64)
+    qids, qmat = _collect_side(queries, "qid", "ann_topk_lsh query table", planes.shape[1])
+    codes = _sign_codes(qmat, planes)[:, None]
     if multi_probe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << j).cast("bigint"))
-                for j in range(len(planes))
-            ],
-        )
-        qb = qb.withColumn("bucket", F.explode(probes))
-    cb = random_hyperplane_buckets(
-        corpus.select(F.col("vec_id"), F.col("embedding").alias("emb_c")), planes, "emb_c"
-    )
-    scored = (
-        cb.join(qb, "bucket")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", _cosine_cols("emb_q", "emb_c").alias("cos"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "rank")
-    )
-
-
-def _cosine_cols(a: str, b: str):
-    """Pairwise cosine as a pandas UDF over two embedding columns."""
-
-    @F.pandas_udf(T.DoubleType())
-    def cos(ea: pd.Series, eb: pd.Series) -> pd.Series:
-        ma = _normalize(_matrix(ea))
-        mb = _normalize(_matrix(eb))
-        return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-    return cos(a, b)
+        codes = np.hstack([codes, codes ^ (1 << np.arange(len(planes), dtype=np.int64))])
+    corpus = corpus.select("vec_id", "embedding")
+    return _bucket_topk(corpus, qids, qmat, codes, lambda _, m: _sign_codes(m, planes), k)
 
 
 # ----------------------------------------------------------------- IVF index
@@ -193,26 +207,28 @@ def ivf_centroids(
     id (seedless — the sample choice IS the seed), few Lloyd iterations,
     driver-side numpy. At warehouse scale the sample is a cheap LIMIT scan;
     training cost is independent of corpus size."""
-    rows = corpus.orderBy("vec_id").limit(sample).collect()
-    m = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    return centroids_np(m, n_lists=n_lists, iters=iters)
+    rows = _small.collect(
+        corpus.orderBy("vec_id").limit(sample).select("embedding"),
+        "ivf_centroids training sample",
+        "lower `sample`",
+    )
+    return centroids_np(_matrix([r[0] for r in rows]), n_lists=n_lists, iters=iters)
 
 
-def ivf_assign(df: DataFrame, centroids: np.ndarray, emb_col: str = "embedding", n_lists: int = 1) -> DataFrame:
-    """Add `list_id` = nearest centroid (or explode into the `n_lists`
-    nearest for multi-probe query sides). One GEMM per Arrow batch."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
+def _nearest_lists(m: np.ndarray, centroids: np.ndarray, n: int) -> np.ndarray:
+    """The `n` nearest IVF lists of each row of a raw embedding matrix."""
+    return np.argsort(-(_normalize(m) @ centroids.T), axis=1)[:, :n]
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def lists(emb: pd.Series) -> pd.Series:
-        c = bc.value
-        s = _normalize(_matrix(emb)) @ c.T
-        top = np.argsort(-s, axis=1)[:, :n_lists].astype(np.int32)
-        return pd.Series(list(top))
 
-    out = df.withColumn("_lists", lists(emb_col))
-    return out.withColumn("list_id", F.explode("_lists")).drop("_lists")
+def ivf_assign(df: DataFrame, centroids: np.ndarray, emb_col: str = "embedding") -> DataFrame:
+    """Add `list_id` = nearest centroid. One GEMM per Arrow batch."""
+    bc = df.sparkSession.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
+
+    @F.pandas_udf(T.IntegerType())
+    def nearest(emb: pd.Series) -> pd.Series:
+        return pd.Series(_nearest_lists(_matrix(emb), bc.value, 1)[:, 0].astype(np.int32))
+
+    return df.withColumn("list_id", nearest(emb_col))
 
 
 def write_ivf_index(
@@ -233,33 +249,15 @@ def probe_ivf_index(
     """ANN over a persisted IVF index table: assign queries to their nprobe
     lists, scan ONLY those partitions, exact cosine re-rank within.
 
-    The probed list ids are collected (the query side is the small side by
-    definition, same as cosine_topk's broadcast) and pushed as a LITERAL
-    partition filter — static pruning the scan shows in PartitionFilters,
-    no reliance on runtime DPP."""
-    from ._cache import swap_cache
-
-    qb = swap_cache(
-        "ivf_probe_q",
-        ivf_assign(
-            queries.select(F.col("qid"), F.col("embedding").alias("emb_q")),
-            centroids,
-            "emb_q",
-            n_lists=nprobe,
-        ),
-    )
-    probed = sorted({r["list_id"] for r in qb.select("list_id").distinct().collect()})
-    cb = spark.read.parquet(path).filter(F.col("list_id").isin(probed))
-    scored = (
-        cb.join(qb, "list_id")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", _cosine_cols("emb_q", "emb_c").alias("cos"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "rank")
+    The probed list ids come from the collected query side and are pushed
+    as a LITERAL partition filter — static pruning the scan shows in
+    PartitionFilters, no reliance on runtime DPP."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    qids, qmat = _collect_side(queries, "qid", "probe_ivf_index query table", cents.shape[1])
+    lists = _nearest_lists(qmat, cents, nprobe)
+    scan = spark.read.parquet(path).filter(F.col("list_id").isin(np.unique(lists).tolist()))
+    return _bucket_topk(
+        scan, qids, qmat, lists, lambda pdf, _: pdf["list_id"].to_numpy(np.int64), k, "emb_c"
     )
 
 
@@ -274,26 +272,12 @@ def ivf_topk(
     lists — at scale, the table's partition key); queries probe their
     `nprobe` nearest lists; exact cosine re-rank within. (qid, vec_id, rank).
     """
-    cb = ivf_assign(
-        corpus.select(F.col("vec_id"), F.col("embedding").alias("emb_c")), centroids, "emb_c"
-    )
-    qb = ivf_assign(
-        queries.select(F.col("qid"), F.col("embedding").alias("emb_q")),
-        centroids,
-        "emb_q",
-        n_lists=nprobe,
-    )
-    scored = (
-        cb.join(qb, "list_id")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", _cosine_cols("emb_q", "emb_c").alias("cos"))
-        # no dedup needed: each corpus vector lives in exactly one list
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "rank")
+    cents = np.asarray(centroids, dtype=np.float64)
+    qids, qmat = _collect_side(queries, "qid", "ivf_topk query table", cents.shape[1])
+    corpus = corpus.select("vec_id", "embedding")
+    lists = _nearest_lists(qmat, cents, nprobe)
+    return _bucket_topk(
+        corpus, qids, qmat, lists, lambda _, m: _nearest_lists(m, cents, 1)[:, 0], k
     )
 
 
@@ -465,9 +449,13 @@ def embedding_near_dups_broadcast(corpus: DataFrame, threshold: float = 0.95) ->
     """Exact all-pairs kernel for small corpora: broadcast the corpus
     matrix, one GEMM per Arrow batch. OOMs beyond ~10^5-10^6 vectors — the
     caller (embedding_near_dups) only picks this under a size hint."""
-    spark = corpus.sparkSession
-    ids, mat = _collect_matrix(corpus, "vec_id")
-    bc = spark.sparkContext.broadcast((ids, _normalize(mat)))
+    ids, mat = _collect_side(
+        corpus,
+        "vec_id",
+        "embedding_near_dups_broadcast corpus",
+        instead="drop the corpus_rows hint to take the distributed banded-LSH path",
+    )
+    bc = corpus.sparkSession.sparkContext.broadcast((ids, _normalize(mat)))
 
     schema = T.StructType(
         [T.StructField("vec_a", T.LongType()), T.StructField("vec_b", T.LongType())]

@@ -13,7 +13,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..functions import text as TX
-from ..operators.dedup import _shingle_h32_expr
+
+
+def _shingle_h32_expr(k: int = 3) -> str:
+    """Spark-SQL expression: ARRAY<BIGINT> of 32-bit-reduced hashes of each
+    DISTINCT k-gram shingle of `text` — a per-row higher-order expression,
+    no explode, no shuffle.
+
+    Shingles, not tokens: with a small vocabulary token sets of unrelated
+    docs overlap heavily and MinHash degenerates; the k-gram space is
+    |V|^k so random docs share almost nothing."""
+    sh = TX.shingles_sql_spark("split(text, ' ')", k)
+    return (
+        f"transform({sh}, g -> CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)"
+        f" % {TX.H32_P})"
+    )
 
 
 def minhash_signatures_hof(docs: DataFrame, perms: list[tuple[int, int, int]]) -> DataFrame:

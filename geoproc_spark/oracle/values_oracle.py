@@ -96,7 +96,7 @@ def ivf_topk_values_sql(
     for qi, qid in enumerate(qids.tolist()):
         cand = np.isin(corpus_list, q_lists[qi]) & (vid != qid)
         cv = vid[cand]
-        # per-pair einsum, exactly like _cosine_cols (not a GEMM)
+        # per-pair einsum, exactly like similarity._bucket_topk (not a GEMM)
         qn = np.repeat(norm[vid == qid], len(cv), axis=0)
         cos = np.einsum("ij,ij->i", qn, norm[cand])
         sel = np.lexsort((cv, -cos))[:k]
@@ -144,7 +144,7 @@ def lsh_topk_values_sql(
         cv = vid[cand]
         if not len(cv):
             continue
-        # per-pair einsum, exactly like _cosine_cols (not a GEMM)
+        # per-pair einsum, exactly like similarity._bucket_topk (not a GEMM)
         qn = np.repeat(norm[qi : qi + 1], len(cv), axis=0)
         cos = np.einsum("ij,ij->i", qn, norm[cand])
         sel = np.lexsort((cv, -cos))[:k]

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from . import synth
 from .functions import cells, extract
+from .operators import _small
 from .operators import knn as knn_op
 from .operators import spatial_join as sj
 from .operators import tiles as tiles_op
@@ -321,8 +322,8 @@ SELECT CAST(qid AS BIGINT) AS qid, page_id, rank FROM r WHERE rank <= k
 def geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact kNN via cell-ring expansion; matches brute force by construction."""
     pages = synth.pages_df(spark, sf_dir).select("page_id", "lat_s", "lon_s")
-    qrows = synth.knn_query_points()
-    queries = spark.createDataFrame(qrows, "qid long, qlat_s long, qlon_s long, k int")
+    ddl = "qid long, qlat_s long, qlon_s long, k int"
+    queries = _small.frame(spark, synth.knn_query_points(), ddl, "knn query points", "fewer points")
     return knn_op.knn_join(queries, pages)
 
 
@@ -989,8 +990,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH ANN with hamming-1 multi-probe (the last first-class
     operator family without a CORRECTNESS row in r02): seeded deterministic
-    hyperplanes, bucket equi-join, exact cosine re-rank within probed
-    buckets. Recall vs brute force is test-pinned (test_dedup_similarity);
+    hyperplanes, one broadcast probe of the query codes, exact cosine
+    re-rank within probed buckets. Recall vs brute force is test-pinned
+    (test_dedup_similarity);
     CORRECTNESS oracle: an independent numpy replica (same planes, codes,
     probe set and tie-break) emitted as VALUES —
     oracle/values_oracle.lsh_topk_values_sql. The embedding dimension comes
@@ -1585,7 +1587,8 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("vc"),
     )
-    tiers = spark.createDataFrame(RANGE_TIERS, "tier_id int, lo long, hi long")
+    ddl = "tier_id int, lo long, hi long"
+    tiers = _small.frame(spark, RANGE_TIERS, ddl, "range tiers", "fewer tiers")
     return rj.range_join(ev, tiers, "vc", "lo", "hi", bucket_width=256).select(
         "event_id", "tier_id"
     )
@@ -1782,9 +1785,12 @@ def tile_export_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .oracle import values_oracle as _VO
 
     cases = _VO.export_grid_cases()
-    cdf = spark.createDataFrame(
+    cdf = _small.frame(
+        spark,
         [(gid, list(b), scale, crs) for gid, b, scale, crs in cases],
         "grid_id int, bounds array<double>, scale double, crs string",
+        "export grid cases",
+        "fewer cases",
     )
 
     schema = T.StructType(

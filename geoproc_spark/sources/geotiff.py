@@ -226,29 +226,35 @@ def read_geotiff(raw: bytes) -> dict:
     return {"data": data, "mask": mask, "bounds": bounds, "crs": crs, "nodata": nodata}
 
 
+def encode_tile(plane: np.ndarray, tile: tuple[int, int], compress: bool) -> bytes:
+    """One tile payload: a (h, w) float64 plane padded to full (th, tw) with
+    zeros per TIFF 6.0, deflated with stdlib zlib when `compress`. Pure
+    function of the pixel block: the distributed single-file export
+    compresses tiles inside executor tasks and only streams the finished
+    payloads."""
+    tw, th = tile
+    blk = np.zeros((th, tw), dtype="<f8")
+    blk[: plane.shape[0], : plane.shape[1]] = plane
+    payload = blk.tobytes()
+    if compress:
+        import zlib
+
+        payload = zlib.compress(payload, 6)
+    return payload
+
+
 def encode_tile_chunks(arr: np.ndarray, tile: tuple[int, int], compress: bool):
-    """Band-major (PlanarConfiguration=2) tile payloads for (bands, H, W)
-    float64 — each tile padded to full (th, tw) with zeros per TIFF 6.0,
-    deflated with stdlib zlib when `compress`. Pure function of the pixel
-    block: the distributed single-file export compresses tiles inside
-    executor tasks and only streams the finished payloads."""
+    """Band-major (PlanarConfiguration=2) `encode_tile` payloads for
+    (bands, H, W) float64."""
     nb, h, w = arr.shape
     tw, th = tile
     ta, td = (w + tw - 1) // tw, (h + th - 1) // th
-    chunks = []
-    for b in range(nb):
-        for tyi in range(td):
-            for txi in range(ta):
-                blk = np.zeros((th, tw), dtype="<f8")
-                ys, xs = tyi * th, txi * tw
-                sub = arr[b, ys:min(ys + th, h), xs:min(xs + tw, w)]
-                blk[: sub.shape[0], : sub.shape[1]] = sub
-                payload = blk.tobytes()
-                if compress:
-                    import zlib
-
-                    payload = zlib.compress(payload, 6)
-                chunks.append(payload)
+    chunks = [
+        encode_tile(arr[b, ty * th : (ty + 1) * th, tx * tw : (tx + 1) * tw], tile, compress)
+        for b in range(nb)
+        for ty in range(td)
+        for tx in range(ta)
+    ]
     return chunks, ta * td
 
 

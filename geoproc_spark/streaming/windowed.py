@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import _small
+
 
 def hourly_agg(ev: DataFrame) -> DataFrame:
     """The shared aggregation — identical for batch and streaming inputs."""
@@ -82,7 +84,11 @@ def run_hourly_stream(
 ) -> DataFrame:
     """Run the hourly aggregate as a stream over a parquet directory with an
     availableNow trigger (process-everything-then-stop), checkpointed.
-    Returns the result as a DataFrame (from the in-memory sink)."""
+
+    Returns the result as a local relation that owns its rows: the memory
+    sink's rows are taken (no Spark job — they already live on the
+    driver) and its `out_table` view is dropped, so repeated calls leave
+    no sink behind."""
     import os
 
     schema = spark.read.parquet(events_dir).schema
@@ -107,7 +113,11 @@ def run_hourly_stream(
             .start()
         )
         q.awaitTermination()
-    return spark.table(out_table)
+    sink = spark.table(out_table)
+    what, instead = "hourly stream result", "use run_hourly_stream_append"
+    rows = _small.collect(sink, what, instead)
+    spark.catalog.dropTempView(out_table)
+    return _small.frame(spark, rows, sink.schema, what, instead)
 
 
 def run_hourly_stream_append(

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators import _small
+
 SCALE = 10_000
 
 # (name, lat_s, lon_s) — fixed hot-spot centers (FIXTURES.md T4).
@@ -287,7 +289,7 @@ def tiles_df(spark: SparkSession, img: str) -> DataFrame:
         for x in range(x0, x1 + 1)
         for y in range(TILE_YRANGE[0], TILE_YRANGE[1] + 1)
     ]
-    kdf = spark.createDataFrame(keys, "z int, x int, y int")
+    kdf = _small.frame(spark, keys, "z int, x int, y int", "tile key table", "shrink TILE_XRANGE")
     bands = ", ".join(
         f"transform(sequence(0, {TILE_PX - 1}), "
         f"i -> CAST({tile_pixel_sql('x', 'y', 'i', TILE_SALT[img] + k)} AS DOUBLE))"

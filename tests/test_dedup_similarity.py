@@ -101,12 +101,13 @@ def test_lsh_ann_recall_vs_brute_force(spark):
 
 def test_embedding_neardup_bucketed_no_driver_collect(spark, monkeypatch):
     """The default near-dup path must never collect the corpus to the
-    driver (the 100 TB scale killer): poison _collect_matrix and run it."""
+    driver (the 100 TB scale killer): poison the module's one driver-collect
+    path (_small.collect) and run it."""
 
     def boom(*a, **k):
         raise AssertionError("corpus collected to driver")
 
-    monkeypatch.setattr(sim, "_collect_matrix", boom)
+    monkeypatch.setattr(sim._small, "collect", boom)
     corpus = synth.emb_dup_df(spark, SF_DIR)
     got = {(r.vec_a, r.vec_b) for r in sim.embedding_near_dups(corpus, 0.95).collect()}
     planted = {

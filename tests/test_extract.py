@@ -83,7 +83,7 @@ def test_html_to_text_byte_identical(spark):
     byte for byte, for every page."""
     pages = synth.pages_df(spark, SF_DIR)
     bad = pages.select(
-        "text", extract.html_to_text_udf("html").alias("t2")
+        "text", extract_oracle.html_to_text_udf("html").alias("t2")
     ).filter(~F.col("text").eqNullSafe(F.col("t2")))
     assert bad.count() == 0
 

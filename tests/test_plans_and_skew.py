@@ -265,6 +265,18 @@ def test_asof_join_single_shuffle_no_join_node(spark):
     assert any(r["asof_event_id"] is not None for r in rows)
 
 
+def test_ann_paths_are_one_probe(spark):
+    """The bucketed ANN queries are one broadcast probe, like ann_cosine_topk:
+    a mapInPandas pass over the corpus and the rank window, with no bucket
+    join and no per-pair pandas UDF."""
+    for name in ("ann_lsh_topk", "ann_ivf_topk"):
+        df = Q.SPARK_QUERIES[name](spark, SF_DIR)
+        df.collect()
+        plan = _plan(df)
+        assert "MapInPandas" in plan, plan
+        assert "Join" not in plan and "ArrowEvalPython" not in plan, plan
+
+
 def test_asof_join_atomic_carry_and_null_guards(spark):
     """Review-fix pins: (a) right id + values are carried ATOMICALLY (a
     NULL right value must not tear the row by pulling an older value);

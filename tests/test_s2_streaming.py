@@ -89,6 +89,24 @@ def test_stream_equals_batch(spark, tmp_path):
     w = sorted(map(tuple, want.collect()))
     assert g == w and len(g) > 0
 
+
+def test_hourly_stream_calls_leave_no_sink_view(spark):
+    """Each events_hourly_stream call drops its memory-sink view and returns
+    a result that owns its rows; every result still equals the batch
+    hourly_agg."""
+    from geoproc_spark import queries as Q
+    from geoproc_spark.streaming import windowed
+    from tests.conftest import SF_DIR
+
+    batch = windowed.hourly_agg(spark.read.parquet(f"{SF_DIR}/events.parquet"))
+    want = sorted(map(tuple, batch.collect()))
+    results = [Q.SPARK_QUERIES["events_hourly_stream"](spark, SF_DIR) for _ in range(3)]
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("hourly_stream_")]
+    assert views == []
+    for got in results:
+        assert sorted(map(tuple, got.collect())) == want
+
+
 def test_stream_append_watermark_closes_windows(spark, tmp_path):
     """VERDICT r04 #2 — the production shape: watermarked APPEND-mode agg
     into a file sink over SEVERAL micro-batches (time-ordered files +

@@ -8,7 +8,9 @@ from geoproc_spark import synth
 from geoproc_spark.image import Image
 from geoproc_spark.operators import _small
 from geoproc_spark.operators import knn as knn_op
+from geoproc_spark.operators import similarity as sim
 from geoproc_spark.operators import spatial_join as sj
+from tests.conftest import SF_DIR
 
 
 def test_knn_oversized_query_table_fails_cleanly(spark, monkeypatch):
@@ -46,6 +48,35 @@ def test_spatial_join_oversized_polygon_layer_fails_cleanly(spark, monkeypatch):
         )
     )
     assert got == want
+
+
+@pytest.mark.parametrize("n_queries", [3, 0], ids=["oversized", "empty"])
+def test_ann_query_table_guarded(spark, monkeypatch, tmp_path, n_queries):
+    """Every top-k similarity path collects its query table through
+    _small.collect: above MAX_ROWS it raises naming the bound, and an empty
+    query table gives an empty result."""
+    synth.load_tables(spark, SF_DIR, ["embeddings"])
+    emb = spark.table("embeddings")
+    cents = sim.ivf_centroids(emb, n_lists=4)
+    index = str(tmp_path / "ivf_index")
+    sim.write_ivf_index(emb, cents, index)
+    planes = sim.hyperplanes(dim=64, n_planes=4)
+    queries = emb.filter(f"vec_id < {n_queries}").selectExpr("vec_id AS qid", "embedding")
+    paths = {
+        "cosine_topk": lambda: sim.cosine_topk(queries, emb, k=3),
+        "ann_topk_lsh": lambda: sim.ann_topk_lsh(queries, emb, planes, k=3, multi_probe=True),
+        "ivf_topk": lambda: sim.ivf_topk(queries, emb, cents, k=3, nprobe=2),
+        "probe_ivf_index": lambda: sim.probe_ivf_index(
+            spark, index, queries, cents, k=3, nprobe=2
+        ),
+    }
+    monkeypatch.setattr(_small, "MAX_ROWS", 2)
+    for name, run in paths.items():
+        if n_queries > _small.MAX_ROWS:
+            with pytest.raises(ValueError, match=rf"{name} query table: .*_small\.MAX_ROWS"):
+                run()
+        else:
+            assert run().collect() == [], name
 
 
 def test_projected_windows_oversized_grid_fails_before_any_job(spark, monkeypatch):
@@ -104,16 +135,21 @@ def test_frame_is_a_local_relation_with_create_dataframe_rows(spark):
 
 
 def test_no_python_rdd_local_tables_outside_small():
-    """Tooling guard: the operator and plan layers and the Image API build
-    driver-side tables only through _small.frame, so a createDataFrame over
-    a Python list (a Python-RDD scan on every read) cannot creep back in."""
+    """Tooling guard: the operator and plan layers, the Image API and the
+    driver-query layer (queries.py, synth.py) build driver-side tables only
+    through _small.frame, so a createDataFrame over a Python list (a
+    Python-RDD scan on every read) cannot creep back in."""
     import ast
     import pathlib
 
     import geoproc_spark
 
     root = pathlib.Path(geoproc_spark.__file__).parent
-    paths = [*(root / "operators").glob("*.py"), *(root / "plans").glob("*.py"), root / "image.py"]
+    paths = [
+        *(root / "operators").glob("*.py"),
+        *(root / "plans").glob("*.py"),
+        *(root / name for name in ("image.py", "queries.py", "synth.py")),
+    ]
     offenders = []
     for path in sorted(paths):
         if path.name == "_small.py":
