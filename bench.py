@@ -118,17 +118,9 @@ def main() -> None:
             F.round(F.col("lat") * 10000).cast("bigint").alias("lat_s"),
             F.round(F.col("lon") * 10000).cast("bigint").alias("lon_s"),
         )
-        # row-count hint from parquet footers (the manifest path at scale) —
-        # saves knn_join its density-seed count() job
-        n_pts = sum(
-            pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
-            for dp, _d, fs in os.walk(f"{work}/pts")
-            for f in fs
-            if f.endswith(".parquet")
-        )
         spark.catalog.clearCache()
         t0 = time.time()
-        materialize(knn_op.knn_join(queries_df, rep_pages, n_pages=n_pts, k_max=5))
+        materialize(knn_op.knn_join(queries_df, rep_pages, k_max=5))
         return time.time() - t0
 
     # ---------------- the suite: repeats INTERLEAVED across queries

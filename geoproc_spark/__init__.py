@@ -10,7 +10,7 @@ over web-page corpora:
   column expressions)
 - point-in-polygon spatial joins (covering-cell equi-join + exact
   ray-cast refine, salting for hot cells)
-- kNN via cell-ring expansion with exact top-k semantics
+- exact kNN as one broadcast top-k pass (partition-local top-k, one merge)
 - raster<->vector tiling with geoproc-parity image algebra
   (float64 promotion, mask union via np.maximum — see
   /root/reference/geoproc/server/image.py:295-315)

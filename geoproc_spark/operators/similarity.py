@@ -1,10 +1,12 @@
 """Similarity search over embedding columns (ARRAY<FLOAT>).
 
-Design: every top-k path is one *broadcast probe*. The query table (the
-small side) is collected once through operators._small, its probe state is
-computed in numpy on the driver and broadcast, and ONE mapInPandas pass
-over the corpus keeps a partial top-k per query and Arrow batch; the scan
-side never shuffles, and a row_number window ranks the candidates.
+Design: every top-k path is one *broadcast probe* (operators._small.
+ranked_probe, the tail knn_join shares). The query table (the small side)
+is collected once through operators._small, its probe state is computed in
+numpy on the driver and broadcast, and ONE mapInPandas pass over the corpus
+keeps a partial top-k per query and scorer block (at most
+_small.PAIR_BUDGET values); the scan side never shuffles, and a row_number
+window ranks the candidates.
 
 - `cosine_topk`: exact top-k, one `batch_matrix @ queries.T` GEMM per batch.
 - `ann_topk_lsh` / `ivf_topk` / `probe_ivf_index`: bucketed ANN through one
@@ -58,29 +60,11 @@ def _collect_side(df: DataFrame, id_col: str, what: str, dim=0, instead=_QUERIES
     return np.array([r[0] for r in rows], dtype=np.int64), mat
 
 
-def _ranked_probe(
-    corpus: DataFrame, state: tuple, score: Callable[[tuple, pd.DataFrame], pd.DataFrame], k: int
-) -> DataFrame:
-    """Broadcast `state` (query ids first), map every corpus Arrow batch
-    through `score` to its (qid, vec_id, cos) partial top-k, and keep the
-    global top k per qid."""
-    spark = corpus.sparkSession
-    if not len(state[0]):
-        return _small.frame(spark, [], "qid bigint, vec_id bigint, rank int", "top-k", "")
-    bc = spark.sparkContext.broadcast(state)
+_TOPK_SCHEMA = "qid bigint, vec_id bigint, cos double"
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        st = bc.value
-        for pdf in batches:
-            yield score(st, pdf)
 
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        corpus.mapInPandas(probe, "qid bigint, vec_id bigint, cos double")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "rank")
-    )
+def _by_cos() -> list:
+    return [F.col("cos").desc(), F.col("vec_id").asc()]
 
 
 def cosine_topk(
@@ -94,21 +78,23 @@ def cosine_topk(
     ties broken by vec_id. Queries must be the small side (broadcast)."""
     qids, qmat = _collect_side(queries, qid_col, "cosine_topk query table")
 
-    def score(state: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(state: tuple, pdf: pd.DataFrame, budget: int) -> Iterator[pd.DataFrame]:
         q_ids, q = state
         c = _normalize(_matrix(pdf["embedding"]))
         vids = pdf[vid_col].to_numpy(dtype=np.int64)
-        s = c @ q.T  # (batch, nq)
-        s[vids[:, None] == q_ids[None, :]] = -np.inf  # exclude self
-        kk = min(k, s.shape[0])
-        top = np.argpartition(-s, kk - 1, axis=0)[:kk]  # (kk, nq) partial
-        qi = np.repeat(q_ids[None, :], kk, axis=0).ravel()
-        vi = vids[top].ravel()
-        co = np.take_along_axis(s, top, axis=0).ravel()
-        keep = np.isfinite(co)
-        return pd.DataFrame({"qid": qi[keep], "vec_id": vi[keep], "cos": co[keep]})
+        for rs, qs in _small.blocks(len(vids), len(q_ids), budget):
+            v = vids[rs]
+            s = c[rs] @ q[qs].T  # (rows, queries) of this block
+            s[v[:, None] == q_ids[None, qs]] = -np.inf  # exclude self
+            kk = min(k, s.shape[0])
+            top = np.argpartition(-s, kk - 1, axis=0)[:kk]  # (kk, queries) partial
+            qi = np.repeat(q_ids[None, qs], kk, axis=0).ravel()
+            vi = v[top].ravel()
+            co = np.take_along_axis(s, top, axis=0).ravel()
+            keep = np.isfinite(co)
+            yield pd.DataFrame({"qid": qi[keep], "vec_id": vi[keep], "cos": co[keep]})
 
-    return _ranked_probe(corpus, (qids, _normalize(qmat)), score, k)
+    return _small.ranked_probe(corpus, (qids, _normalize(qmat)), score, _TOPK_SCHEMA, _by_cos(), k)
 
 
 def _bucket_topk(
@@ -125,30 +111,41 @@ def _bucket_topk(
     probe_keys: (n_queries, n_probes) distinct bucket keys per query.
     corpus_keys(pdf, raw_matrix): the one bucket key of each corpus row.
     A corpus row lives in one bucket, so each (query, row) pair is scored
-    at most once; the per-batch cut keeps k pairs per query in
-    (cos DESC, vec_id) order, the order the final rank uses."""
+    at most once; the per-block cut keeps k pairs per query in
+    (cos DESC, vec_id) order, the order the final rank uses. A block holds
+    at most `budget` pair x dimension values: the gathered einsum operands
+    are the largest arrays."""
     keys = probe_keys.ravel()
     order = np.argsort(keys, kind="stable")
     owner = np.repeat(np.arange(len(qids)), probe_keys.shape[1])[order]
 
-    def score(state: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(state: tuple, pdf: pd.DataFrame, budget: int) -> Iterator[pd.DataFrame]:
         q_ids, q, keys, owner = state
         m = _matrix(pdf[emb_col])
+        cn = _normalize(m)
         vids = pdf["vec_id"].to_numpy(dtype=np.int64)
         ck = corpus_keys(pdf, m)
         lo = np.searchsorted(keys, ck, "left")
         n = np.searchsorted(keys, ck, "right") - lo
-        ci = np.repeat(np.arange(len(ck)), n)  # corpus row of each pair
-        qi = owner[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())]
-        keep = vids[ci] != q_ids[qi]  # exclude self
-        ci, qi = ci[keep], qi[keep]
-        cos = np.einsum("ij,ij->i", q[qi], _normalize(m)[ci])
-        by = np.lexsort((vids[ci], -cos, qi))
-        ci, qi, cos = ci[by], qi[by], cos[by]
-        top = np.arange(len(qi)) - np.searchsorted(qi, qi) < k
-        return pd.DataFrame({"qid": q_ids[qi[top]], "vec_id": vids[ci[top]], "cos": cos[top]})
+        end = np.cumsum(n)  # pairs of rows 0..i
+        total = int(end[-1]) if len(end) else 0
+        step = max(1, budget // max(q.shape[1], 1))
+        for s in range(0, total, step):
+            p = np.arange(s, min(s + step, total))
+            ci = np.searchsorted(end, p, "right")  # corpus row of each pair
+            qi = owner[lo[ci] + p - end[ci] + n[ci]]
+            keep = vids[ci] != q_ids[qi]  # exclude self
+            ci, qi = ci[keep], qi[keep]
+            cos = np.einsum("ij,ij->i", q[qi], cn[ci])
+            by = np.lexsort((vids[ci], -cos, qi))
+            ci, qi, cos = ci[by], qi[by], cos[by]
+            top = np.arange(len(qi)) - np.searchsorted(qi, qi) < k
+            yield pd.DataFrame(
+                {"qid": q_ids[qi[top]], "vec_id": vids[ci[top]], "cos": cos[top]}
+            )
 
-    return _ranked_probe(corpus, (qids, _normalize(qmat), keys[order], owner), score, k)
+    state = (qids, _normalize(qmat), keys[order], owner)
+    return _small.ranked_probe(corpus, state, score, _TOPK_SCHEMA, _by_cos(), k)
 
 
 def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:

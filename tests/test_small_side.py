@@ -26,6 +26,32 @@ def test_knn_oversized_query_table_fails_cleanly(spark, monkeypatch):
         knn_op.knn_join(queries, pages, n_pages=2)
 
 
+def test_pair_budget_splits_blocks_without_changing_results(spark, monkeypatch):
+    """kNN, exact cosine and bucketed ANN return the same ranks when every
+    scorer block is cut down to a few (row, query) pairs."""
+    synth.load_tables(spark, SF_DIR, ["embeddings"])
+    emb = spark.table("embeddings")
+    queries = emb.filter("vec_id < 6").selectExpr("vec_id AS qid", "embedding")
+    cents = sim.ivf_centroids(emb, n_lists=4)
+    pages = synth.pages_df(spark, SF_DIR).select("page_id", "lat_s", "lon_s")
+    knnq = _small.frame(
+        spark, synth.knn_query_points(), "qid long, qlat_s long, qlon_s long, k int", "q", ""
+    )
+    paths = {
+        "knn_join": lambda: knn_op.knn_join(knnq, pages),
+        "cosine_topk": lambda: sim.cosine_topk(queries, emb, k=3),
+        "ann_topk_lsh": lambda: sim.ann_topk_lsh(
+            queries, emb, sim.hyperplanes(dim=64, n_planes=4), k=3, multi_probe=True
+        ),
+        "ivf_topk": lambda: sim.ivf_topk(queries, emb, cents, k=3, nprobe=2),
+    }
+    want = {name: sorted(map(tuple, run().collect())) for name, run in paths.items()}
+    monkeypatch.setattr(_small, "PAIR_BUDGET", 50)
+    for name, run in paths.items():
+        assert want[name], name
+        assert sorted(map(tuple, run().collect())) == want[name], name
+
+
 def test_spatial_join_oversized_polygon_layer_fails_cleanly(spark, monkeypatch):
     pts = spark.createDataFrame(
         [(1, 48.8566, 2.3522), (2, -33.8688, 151.2093)],

@@ -230,22 +230,20 @@ def test_broadcast_join_nan_coordinates_never_match(spark):
 
 
 def test_knn_sparse_multi_round_flat_lineage(spark):
-    """A sparse corpus forces several ring-expansion rounds; each round's
-    bounds come back to the driver, so (a) the final plan is free of the
-    per-round candidate-join subtrees (bounded Exchange count regardless
-    of rounds) and (b) the exact result matches numpy brute force."""
+    """A sparse corpus (8 pages continents apart, so each query's k nearest
+    lie far away): the one-pass probe's plan stays flat (bounded Exchange
+    count) and the exact result matches numpy brute force."""
     from geoproc_spark.operators import knn as knn_op
 
-    # 8 pages scattered ~continental distances apart; k=3 with a tiny seed
-    # radius guarantees >= 2 expansion rounds at zoom 6
+    # 8 pages scattered ~continental distances apart, k=3
     pts = [(i, int((i * 37 % 140 - 70) * 1e4), int((i * 83 % 340 - 170) * 1e4)) for i in range(8)]
     pages = spark.createDataFrame(pts, "page_id long, lat_s long, lon_s long")
     queries = spark.createDataFrame(
         [(0, 0, 0, 3), (1, 500000, 900000, 3)], "qid long, qlat_s long, qlon_s long, k int"
     )
-    out = knn_op.knn_join(queries, pages, zoom=6, n_pages=8, k_max=3)
+    out = knn_op.knn_join(queries, pages, n_pages=8, k_max=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 4, plan  # no per-round join subtrees left
+    assert plan.count("Exchange") <= 4, plan  # flat: no per-query subtrees
 
     got = {(r.qid, r.page_id, r.rank) for r in out.collect()}
     want = set()
@@ -260,8 +258,8 @@ def test_knn_sparse_multi_round_flat_lineage(spark):
 
 def test_knn_mixed_k_multi_round_matches_brute_force(spark):
     """Exact top-k with per-query k (k_max derived from the collected
-    queries) across multi-round ring expansion, against the brute-force
-    twin; the plan runs no Python UDF."""
+    queries) over a sparse corpus, against the brute-force twin; the plan
+    runs no Python UDF."""
     from geoproc_spark.operators import knn as knn_op
 
     pts = [
@@ -273,7 +271,7 @@ def test_knn_mixed_k_multi_round_matches_brute_force(spark):
         [(0, 0, 0, 3), (1, 500000, 900000, 2)],
         "qid long, qlat_s long, qlon_s long, k int",
     )
-    out = knn_op.knn_join(queries, pages, zoom=6, n_pages=8)
+    out = knn_op.knn_join(queries, pages, n_pages=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, plan
     got = {(r.qid, r.page_id, r.rank) for r in out.collect()}
@@ -285,3 +283,80 @@ def test_knn_mixed_k_multi_round_matches_brute_force(spark):
         for rank, j in enumerate(order, start=1):
             want.add((qid, int(arr[j, 0]), rank))
     assert got == want
+
+
+def _knn_brute_force(pts, qs):
+    """{(qid, page_id, rank)}: numpy lexsort over (d2, page_id) of the pages
+    with a position."""
+    arr = np.array([p for p in pts if p[1] is not None and p[2] is not None], dtype=np.int64)
+    want = set()
+    for qid, qla, qlo, k in qs:
+        d2 = (arr[:, 1] - qla) ** 2 + (arr[:, 2] - qlo) ** 2
+        for rank, j in enumerate(np.lexsort((arr[:, 0], d2))[:k], start=1):
+            want.add((qid, int(arr[j, 0]), rank))
+    return want
+
+
+_PERM = np.random.default_rng(3).permutation(50).tolist()
+_KNN_CASES = {
+    # 50 co-located pages with shuffled ids plus 2 closer ones: the k=5
+    # boundary cuts through the 50-way tie, which page_id must break
+    "colocated_tie": (
+        [(int(i) * 7 + 11, 120000, 80000) for i in _PERM]
+        + [(5, 120000, 79991), (900, 120000, 79995)],
+        [(0, 120000, 79990, 5), (1, 119000, 80000, 1)],
+    ),
+    "mixed_k": (
+        [(i, (i * 7919) % 20000 - 10000, (i * 104729) % 20000 - 10000) for i in range(60)],
+        [(0, 0, 0, 1), (1, 5000, -5000, 4), (2, -9000, 9000, 7), (3, 100, 100, 0)],
+    ),
+    "fewer_than_k": ([(3, 10, 10), (1, -10, 10), (2, 0, 0)], [(0, 0, 5, 5), (1, 50, 50, 2)]),
+    "null_lat": (
+        [(1, None, 5), (2, 5, None), (3, 40, 40), (4, None, None), (5, -40, -40), (6, 0, 1)],
+        [(0, 0, 0, 2), (1, 0, 0, 6)],
+    ),
+    "no_queries": ([(1, 0, 0)], []),
+}
+
+
+@pytest.mark.parametrize("case", list(_KNN_CASES))
+def test_knn_exact_against_lexsort_brute_force(spark, case):
+    """Ties at the k boundary across partitions and batches, per-query k,
+    a corpus smaller than k, pages without a position and an empty query
+    table: exactly the numpy lexsort top-k."""
+    from geoproc_spark.operators import knn as knn_op
+
+    pts, qs = _KNN_CASES[case]
+    pages = spark.createDataFrame(pts, "page_id long, lat_s long, lon_s long").repartition(5)
+    queries = spark.createDataFrame(qs, "qid long, qlat_s long, qlon_s long, k int")
+    out = knn_op.knn_join(queries, pages)
+    assert out.columns == ["qid", "page_id", "rank"]
+    got = [(r.qid, r.page_id, r.rank) for r in out.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _knn_brute_force(pts, qs)
+
+
+def test_knn_is_one_probe_and_at_most_three_jobs(spark):
+    """One MapInPandas pass and one Exchange (the rank window), no Python
+    UDF or nested-loop join; with a local query table a call runs at most
+    three jobs: the query collect, the probe and the rank."""
+    from geoproc_spark.operators import _small
+    from geoproc_spark.operators import knn as knn_op
+
+    pages = synth.pages_df(spark, SF_DIR).select("page_id", "lat_s", "lon_s")
+    ddl = "qid long, qlat_s long, qlon_s long, k int"
+    queries = _small.frame(spark, synth.knn_query_points(), ddl, "knn query points", "")
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_one_probe", "knn_join")
+    try:
+        out = knn_op.knn_join(queries, pages)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
+    assert plan.count("Exchange") <= 1, plan
+    assert len(rows) == sum(q[3] for q in synth.knn_query_points())
+    assert len(sc.statusTracker().getJobIdsForGroup("knn_one_probe")) <= 3
