@@ -60,7 +60,7 @@ def main() -> None:
     sf1 = os.path.join(work, "sf1")
     os.makedirs(sf1)
 
-    # ---- inputs (untimed prep, same protocol as bench.py/run_scaling) ----
+    # ---- inputs (untimed prep, same protocol as bench.py) ----
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     reps = spark.range(DOC_REP).selectExpr(f"id * {DOC_OFFSET}L AS off")
     docs.crossJoin(reps).selectExpr(

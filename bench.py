@@ -7,8 +7,8 @@ pages) so the work is measured in hundreds of thousands of pages, not the
 raw 5k documents of sf0.1. Results materialize through the noop sink —
 full execution, no driver collect.
 
-Scaling-efficiency evidence (local[8] vs local[32], cold JVMs) lives in
-BENCH/run_scaling.py; this file is the per-round throughput probe.
+This file is the per-round throughput probe; `perfbench/run.py` is the
+closed-loop benchmark with per-layer metrics.
 """
 
 from __future__ import annotations
@@ -52,8 +52,8 @@ def main() -> None:
     # ---------------- geo pipeline on the replicated corpus (the headline)
     # The metric (BASELINE.json) is spatial-join + tiling throughput OVER a
     # Common-Crawl-style table — the table pre-exists, so corpus synthesis
-    # is untimed input prep (same protocol as BENCH/run_scaling.py); the
-    # timed phase is scan -> extract -> join -> tile stats.
+    # is untimed input prep; the timed phase is scan -> extract -> join ->
+    # tile stats.
     # Mirrors the checkpointed pipeline (plans/geo_run.py): the extracted
     # skeleton materializes to parquet once and every consumer scans that —
     # measured 3x faster than reusing a deserialized .persist() cache, and
@@ -89,9 +89,8 @@ def main() -> None:
             (F.col("page_id") % 100).alias("m100"),
         )
         tstats = tiles_op.tile_stats(stats_in, 8, measure_col="m100")
-        # join and tiling run as CONCURRENT jobs (threads), same protocol as
-        # BENCH/run_scaling.py — the scheduler fills one job's stage-boundary
-        # idle gaps with the other's tasks
+        # join and tiling run as CONCURRENT jobs (threads) — the scheduler
+        # fills one job's stage-boundary idle gaps with the other's tasks
         res = {}
 
         def _join():

@@ -1,7 +1,12 @@
 """The production geo pipeline as checkpointed stages.
 
-scan -> extract (mapInArrow + RE2) -> cell encode + cell-prefix partitioning ->
+scan -> extract (mapInArrow + RE2) -> cell encode, clustered by cell ->
 covering-cell PIP join -> per-tile stats, each stage a resumable snapshot.
+The extract snapshot is clustered, not partitioned: a `rebalance` hint
+lets AQE size its files by bytes (one file at fixture scale), and rows
+are sorted by `cell` within each file, so parquet page and row-group
+min/max on `cell` are tight once a file holds several of them. Files are
+not disjoint in `cell`: the rebalance is round-robin.
 This is the spark-submit entry path; `bench.py` times the same stages
 un-checkpointed.
 """
@@ -18,7 +23,7 @@ from ..operators import tiles as tiles_op
 from .pipeline import Pipeline, Stage
 
 EXTRACT_ZOOM = 12
-PREFIX_ZOOM = 3  # cell-prefix partition key (<= 64 directories per zoom)
+PREFIX_ZOOM = 3  # zoom of the cell_p column (a coarse cell prefix, <= 64 values)
 TILE_ZOOM = 6
 
 
@@ -27,7 +32,7 @@ def stage_pages(sf_dir: str, replicate: int = 1):
         # snapshot only the columns downstream stages read — in production
         # the input table already exists; synthesizing AND persisting the
         # fat html BINARY column here would double the stage's bytes for a
-        # column no stage scans (same projection BENCH/scaling_job.py uses)
+        # column no stage scans
         return synth.pages_df(spark, sf_dir, replicate=replicate).select(
             "page_id", "url", "lang", "text"
         )
@@ -41,11 +46,14 @@ def stage_extract():
         pts = extract.with_coords_arrow(pages, keep=["page_id", "url"])
         pts = pts.filter(F.col("lat").isNotNull())
         cell = cells.cell_id_col(F.col("lat"), F.col("lon"), EXTRACT_ZOOM)
-        return pts.withColumn("cell", cell).withColumn(
-            "cell_p", cells.parent_cell_col(F.col("cell"), EXTRACT_ZOOM, PREFIX_ZOOM)
+        return (
+            pts.withColumn("cell", cell)
+            .withColumn("cell_p", cells.parent_cell_col(F.col("cell"), EXTRACT_ZOOM, PREFIX_ZOOM))
+            .hint("rebalance")
+            .sortWithinPartitions("cell")
         )
 
-    return Stage("extract", fn, inputs=["pages"], partition_by=["cell_p"])
+    return Stage("extract", fn, inputs=["pages"])
 
 
 def stage_pip_join():

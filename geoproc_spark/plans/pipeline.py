@@ -10,7 +10,9 @@ one process.
 Metrics: one row per (run, stage, output file) in `<base>/<run>/_metrics`
 (itself a table-format table, FIXTURES.md T7 schema) — output rows per
 file come from parquet footers, wall time and input lineage from the
-runner. No extra Spark jobs are spent on bookkeeping.
+runner. No extra Spark jobs are spent on bookkeeping; reading a snapshot
+back runs none either unless it has more than 32 files, which Spark lists
+with a distributed job (see sources/tableformat.py).
 
 Scale: stage boundaries are exactly where a 1000-executor job wants
 checkpoints — shuffle-heavy stages rerun from the last snapshot, not from

@@ -19,7 +19,10 @@ Partitioned writes are hash-distributed by the partition columns (a
 `rebalance` hint; Iceberg's default `write.distribution-mode=hash`), so
 each partition value gets about one file, not one per upstream task: AQE
 coalesces small partitions and splits skewed ones (hot cells). Reads take
-the schema from the manifest, so no footer-inference job runs.
+the schema from the manifest, so no footer-inference job runs. That is
+not the same as no job: when a snapshot has more files than
+`spark.sql.sources.parallelPartitionDiscovery.threshold` (32), Spark
+lists the file list with a distributed job of one task per path.
 
 Commit ordering is Iceberg's write-data-then-commit: data files land in a
 fresh snapshot-scoped directory first, the manifest second, the
@@ -145,8 +148,8 @@ def read_table(spark: SparkSession, path: str, snapshot: int | None = None) -> D
     """Read a snapshot (the current one, or `snapshot` for time travel).
 
     Always reads exactly the manifest's file list with `basePath` set to the
-    snapshot's data directory, so Hive-style partition columns (e.g. the
-    extract stage's cell_p) come back on current and time-travel reads.
+    snapshot's data directory, so Hive-style partition columns come back
+    on current and time-travel reads.
     The schema, partition columns included, is the manifest's: Spark
     infers nothing from the parquet footers."""
     m = read_manifest(path, snapshot)

@@ -4,6 +4,7 @@ equivalence (FIXTURES.md T7)."""
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from geoproc_spark.plans import geo_run
@@ -93,12 +94,15 @@ def test_geo_pipeline_end_to_end_resume_identical(spark, tmp_path):
     direct = _sorted(Q.geo_pip_join(spark, SF_DIR))
     assert sorted(joined) == direct
 
-    # extract stage is cell-prefix partitioned on disk (partition pruning)
+    # extract stage is unpartitioned and clustered by cell: every file's
+    # cell column is non-decreasing, so parquet min/max on it are tight
     mext = tf.read_manifest(f"{base}/geo/extract")
-    snap_dir = os.path.join(f"{base}/geo/extract", mext["base"])
-    parts = [d for d in os.listdir(snap_dir) if d.startswith("cell_p=")]
-    assert len(parts) > 1
-    # ...and the partition column survives a time-travel read (basePath)
+    assert mext["partition_spec"] == []
+    for f in mext["files"]:
+        cell = pq.read_table(os.path.join(f"{base}/geo/extract", f["path"]), columns=["cell"])
+        c = cell.column("cell").to_numpy()
+        assert (c[1:] >= c[:-1]).all(), f["path"]
+    # ...and cell_p is still a column, on a time-travel read too
     tt = tf.read_table(spark, f"{base}/geo/extract", snapshot=mext["snapshot_id"])
     assert "cell_p" in tt.columns
 
@@ -109,25 +113,45 @@ def _parquet_files(d):
 
 def test_extract_snapshot_one_file_per_partition_value(spark, tmp_path):
     """Partitioned snapshot writes are hash-distributed by the partition
-    column first: every cell_p= directory of the extract snapshot holds
-    exactly one parquet file, with the rows and partition values of the
-    stage's own DataFrame, however many tasks produce those rows."""
+    column first: written partitioned by cell_p, every cell_p= directory of
+    an extract snapshot holds exactly one parquet file, with the rows and
+    partition values of the extract DataFrame, however many tasks produce
+    those rows."""
     pages = geo_run.stage_pages(SF_DIR)
-    stages = [
-        Stage("pages", lambda s, i: pages.fn(s, i).repartition(4)),
-        geo_run.stage_extract(),
-    ]
+    stages = [Stage("pages", lambda s, i: pages.fn(s, i).repartition(4))]
     out = Pipeline("one", str(tmp_path)).run(spark, stages)
+    direct = geo_run.stage_extract().fn(spark, {"pages": out["pages"]})
     p = str(tmp_path / "one" / "extract")
+    tf.write_table(direct, p, partition_by=["cell_p"])
+    got = tf.read_table(spark, p)
     snap_dir = os.path.join(p, tf.read_manifest(p)["base"])
     parts = [d for d in os.listdir(snap_dir) if d.startswith("cell_p=")]
     assert len(parts) > 1
     for d in parts:
         assert len(_parquet_files(os.path.join(snap_dir, d))) == 1, d
-    direct = stages[1].fn(spark, {"pages": out["pages"]})
-    assert _sorted(out["extract"]) == _sorted(direct.select(*out["extract"].columns))
+    assert _sorted(got) == _sorted(direct.select(*got.columns))
     want = {f"cell_p={r.cell_p}" for r in direct.select("cell_p").distinct().collect()}
     assert set(parts) == want
+
+
+def test_extract_snapshot_is_one_file_read_without_jobs(spark, tmp_path):
+    """At fixture scale the cell-clustered extract snapshot is one file, so
+    reading it lists no paths with a distributed job: Spark lists a file
+    list longer than parallelPartitionDiscovery.threshold (32) with one
+    task per path, and the schema comes from the manifest."""
+    geo_run.run_geo_pipeline(spark, SF_DIR, "flat", str(tmp_path))
+    p = str(tmp_path / "flat" / "extract")
+    m = tf.read_manifest(p)
+    assert len(m["files"]) == 1, len(m["files"])
+    sc = spark.sparkContext
+    sc.setJobGroup("extract_snapshot_read", "read_table")
+    try:
+        df = tf.read_table(spark, p)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("extract_snapshot_read")) == []
+    assert "cell_p" in df.columns
 
 
 def test_read_table_schema_from_manifest_matches_inferred(spark, tmp_path):
