@@ -129,8 +129,9 @@ def parent_cell_col(cell: Column, from_zoom: int, to_zoom: int) -> Column:
 
 
 # --------------------------------------------------- CRS transforms (F9/F5)
-# The only CRS pair the engine needs (SURVEY §2.3 F9): WGS84 lon/lat degrees
-# <-> Web-Mercator meters (EPSG:3857), closed form. transform_bounds mirrors
+# WGS84 lon/lat degrees <-> Web-Mercator meters (EPSG:3857) in closed form
+# here (SURVEY §2.3 F9), UTM in tmerc.py and the conics in conic.py, all
+# dispatched by crs_entry. transform_bounds mirrors
 # rasterio.warp.transform_bounds(densify_pts=21) as used by the reference's
 # bounds_union / export grid (geoproc/server/image.py:51,184,204,346,359).
 
@@ -153,46 +154,51 @@ def mercator_to_lonlat_np(x: np.ndarray, y: np.ndarray):
     return lon, lat
 
 
-def to_lonlat_np(x: np.ndarray, y: np.ndarray, crs: str):
-    """Any supported CRS -> (lon, lat) degrees, vectorized. Supported:
-    epsg:4326 (identity), epsg:3857 (closed-form spherical Mercator),
-    epsg:326xx/327xx (WGS84 UTM north/south — Krueger series, tmerc.py)."""
+def _as_f64(a: np.ndarray, b: np.ndarray):
+    return np.asarray(a, dtype=np.float64), np.asarray(b, dtype=np.float64)
+
+
+def crs_entry(crs: str):
+    """The engine's CRS registry, the one dispatch behind to_lonlat_np,
+    from_lonlat_np and grid.is_projected: `crs` -> (projected, to_lonlat,
+    from_lonlat), vectorized numpy transforms to and from lon/lat degrees.
+    epsg:4326 (geographic), epsg:3857 (spherical Mercator), epsg:326xx/327xx
+    (WGS84 UTM, tmerc.py), epsg:2154/3034 LCC and epsg:3035 LAEA (conic.py);
+    anything else raises ValueError."""
     c = crs.lower()
     if c == "epsg:4326":
-        return np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)
+        return False, _as_f64, _as_f64
     if c == "epsg:3857":
-        return mercator_to_lonlat_np(x, y)
+        return True, mercator_to_lonlat_np, lonlat_to_mercator_np
     from . import conic, tmerc
 
     p = tmerc.utm_params(c)
     if p is not None:
-        return tmerc.tmerc_to_lonlat_np(x, y, *p)
+        return (
+            True,
+            lambda x, y: tmerc.tmerc_to_lonlat_np(x, y, *p),
+            lambda lon, lat: tmerc.lonlat_to_tmerc_np(lon, lat, *p),
+        )
     if conic.conic_params(c) is not None:
-        return conic.to_lonlat_np(x, y, c)
+        return (
+            True,
+            lambda x, y: conic.to_lonlat_np(x, y, c),
+            lambda lon, lat: conic.from_lonlat_np(lon, lat, c),
+        )
     raise ValueError(
         f"unsupported CRS {crs!r} (engine registry: epsg:4326, epsg:3857, "
         f"epsg:326xx/327xx UTM, epsg:2154/3034 LCC, epsg:3035 LAEA)"
     )
+
+
+def to_lonlat_np(x: np.ndarray, y: np.ndarray, crs: str):
+    """Any registry CRS -> (lon, lat) degrees, vectorized (see crs_entry)."""
+    return crs_entry(crs)[1](x, y)
 
 
 def from_lonlat_np(lon: np.ndarray, lat: np.ndarray, crs: str):
-    """(lon, lat) degrees -> any supported CRS, vectorized (see to_lonlat_np)."""
-    c = crs.lower()
-    if c == "epsg:4326":
-        return np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64)
-    if c == "epsg:3857":
-        return lonlat_to_mercator_np(lon, lat)
-    from . import conic, tmerc
-
-    p = tmerc.utm_params(c)
-    if p is not None:
-        return tmerc.lonlat_to_tmerc_np(lon, lat, *p)
-    if conic.conic_params(c) is not None:
-        return conic.from_lonlat_np(lon, lat, c)
-    raise ValueError(
-        f"unsupported CRS {crs!r} (engine registry: epsg:4326, epsg:3857, "
-        f"epsg:326xx/327xx UTM, epsg:2154/3034 LCC, epsg:3035 LAEA)"
-    )
+    """(lon, lat) degrees -> any registry CRS, vectorized (see crs_entry)."""
+    return crs_entry(crs)[2](lon, lat)
 
 
 def transform_bounds(

@@ -12,11 +12,13 @@ Reproduces the grid derivation of the reference's `Image.export`
    requested output CRS (:202-207): pixel size = span / pixel count,
    origin at (west, north), north-up (negative y size).
 
-The CRS registry (functions/cells.py F9 + functions/tmerc.py): EPSG:4326
-(geographic), EPSG:3857 (projected), and WGS84 UTM epsg:326xx/327xx
-(projected) — covering the reference's documented
+The CRS registry is cells.crs_entry: EPSG:4326 (geographic), EPSG:3857,
+WGS84 UTM epsg:326xx/327xx (functions/tmerc.py) and the conics
+(functions/conic.py), all projected — covering the reference's documented
 `export(..., crs="epsg:32630")` workflow. Window enumeration
 mirrors the reference's 4096-px export loop (WINDOW_SIZE at :32), row-major.
+`cut_tiles` is the ingest side: the one cutter from a raster onto the
+slippy tile grid.
 
 All closed form: usable driver-side (specs), inside pandas UDFs
 (vectorized sampling), and re-derivable by the DuckDB/numpy oracles.
@@ -34,23 +36,10 @@ WINDOW_SIZE = 4096  # reference geoproc/server/image.py:32
 
 
 def is_projected(crs: str) -> bool:
-    """The engine's CRS registry: 3857 and UTM (epsg:326xx/327xx) are
-    projected (meter units), 4326 is geographic."""
-    c = crs.lower()
-    if c == "epsg:3857":
-        return True
-    if c == "epsg:4326":
-        return False
-    from . import conic, tmerc
-
-    if tmerc.utm_params(c) is not None:
-        return True
-    if conic.conic_params(c) is not None:
-        return True
-    raise ValueError(
-        f"unsupported CRS {crs!r} (engine registry: epsg:4326, epsg:3857, "
-        f"epsg:326xx/327xx UTM, epsg:2154/3034 LCC, epsg:3035 LAEA)"
-    )
+    """True for the registry's projected (meter-unit) CRSs: 3857, UTM
+    (epsg:326xx/327xx) and the conics; False for geographic 4326
+    (cells.crs_entry)."""
+    return cells.crs_entry(crs)[0]
 
 
 def export_grid_spec(
@@ -94,11 +83,6 @@ def n_windows(width: int, height: int, window_size: int = WINDOW_SIZE) -> tuple[
     )
 
 
-def out_xy_to_lonlat(x: np.ndarray, y: np.ndarray, crs: str):
-    """Output-CRS coordinates -> (lon, lat) degrees (any registry CRS)."""
-    return cells.to_lonlat_np(x, y, crs)
-
-
 def tile_range_pad(crs: str) -> int:
     """Safety pad (in tiles) for a window's source-tile range derived from
     boundary samples. 4326/3857 are SEPARABLE (lon from x only, lat from y
@@ -107,6 +91,38 @@ def tile_range_pad(crs: str) -> int:
     extremes by a sliver -> pad 1 tile (extra candidates are harmless: the
     gather only copies pixels whose nearest tile actually matches)."""
     return 0 if crs.lower() in ("epsg:4326", "epsg:3857") else 1
+
+
+def cut_tiles(
+    data: np.ndarray, mask: np.ndarray, zoom: int, x0: int, y0: int, side: int
+) -> list[tuple[int, int, int, list[list[float]], list[int]]]:
+    """Cut a (bands, H, W) raster and its (H, W) mask into `side`-px slippy
+    tiles at `zoom`, the top-left pixel at tile (x0, y0): the engine's one
+    tile cutter. Right/bottom edges pad as nodata (0, mask 0). Returns tile
+    rows (z, x, y, data per band, mask) in row-major tile order; a raster
+    reaching past the zoom grid raises ValueError before any cutting."""
+    nb, H, W = data.shape
+    nty, ntx = -(-H // side), -(-W // side)
+    n = 1 << zoom
+    x0, y0 = int(x0), int(y0)
+    if x0 < 0 or y0 < 0 or x0 + ntx > n or y0 + nty > n:
+        raise ValueError(
+            f"tiles x {x0}..{x0 + ntx - 1}, y {y0}..{y0 + nty - 1} outside "
+            f"the zoom-{zoom} grid (0..{n - 1})"
+        )
+    pad_a = np.zeros((nb, nty * side, ntx * side), dtype=np.float64)
+    pad_a[:, :H, :W] = data
+    pad_m = np.zeros((nty * side, ntx * side), dtype=np.int64)
+    pad_m[:H, :W] = mask
+    # (bands, ty, row, tx, col) -> (ty, tx, bands, row * col)
+    tiles_a = pad_a.reshape(nb, nty, side, ntx, side).transpose(1, 3, 0, 2, 4)
+    tiles_m = pad_m.reshape(nty, side, ntx, side).transpose(0, 2, 1, 3)
+    tiles_a = tiles_a.reshape(nty * ntx, nb, side * side).tolist()
+    tiles_m = tiles_m.reshape(nty * ntx, side * side).tolist()
+    return [
+        (zoom, x0 + i % ntx, y0 + i // ntx, d, m)
+        for i, (d, m) in enumerate(zip(tiles_a, tiles_m))
+    ]
 
 
 def sample_native_pixels(

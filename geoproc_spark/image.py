@@ -203,8 +203,13 @@ class Image:
         This is the per-scene unit of a distributed ingest: at warehouse
         scale each scene/granule runs this cut inside its own task
         (binaryFiles -> mapPartitions) and the tile rows union into one
-        table; a single driver-side array is the importer's unit test."""
+        table; a single driver-side array is the importer's unit test.
+        The cut is functions.grid.cut_tiles, the same one
+        sources.geotiff.scene_tile_rows runs per scene; a raster reaching
+        past the zoom grid raises ValueError before any tile is cut."""
         import numpy as np
+
+        from .functions import grid as _grid
 
         arr = np.asarray(array, dtype=np.float64)
         if arr.ndim == 2:
@@ -212,37 +217,13 @@ class Image:
         if arr.ndim != 3:
             raise ValueError(f"array must be (bands, H, W) or (H, W); got {arr.shape}")
         nb, H, W = arr.shape
-        side = tile_side
         if mask is None:
             m = np.full((H, W), 255, dtype=np.int64)
         else:
             m = np.asarray(mask, dtype=np.int64)
             if m.shape != (H, W):
                 raise ValueError(f"mask shape {m.shape} != raster shape {(H, W)}")
-        tH = (H + side - 1) // side * side
-        tW = (W + side - 1) // side * side
-        pad_a = np.zeros((nb, tH, tW), dtype=np.float64)
-        pad_a[:, :H, :W] = arr
-        pad_m = np.zeros((tH, tW), dtype=np.int64)
-        pad_m[:H, :W] = m
-        n = 1 << zoom
-        rows = []
-        for ty in range(tH // side):
-            for tx in range(tW // side):
-                x, y = x0 + tx, y0 + ty
-                if not (0 <= x < n and 0 <= y < n):
-                    raise ValueError(f"tile ({x},{y}) outside the zoom-{zoom} grid")
-                d = pad_a[:, ty * side : (ty + 1) * side, tx * side : (tx + 1) * side]
-                mm = pad_m[ty * side : (ty + 1) * side, tx * side : (tx + 1) * side]
-                rows.append(
-                    (
-                        zoom,
-                        x,
-                        y,
-                        [b.ravel().tolist() for b in d],
-                        mm.ravel().tolist(),
-                    )
-                )
+        rows = _grid.cut_tiles(arr, m, zoom, x0, y0, tile_side)
         df = _small.frame(
             spark,
             rows,
@@ -251,7 +232,7 @@ class Image:
             "cut large scenes per task with sources.geotiff.ingest_geotiffs",
         )
         names = band_names or [f"B{i+1}" for i in range(nb)]
-        return cls(df, names, "float64", side * side, min_zoom=zoom, max_zoom=zoom)
+        return cls(df, names, "float64", tile_side * tile_side, min_zoom=zoom, max_zoom=zoom)
 
     @classmethod
     def constant(cls, value: float, n_px: int = 0) -> "Image":
@@ -537,19 +518,32 @@ class Image:
     def derive_bounds(self, zoom: int) -> tuple[float, float, float, float]:
         """Lonlat bbox of the tile set at `zoom` — one tiny key-only agg
         (column-pruned scan; the reference reads this from the raster
-        profile, server/image.py:441-443)."""
+        profile, server/image.py:441-443). Raises ValueError when no tile
+        sits at `zoom`."""
+        return self._extent(zoom)[1]
+
+    def _extent(self, zoom: int | None = None) -> tuple[int, tuple[float, float, float, float]]:
+        """(zoom, lonlat bbox of the tiles at that zoom) in ONE key-only
+        aggregate job; `zoom` None means the highest zoom present. Tile
+        extremes at the maximum z come from lexicographic struct maxima
+        over (z, +-x) and (z, +-y), so max z and the bbox at it need no
+        second pass; a known zoom filters to it first."""
         from .functions import cells as _cells
 
-        r = (
-            self.df.filter(F.col("z") == zoom)
-            .agg(F.min("x"), F.max("x"), F.min("y"), F.max("y"))
-            .first()
-        )
-        if r[0] is None:
-            raise ValueError(f"no tiles at zoom {zoom}")
-        w, s, _e, _n = _cells.tile_bounds_np([zoom], [r[0]], [r[3]])
-        _w, _s, e, n = _cells.tile_bounds_np([zoom], [r[1]], [r[2]])
-        return (float(w[0]), float(s[0]), float(e[0]), float(n[0]))
+        df = self.df if zoom is None else self.df.filter(F.col("z") == zoom)
+        r = df.agg(
+            F.max("z").alias("z"),
+            F.max(F.struct(F.col("z"), (-F.col("x")).alias("v"))).alias("nx"),
+            F.max(F.struct(F.col("z"), F.col("x").alias("v"))).alias("xx"),
+            F.max(F.struct(F.col("z"), (-F.col("y")).alias("v"))).alias("ny"),
+            F.max(F.struct(F.col("z"), F.col("y").alias("v"))).alias("xy"),
+        ).first()
+        if r["z"] is None:
+            raise ValueError("no tiles" if zoom is None else f"no tiles at zoom {zoom}")
+        z = r["z"]
+        w, s, _e, _n = _cells.tile_bounds_np([z], [-r["nx"]["v"]], [r["xy"]["v"]])
+        _w, _s, e, n = _cells.tile_bounds_np([z], [r["xx"]["v"]], [-r["ny"]["v"]])
+        return z, (float(w[0]), float(s[0]), float(e[0]), float(n[0]))
 
     def _window_join(
         self,
@@ -558,21 +552,24 @@ class Image:
         bounds: tuple[float, float, float, float] | None,
         in_crs: str,
         window_size: int,
-        native_zoom: int | None = None,
     ):
         """The export window grid, each window joined to the source tiles it
         overlaps, and the per-window gather kernel.
 
-        Returns (spec, grid, wtiles, tiles, joined, gather): `grid` is the
-        driver-side window list of (wid, col_off, row_off, win_w, win_h)
-        in row-major order, `wtiles` the window->tile table, `tiles` the
-        native-zoom tile rows, `joined` their broadcast inner join (windows
-        that reach no tile have no row), and `gather(pdf)` turns one
-        window's joined rows into its (bands x pixels) data and mask."""
+        Returns (spec, grid, joined, gather): `grid` is the driver-side
+        window list of (wid, col_off, row_off, win_w, win_h) in row-major
+        order, `joined` the broadcast inner join of the window->tile table
+        with the tile rows at the native zoom (windows that reach no tile
+        have no row), and `gather(pdf)` turns one window's rows into its
+        (bands x pixels) data and mask, skipping rows with a null `data`
+        (so a window whose only row is its grid row is all nodata). The
+        native zoom is max_zoom when declared; it and the bounds, when not
+        given, come from one _extent job."""
         import math as _math
 
         import numpy as _np
 
+        from .functions import cells as _cells
         from .functions import grid as _grid
 
         if self.df is None:
@@ -580,35 +577,12 @@ class Image:
                 "cannot export a boundless (constant) image: no tile bounds "
                 "(reference geoproc/server/image.py:171-178)"
             )
-        z = native_zoom if native_zoom is not None else self.max_zoom
-        if bounds is None and z is None:
-            # ONE combined metadata job (r6): max zoom + tile extremes AT
-            # that zoom via lexicographic struct maxima — previously two
-            # sequential .first() jobs (max-z, then derive_bounds), each
-            # paying full job latency for a handful of metadata rows.
-            r = self.df.agg(
-                F.max("z").alias("mz"),
-                F.max(F.struct(F.col("z"), (-F.col("x")).alias("v"))).alias("nx"),
-                F.max(F.struct(F.col("z"), F.col("x").alias("v"))).alias("xx"),
-                F.max(F.struct(F.col("z"), (-F.col("y")).alias("v"))).alias("ny"),
-                F.max(F.struct(F.col("z"), F.col("y").alias("v"))).alias("xy"),
-            ).first()
-            if r["mz"] is None:
-                raise ValueError("no tiles")
-            z = r["mz"]
-            xmin, xmax = -r["nx"]["v"], r["xx"]["v"]
-            ymin, ymax = -r["ny"]["v"], r["xy"]["v"]
-            from .functions import cells as _cells
-
-            w, s, _e, _n = _cells.tile_bounds_np([z], [xmin], [ymax])
-            _w, _s, e, n = _cells.tile_bounds_np([z], [xmax], [ymin])
-            bounds = (float(w[0]), float(s[0]), float(e[0]), float(n[0]))
-            in_crs = "epsg:4326"
-        if z is None:
-            z = self.df.agg(F.max("z")).first()[0]
+        z = self.max_zoom
         if bounds is None:
-            bounds = self.derive_bounds(z)
+            z, bounds = self._extent(z)
             in_crs = "epsg:4326"
+        elif z is None:
+            z = self._extent()[0]
         spec = _grid.export_grid_spec(bounds, scale, in_crs=in_crs, crs=crs)
         width, height = spec["width"], spec["height"]
         xsize, _b, ox, _d, nysize, oy = spec["transform"]
@@ -643,7 +617,7 @@ class Image:
         first_r, last_r = _np.repeat(rs[:, :1], k, 1), _np.repeat(rs[:, -1:], k, 1)
         xx = ox + _np.concatenate([cs, cs, first_c, last_c], axis=1) * xsize
         yy = oy - _np.concatenate([first_r, last_r, rs, rs], axis=1) * ysize
-        lon, lat = _grid.out_xy_to_lonlat(xx.ravel(), yy.ravel(), out_crs)
+        lon, lat = _cells.to_lonlat_np(xx.ravel(), yy.ravel(), out_crs)
         tx, ty, _c, _r = _grid.sample_native_pixels(lon, lat, z, side)
         tx, ty = tx.reshape(n_win, 4 * k), ty.reshape(n_win, 4 * k)
         pad = _grid.tile_range_pad(out_crs)
@@ -669,8 +643,9 @@ class Image:
         # never shuffles for the join; the only Exchange left is the
         # per-window gather. A broadcast side cannot be the preserved side
         # of an outer join, so tile-less windows (possible when the export
-        # bounds exceed the tile set) have no row here; callers emit them
-        # as all-nodata windows.
+        # bounds exceed the tile set) have no row here: projected_windows
+        # unions the window grid into the gather stream, and
+        # export_geotiff_cog fills them on the driver.
         joined = F.broadcast(wtiles).join(tiles, ["x", "y"], "inner")
 
         def gather(pdf):
@@ -682,7 +657,7 @@ class Image:
             rows = oy - (ro + _np.arange(wh) + 0.5) * ysize
             X = _np.tile(cols, wh)
             Y = _np.repeat(rows, ww)
-            lon, lat = _grid.out_xy_to_lonlat(X, Y, out_crs)
+            lon, lat = _cells.to_lonlat_np(X, Y, out_crs)
             tx, ty, pc, pr = _grid.sample_native_pixels(lon, lat, z, side)
             data = _np.zeros((nb, wh * ww), dtype=_np.float64)
             mask = _np.zeros(wh * ww, dtype=_np.int64)
@@ -699,7 +674,7 @@ class Image:
                 mask[sel] = tm[src]
             return data, mask
 
-        return spec, grid, wtiles, tiles, joined, gather
+        return spec, grid, joined, gather
 
     def projected_windows(
         self,
@@ -708,7 +683,6 @@ class Image:
         bounds: tuple[float, float, float, float] | None = None,
         in_crs: str = "epsg:4326",
         window_size: int = 256,
-        native_zoom: int | None = None,
     ) -> tuple[DataFrame, dict]:
         """The output-CRS/scale export grid, resampled DISTRIBUTED — the
         engine's analog of the reference's projected export
@@ -718,8 +692,11 @@ class Image:
         window joins ONLY the source tiles it overlaps (perimeter-derived
         tile range, a broadcast local relation), and one applyInPandas per
         window gathers its pixels nearest-neighbor from the native tile
-        grid. Pixels outside the tile set are nodata (mask 0), like the
-        reference's write_mask.
+        grid. The window grid itself is unioned into that gather stream
+        (null tile columns), so every window reaches the gather at least
+        once and one no tile reaches assembles as all nodata (mask 0),
+        like the reference's write_mask over an out-of-data window: one
+        code path, one scan of the tile table.
 
         The window grid and its window->tile table are driver-side small
         sides (operators._small): more than _small.MAX_ROWS rows raise
@@ -732,10 +709,9 @@ class Image:
         import pandas as _pd
         from pyspark.sql import types as T
 
-        spec, grid, wtiles, tiles, joined, gather = self._window_join(
-            scale, crs, bounds, in_crs, window_size, native_zoom
+        spec, grid, joined, gather = self._window_join(
+            scale, crs, bounds, in_crs, window_size
         )
-        nb = self.n_bands
         schema = T.StructType(
             [
                 T.StructField("col_off", T.IntegerType()),
@@ -760,37 +736,11 @@ class Image:
                 }
             )
 
-        assembled = joined.groupBy("wid").applyInPandas(assemble, schema)
-        # windows whose tile range matched nothing: all-nodata, pure SQL.
-        # Matched wids come from a KEY-ONLY semi-join (x,y pruned at the
-        # scan) — deriving them from `joined` would re-execute the full
-        # payload join a second time just to list window ids.
-        # Broadcast the key-only RIGHT side: Spark can only build the
-        # non-preserved side of a left-semi join, so hinting the left
-        # (preserved) side is rejected with a WARN and both sides shuffle.
-        # no .distinct() on matched (r6): a left-anti probe only tests
-        # existence, so duplicate wids are harmless — the distinct was a
-        # full Exchange + aggregate stage for nothing. matched is bounded
-        # by |wtiles| (broadcast-sized by construction), so it broadcasts
-        # into the anti-join and the window table never shuffles either.
-        matched = wtiles.join(
-            F.broadcast(tiles.select("x", "y")), ["x", "y"], "left_semi"
-        ).select("wid")
         windows = _small.frame(
-            wtiles.sparkSession, grid, _WIN_DDL, "projected_windows window grid", _WIN_SMALLER
+            self.df.sparkSession, grid, _WIN_DDL, "projected_windows window grid", _WIN_SMALLER
         )
-        empty = (
-            windows.join(F.broadcast(matched), "wid", "left_anti")
-            .selectExpr(
-                "col_off",
-                "row_off",
-                "win_w",
-                "win_h",
-                f"array_repeat(array_repeat(CAST(0.0 AS DOUBLE), win_w * win_h), {nb}) AS data",
-                "array_repeat(0, win_w * win_h) AS mask",
-            )
-        )
-        return assembled.unionByName(empty), spec
+        stream = joined.unionByName(windows, allowMissingColumns=True)
+        return stream.groupBy("wid").applyInPandas(assemble, schema), spec
 
     def export_projected(
         self,
@@ -876,7 +826,7 @@ class Image:
                 f"window_size must be a multiple of 16 for a tiled TIFF, "
                 f"got {window_size}"
             )
-        spec, grid, _wtiles, _tiles, joined, gather = self._window_join(
+        spec, grid, joined, gather = self._window_join(
             scale, crs, bounds, in_crs, window_size
         )
         w, h, nb = spec["width"], spec["height"], self.n_bands

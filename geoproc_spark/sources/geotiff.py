@@ -495,11 +495,14 @@ def scene_tile_rows(
     """One scene -> engine tile rows (z, x, y, data, mask): parse the
     GeoTIFF, place its NW corner on the zoom grid (the scene must be
     grid-aligned — resampling-free ingest, like tiled COG archives), cut
-    tile_side tiles, pad edges as nodata. Pure function: runs inside a
-    task, never on the driver."""
+    tile_side tiles with functions.grid.cut_tiles (the cutter
+    Image.from_array runs), pad edges as nodata. The CRS, corner and
+    pixel-scale guards are this reader's own; the cutter refuses a scene
+    reaching past the zoom grid. Pure function: runs inside a task, never
+    on the driver."""
     import math
 
-    from ..functions import cells
+    from ..functions import cells, grid
 
     g = read_geotiff(raw)
     if g["bounds"] is None:
@@ -522,9 +525,9 @@ def scene_tile_rows(
     fx = (west + 180.0) / 360.0 * n_grid
     fy = merc_fy(north)
     snap = lambda v: int(round(v)) if abs(v - round(v)) < 1e-6 else int(math.floor(v))
-    x0, y0 = np.array([snap(fx)]), np.array([snap(fy)])
+    x0, y0 = snap(fx), snap(fy)
     data, mask = g["data"], g["mask"]
-    nb, H, W = data.shape
+    H, W = data.shape[1:]
     # Pixel-scale guard (ADVICE r04): snapping places only the NW corner —
     # a scene whose NATIVE resolution differs from the zoom grid's would
     # silently ingest every pixel misplaced (mixed-resolution archives,
@@ -548,26 +551,7 @@ def scene_tile_rows(
                 f"{got:.9f} tiles but has {want:.9f} tiles of pixels — "
                 f"resample the scene or pass its native zoom"
             )
-    side = tile_side
-    tH = (H + side - 1) // side * side
-    tW = (W + side - 1) // side * side
-    pad_a = np.zeros((nb, tH, tW), dtype=np.float64)
-    pad_a[:, :H, :W] = data
-    pad_m = np.zeros((tH, tW), dtype=np.int64)
-    pad_m[:H, :W] = mask
-    n = 1 << zoom
-    rows = []
-    for ty in range(tH // side):
-        for tx in range(tW // side):
-            x, y = int(x0[0]) + tx, int(y0[0]) + ty
-            if not (0 <= x < n and 0 <= y < n):
-                raise ValueError(f"tile ({x},{y}) outside the zoom-{zoom} grid")
-            d = pad_a[:, ty * side:(ty + 1) * side, tx * side:(tx + 1) * side]
-            mm = pad_m[ty * side:(ty + 1) * side, tx * side:(tx + 1) * side]
-            rows.append(
-                (zoom, x, y, [b.ravel().tolist() for b in d], mm.ravel().tolist())
-            )
-    return rows
+    return grid.cut_tiles(data, mask, zoom, x0, y0, tile_side)
 
 
 def ingest_geotiffs(spark, path: str, zoom: int | None = None, tile_side: int = 16):

@@ -72,7 +72,6 @@ def write_table(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
     summary: dict[str, Any] | None = None,
 ) -> dict:
     """Write a snapshot; returns the manifest dict.
@@ -85,23 +84,19 @@ def write_table(
     that crashes mid-write can never corrupt the currently-committed
     snapshot (the Iceberg commit protocol this layer emulates).
 
-    Only mode='overwrite' is supported: each snapshot's file list is exactly
-    this write's output. mode='append' would need to merge the parent
-    snapshot's file list into the new manifest (Iceberg's append commit) —
-    until that exists, accepting it would silently produce a snapshot
-    holding ONLY the appended rows (latent data loss, ADVICE r02).
+    Every snapshot is an overwrite: its file list is exactly this write's
+    output. Append is not offered because it would need to merge the
+    parent snapshot's file list into the new manifest (Iceberg's append
+    commit) — without that merge, an append would silently produce a
+    snapshot holding ONLY the appended rows (latent data loss, ADVICE r02).
     """
-    if mode != "overwrite":
-        raise ValueError(
-            f"write_table supports only mode='overwrite' (got {mode!r}); "
-            "append requires merging the parent snapshot's file list"
-        )
     prev = current_snapshot_id(path)
     snap_id = (prev or 0) + 1
     data = os.path.join(_data_dir(path), f"snap-{snap_id}")
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
-        writer = df.hint("rebalance", *partition_by).write.mode(mode).partitionBy(*partition_by)
+        writer = df.hint("rebalance", *partition_by).write.mode("overwrite")
+        writer = writer.partitionBy(*partition_by)
     writer.parquet(data)
 
     files = []

@@ -258,7 +258,7 @@ def test_export_projected_3857_output_and_broadcast_plan(spark, tmp_path):
         gd, gm = np.array(r.data), np.array(r.mask)
         X = c + (r.col_off + np.arange(r.win_w) + 0.5) * a
         Y = f + (r.row_off + np.arange(r.win_h) + 0.5) * e
-        lon, lat = G.out_xy_to_lonlat(np.tile(X, r.win_h), np.repeat(Y, r.win_w), "epsg:3857")
+        lon, lat = G.cells.to_lonlat_np(np.tile(X, r.win_h), np.repeat(Y, r.win_w), "epsg:3857")
         tx, ty, pc, pr = G.sample_native_pixels(lon, lat, synth.TILE_Z, side)
         want_d = np.zeros((synth.TILE_BANDS["A"], r.win_h * r.win_w))
         want_m = np.zeros(r.win_h * r.win_w, dtype=np.int64)

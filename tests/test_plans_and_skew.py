@@ -369,20 +369,38 @@ def test_events_funnel_strict_order_semantics(spark):
     assert got == {1: 3, 2: 1, 3: 1, 4: 2}
 
 
-def test_projected_export_semi_join_broadcasts_build_side(spark):
-    """The matched-window semi-join must plan as BroadcastHashJoin LeftSemi
-    with the key-only tile side as the build side. Hinting the preserved
-    (left) side is REJECTED by Spark with a WARN and silently shuffles both
-    sides (VERDICT r03 #2) — pin the fixed shape."""
-    from geoproc_spark import synth
+def test_projected_windows_one_gather_pass_over_one_tile_scan(spark, tmp_path):
+    """Tile-less windows reach the gather kernel through the window grid
+    unioned into its stream: the plan is the broadcast window->tile join
+    feeding ONE FlatMapGroupsInPandas, with no semi/anti join and one scan
+    of the tile table, and a warm tile_export_projected call runs fewer
+    jobs than the 7 of the semi/anti-join plan."""
     from geoproc_spark.image import Image
 
+    path = str(tmp_path / "tiles_a")
+    synth.tiles_df(spark, "A").write.parquet(path)
     img = Image.from_df(
-        synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX
+        spark.read.parquet(path), synth.TILE_BANDS["A"], synth.TILE_PX,
+        max_zoom=synth.TILE_Z,
     )
     wdf, _ = img.projected_windows(scale=400000.0, crs="epsg:4326", window_size=32)
-    plan = wdf._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+    plan = _plan(wdf)
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
+
+    sc = spark.sparkContext
+    run = Q.SPARK_QUERIES["tile_export_projected"]
+    run(spark, SF_DIR).collect()  # cold call: session and Python workers warm up
+    sc.setJobGroup("projected_export_jobs", "warm tile_export_projected")
+    try:
+        assert len(run(spark, SF_DIR).collect()) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("projected_export_jobs"))
+    assert n_jobs < 7, n_jobs
 
 
 def test_helper_column_collisions_rejected(spark):

@@ -22,6 +22,23 @@ def test_query_matches_oracle(spark, ddb, name):
     assert len(got) > 0, f"{name}: empty result proves nothing"
 
 
+@pytest.mark.parametrize("name", sorted(Q.ORACLE_SQL_LAZY))
+def test_query_matches_lazy_values_oracle(spark, ddb, name):
+    """The lazy VALUES oracles (independent numpy/stdlib twins rendered as
+    a literal relation): builders that read fixtures take this suite's
+    SF_DIR, so both sides see the same tables."""
+    import inspect
+
+    build = Q.ORACLE_SQL_LAZY[name]
+    has_sf = "sf_dir" in inspect.signature(build).parameters
+    sql = build(sf_dir=SF_DIR) if has_sf else build()
+    got = spark_rows({**Q.SPARK_QUERIES, **Q.EXTRA_SPARK_QUERIES}[name](spark, SF_DIR))
+    want = ddb_rows(ddb, sql)
+    assert len(got) == len(want), f"{name}: {len(got)} rows vs oracle {len(want)}"
+    assert got == want, f"{name}: value mismatch"
+    assert len(got) > 0, f"{name}: empty result proves nothing"
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
