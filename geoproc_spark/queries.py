@@ -793,13 +793,17 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query). Checkpointing materializes each branch ONCE through the
     # caches; the union then reads two RDD leaves. The two checkpoints are
     # independent jobs — run them on threads so exact's stages back-fill
-    # near's stragglers (guide §2.6).
+    # near's stragglers (guide §2.6). Job groups and tags are thread-local,
+    # so each thread starts with the caller's.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     from .operators._cache import release_checkpoint_df
 
+    checkpoint = inheritable_thread_target(spark)(lambda df: df.localCheckpoint())
     with ThreadPoolExecutor(max_workers=2) as pool:
-        near_ck, exact_ck = pool.map(lambda df: df.localCheckpoint(), (near, exact))
+        near_ck, exact_ck = pool.map(checkpoint, (near, exact))
     bands.unpersist()
     pairs = near_ck.unionByName(exact_ck).distinct()
     # check_every=3 (r6): near-dup graphs are near-cliques (diameter <= 2

@@ -42,6 +42,17 @@ ENGINE_CONF = {
     # inside every short query; the same setting is standard hygiene for
     # long-running drivers on real clusters.
     "spark.cleaner.periodicGC.interval": "2min",
+    # One compile per plan per session. Spark keeps the classes that
+    # codegen compiles in a cache of 100 entries by default. It is a Guava
+    # cache split into 4 segments that each evict on their own share of
+    # the limit, so it needs about 2x headroom over the working set. The
+    # 50 driver queries generate 477 distinct classes (sf0.01, one
+    # session), and the first tiles_and_queries benchmark round compiles
+    # 96, so under the default each warm round evicted and recompiled
+    # 30-45 of its own classes (Janino, then the JIT again). 1024 holds the 477: a warm pass
+    # over the 50 compiles 0 (499 under the default). Cost: 2-3 MB more
+    # Metaspace after a full GC (about 200 MB in all).
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 
@@ -55,6 +66,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Start (or return) the session with `ENGINE_CONF`, overridden by
+    `extra_conf`.
+
+    Static SQL confs such as `spark.sql.codegen.cache.maxEntries` are
+    fixed by the first session in a JVM: `getOrCreate` on a running
+    session does not change them. The builder sets them here, before any
+    codegen runs."""
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")

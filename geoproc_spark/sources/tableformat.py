@@ -38,8 +38,10 @@ import os
 import time
 from typing import Any
 
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 
@@ -126,6 +128,20 @@ def write_table(
     with open(os.path.join(_meta_dir(path), "version-hint.text"), "w") as fh:
         fh.write(str(snap_id))
     return manifest
+
+
+def parquet_schema(path: str) -> StructType:
+    """The Spark schema of a parquet file or directory, read from a footer
+    on the driver: handing it to `spark.read.schema(...)` or
+    `spark.readStream.schema(...)` spares Spark its schema-inference job.
+
+    A tz-less Arrow timestamp maps to `timestamp_ntz`, as Spark infers it.
+    Directories are read as a dataset, which skips `_`/`.` files such as
+    `_SUCCESS` and checksums; Hive-style `key=value` directories are not
+    turned into columns, so use it on flat layouts only (snapshot tables
+    take their schema from the manifest)."""
+    schema = pads.dataset(path, format="parquet").schema
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
 
 
 def read_manifest(path: str, snapshot: int | None = None) -> dict | None:

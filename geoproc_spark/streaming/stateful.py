@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tableformat import parquet_schema
+
 
 def dedup_stream(
     spark: SparkSession,
@@ -22,7 +24,7 @@ def dedup_stream(
     out_table: str = "dedup_stream_result",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(events_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)  # force multiple micro-batches -> real state reuse
@@ -67,7 +69,7 @@ def user_profile_stream(
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(events_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import _small
+from ..sources.tableformat import parquet_schema
 
 
 def hourly_agg(ev: DataFrame) -> DataFrame:
@@ -36,14 +37,21 @@ class _scoped_conf:
     """Temporarily pin session confs for a streaming query's lifetime (r6).
 
     Used for spark.sql.shuffle.partitions: a stateful stream's state-store
-    partition count is the shuffle-partition value at first checkpoint;
-    for a windowed aggregate the state keys are (window, event_type) pairs
-    — bounded by the watermark horizon to TENS of rows at any input scale
-    — so the session default (sized for corpus-wide shuffles) spreads a
-    handful of state rows over 32+ partitions and pays per-partition
-    state-file + commit I/O every micro-batch for nothing (profiled:
-    3.4 s -> 1.9 s at 8 partitions, identical results; the pre-shuffle
-    partial aggregation still runs at full input parallelism).
+    partition count is the shuffle-partition value at first checkpoint.
+    For a windowed aggregate the state keys are (window, event_type)
+    pairs: the append stream's watermark bounds them to tens of rows, and
+    the complete stream's state is what its memory sink collects, which
+    `_small.collect` bounds. Every state partition writes a delta and a
+    checksum file per micro-batch, so the session default (sized for
+    corpus-wide shuffles) pays that I/O per partition for a handful of
+    rows. Both streams default to 1 partition. Profiled (sf0.01 events,
+    4 cores, rows identical to the batch aggregate): 32 -> 8 partitions
+    took a call from 3.4 s to 1.9 s; 8 -> 1 took a warm complete-mode call
+    from 1.11 to 0.74 s wall and 2.44 to 1.47 CPU-s (medians of 6
+    interleaved calls). The pre-shuffle partial aggregation still runs at
+    full input parallelism. The RocksDB state store at 1 partition read
+    0.80 s and 1.29 CPU-s, better than the default provider in 3 of 6
+    pairs either way: no gain, so it is not used.
 
     Also raises spark.sql.streaming.numRecentProgressUpdates where metrics
     are summed from recentProgress (ADVICE r05 low #2: the default keeps
@@ -80,7 +88,7 @@ def run_hourly_stream(
     events_dir: str,
     checkpoint_dir: str,
     out_table: str = "hourly_stream_result",
-    state_partitions: int | None = 8,
+    state_partitions: int | None = 1,
 ) -> DataFrame:
     """Run the hourly aggregate as a stream over a parquet directory with an
     availableNow trigger (process-everything-then-stop), checkpointed.
@@ -91,7 +99,7 @@ def run_hourly_stream(
     no sink behind."""
     import os
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(events_dir)
     if os.path.isfile(events_dir):
         # the streaming file source only takes directories: stream the
         # parent with a glob filter pinned to this one file
@@ -126,7 +134,7 @@ def run_hourly_stream_append(
     checkpoint_dir: str,
     out_dir: str,
     watermark: str = "2 hours",
-    state_partitions: int | None = 8,
+    state_partitions: int | None = 1,
 ):
     """The PRODUCTION streaming shape (VERDICT r04 #2): watermarked
     APPEND-mode hourly aggregate into a file sink.
@@ -148,7 +156,7 @@ def run_hourly_stream_append(
     needs)."""
     import os
 
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(events_dir)
     if os.path.isfile(events_dir):
         stream = (
             spark.readStream.schema(schema)

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import _small
+from .sources.tableformat import parquet_schema
 
 SCALE = 10_000
 
@@ -431,9 +432,11 @@ TABLES = [
 
 
 def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
-    """Register the driver-generated parquet tables as temp views."""
+    """Register the driver-generated parquet tables as temp views. Each
+    read carries its footer schema, so registering runs no Spark job."""
     for name in tables or TABLES:
-        spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
+        path = f"{sf_dir}/{name}.parquet"
+        spark.read.schema(parquet_schema(path)).parquet(path).createOrReplaceTempView(name)
 
 
 def register_replicate_view(spark: SparkSession, replicate: int) -> None:

@@ -345,6 +345,37 @@ def test_dedup_components_concurrent_calls(spark):
         assert _components(df) == want
 
 
+def test_dedup_components_jobs_carry_caller_group_and_tag(spark):
+    """Job groups and tags are thread-local, and the two branch checkpoints
+    run on pool threads: every job the call starts, those included, carries
+    the caller's job group and job tag."""
+    from geoproc_spark import queries as Q
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        sc.addJobTag(group)
+        try:
+            fn()
+        finally:
+            sc.removeJobTag(group)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    in_group("dedup_cc_before", lambda: sc.parallelize([0], 1).count())
+    in_group("dedup_cc_call", lambda: Q.dedup_components(spark, SF_DIR).collect())
+    in_group("dedup_cc_after", lambda: sc.parallelize([0], 1).count())
+    jsc.listenerBus().waitUntilEmpty()
+    (first,) = sc.statusTracker().getJobIdsForGroup("dedup_cc_before")
+    (last,) = sc.statusTracker().getJobIdsForGroup("dedup_cc_after")
+    started = set(range(first + 1, last))
+    assert started
+    assert set(sc.statusTracker().getJobIdsForGroup("dedup_cc_call")) == started
+    assert set(jsc.statusTracker().getJobIdsForTag("dedup_cc_call")) == started
+
+
 def test_materializations_owned_by_call(spark):
     """What a call leaves persisted is exactly what its result reads:
     connected_components keeps only its final label checkpoint;

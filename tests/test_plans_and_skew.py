@@ -403,6 +403,32 @@ def test_projected_windows_one_gather_pass_over_one_tile_scan(spark, tmp_path):
     assert n_jobs < 7, n_jobs
 
 
+# Driver queries whose plans carry no per-call literal. Together they
+# generate more classes than Spark's default codegen cache (100 entries)
+# holds, so under the default a second pass recompiles its own classes.
+_CODEGEN_WORKING_SET = [
+    "tpch_q1", "tpch_q3", "tpch_q5", "events_hourly", "events_funnel",
+    "events_sessions", "events_asof_join", "dedup_minhash_pairs",
+    "ngram_jaccard", "embedding_neardup", "corpus_chunk_dedup",
+]
+
+
+def test_warm_repeat_compiles_nothing(spark):
+    """A warm repeat of a working set larger than Spark's default codegen
+    cache compiles no class: the session's cache holds every class the
+    first pass compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compilations_in_pass() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for name in _CODEGEN_WORKING_SET:
+            Q.SPARK_QUERIES[name](spark, SF_DIR).collect()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compilations_in_pass()
+    assert compilations_in_pass() == 0
+
+
 def test_helper_column_collisions_rejected(spark):
     """Operators that add helper columns must refuse inputs already carrying
     them (withColumn silently overwrites) — range_join's '_rb', the spatial

@@ -4,7 +4,7 @@ this is the foundation of every oracle comparison the driver runs."""
 import duckdb
 
 from geoproc_spark import synth
-from tests.conftest import SF_DIR, ddb_rows, spark_rows
+from tests.conftest import SF_DIR, SF_DIR_MED, ddb_rows, spark_rows
 
 
 def test_pages_sql_parity(spark, ddb):
@@ -54,3 +54,23 @@ def test_replicated_pages(spark):
     base = synth.pages_df(spark, SF_DIR)
     assert df.count() == 3 * base.count()
     assert df.select("page_id").distinct().count() == df.count()
+
+
+def test_load_tables_runs_no_job_and_keeps_inferred_schema(spark):
+    """Each table read carries its footer schema: registering the tables
+    starts no Spark job, and every view's schema (types, NTZ timestamps
+    and nullability) equals the one Spark infers from the same file."""
+    sc = spark.sparkContext
+    for sf in (SF_DIR_MED, SF_DIR):  # SF_DIR last: the views other tests read
+        group = f"load_tables_{sf.rsplit('/', 1)[-1]}"
+        sc.setJobGroup(group, "load_tables")
+        try:
+            synth.load_tables(spark, sf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        for name in synth.TABLES:
+            inferred = spark.read.parquet(f"{sf}/{name}.parquet").schema
+            assert spark.table(name).schema == inferred, (sf, name)
