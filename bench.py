@@ -67,9 +67,8 @@ def main() -> None:
         "page_id", "text"
     ).write.mode("overwrite").parquet(f"{work}/pages")
 
-    import threading
-
     import pyarrow.parquet as pq
+    from pyspark import InheritableThread
 
     from geoproc_spark.operators import knn as knn_op
 
@@ -90,7 +89,9 @@ def main() -> None:
         )
         tstats = tiles_op.tile_stats(stats_in, 8, measure_col="m100")
         # join and tiling run as CONCURRENT jobs (threads) — the scheduler
-        # fills one job's stage-boundary idle gaps with the other's tasks
+        # fills one job's stage-boundary idle gaps with the other's tasks.
+        # Job groups and tags are thread-local: InheritableThread starts
+        # each thread with the caller's
         res = {}
 
         def _join():
@@ -99,7 +100,7 @@ def main() -> None:
         def _tiles():
             res["n_tiles"] = tstats.count()
 
-        ts = [threading.Thread(target=_join), threading.Thread(target=_tiles)]
+        ts = [InheritableThread(target=_join), InheritableThread(target=_tiles)]
         for th in ts:
             th.start()
         for th in ts:

@@ -1,10 +1,11 @@
 """The bounded "small side" of a join, held on the driver.
 
 Operators collect a side that is small by construction (a polygon layer,
-a kNN or ANN query table, an export window grid), expand it in numpy on
-the driver and ship the result back: spatial_join's cell index and the
-query state of every top-k probe as broadcast variables, projected_windows'
-window and window->tile tables as local relations. A broadcast would
+a kNN or ANN query table, an export window grid, a near-dup pair graph),
+expand it in numpy on the driver and ship the result back: spatial_join's
+cell index and the query state of every top-k probe as broadcast
+variables, projected_windows' window and window->tile tables and
+connected_components' labels as local relations. A broadcast would
 collect that side to the driver anyway, so there is no distributed
 fallback; instead every such prep goes through this module and fails
 loudly above one bound.

@@ -14,14 +14,19 @@ Scale notes:
 - LSH bucket join: the only shuffle; self-equi-join on (band_id, band_key).
   Hot buckets (boilerplate text) are exactly the skew case — AQE skew-join
   splits them, and max_bucket_size drops degenerate buckets from pairing.
+- connected components: one bounded collect of the pair lists (_small),
+  a numpy union-find on the driver, one broadcast label join back. The
+  pair graph is near-dups only, a small fraction of the corpus.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from . import _small
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -146,157 +151,69 @@ def hamming_distance(a, b):
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def connected_components(
-    ids: DataFrame,
-    pairs: DataFrame,
-    max_rounds: int = 16,
-    check_every: int = 1,
-    stats: dict | None = None,
-) -> DataFrame:
+def _min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, component) for the undirected edges a[i]-b[i]: every node
+    of the edge list and the minimum node of its component.
+
+    Hook-and-shortcut union-find over np.unique-compacted ids: each round
+    hooks every root to the minimum root across its edges (np.minimum.at),
+    then pointer-jumps `lab = lab[lab]` to a fixpoint. Labels only
+    decrease and stay inside their component, so a round that changes
+    nothing leaves one root per component: its minimum."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    lab = np.arange(len(nodes))
+    while True:
+        ru, rv = lab[u], lab[v]
+        m = np.minimum(ru, rv)
+        new = lab.copy()
+        np.minimum.at(new, ru, m)
+        np.minimum.at(new, rv, m)
+        while not np.array_equal(jumped := new[new], new):
+            new = jumped
+        if np.array_equal(new, lab):
+            return nodes, nodes[lab]
+        lab = new
+
+
+def connected_components(ids: DataFrame, *pairs: DataFrame) -> DataFrame:
     """(doc_id, component) where component = min doc_id reachable through
     the pair graph — the canonical-document assignment after near-dup
     pairing (every doc appears; singletons map to themselves).
 
-    Iterative min-label propagation: each round joins labels to the
-    symmetric edge list and takes the neighborhood minimum; stops when no
-    label changed. Rounds = graph diameter, which for near-dup clusters is
-    tiny (clusters are near-cliques); the label table is (doc_id, label)
-    only, so each round is one small shuffle join — the simple variant of
-    large-star/small-star CC, sufficient here and honest about its bound
-    (max_rounds guards pathological chains).
+    One bounded driver pass, the shape of knn_join: each (doc_a, doc_b)
+    frame is collected through _small (its own collect, so each plan still
+    reads its caller's caches — a Union over cached frames re-runs both
+    lineages from the scans in this Spark build), the total is bounded by
+    MAX_ROWS, and `_min_labels` labels the nodes in numpy. Only the nodes
+    whose component is not themselves go back, as one local relation
+    (at most one row per pair), broadcast into a left join with `ids`;
+    every other id maps to itself. The result holds no cache or checkpoint.
 
-    Scale/latency structure (VERDICT r04 #1):
-    - The loop runs ONLY over edge endpoints. Singletons — the vast
-      majority of a deduplicated corpus — never enter a round; they are
-      restored by one label join at the end (broadcast-sized right side:
-      the near-dup set is tiny relative to the corpus).
-    - Edges symmetrize via ONE explode pass, not a self-union: in this
-      Spark build a Union node defeats InMemoryRelation substitution for
-      its entire subtree (measured: union of two PERSISTED frames
-      re-executed both lineages from the parquet scans), so the old
-      two-branch union recomputed the caller's whole pair-generation
-      pipeline twice while materializing the edge cache.
-    - `check_every` DOUBLES after every non-converged batch (1, 2, 4, …):
-      driver round-trips for a diameter-d chain stay O(log d) while
-      near-clique dup graphs (diameter ~2) stop after 3 rounds.
-
-    Convergence is checked FUSED into the round (VERDICT r02), against the
-    label entering the LAST round of the batch (r6): min-label propagation
-    is monotone, so one change-free round proves the fixpoint — "did the
-    final round change anything" is a filter over the already-checkpointed
-    batch output, no second join and, unlike the old batch-entry snapshot,
-    no extra all-change-free confirming batch (measured: a round costs ~6x
-    a convergence check at every scale tried, so wasted rounds — not
-    driver round-trips — were the dominant loop cost).
-
-    stats (optional): filled with {"rounds": total propagation rounds run,
-    "batches": driver round-trips} for loop-shape assertions.
-    """
-    from . import _cache
-
-    # edges are re-joined EVERY round: persist them, or each iteration
-    # re-executes the caller's whole pair-generation lineage (LSH + jaccard
-    # refine) — measured 4x the total wall without this. Persisted ALREADY
-    # HASH-PARTITIONED on the join key (src): the cached partitioning is
-    # reused by every round's join, so the biggest table in the loop
-    # shuffles once total instead of once per round.
-    # self-loops ride along IN THE SAME explode (r6): the per-dst min then
-    # includes the node's own label, so a round is ONE join + ONE
-    # aggregation — the old least(own, nbr) outer-join-back and its third
-    # Exchange per round are gone. Duplicate self-loop rows (a node in many
-    # pairs) are harmless under min. Built inside the single explode, never
-    # via a union with a distinct-endpoints frame — a Union node defeats
-    # InMemoryRelation substitution for its whole subtree in this Spark
-    # build and would re-run the caller's pair pipeline per materialization.
-    edges = (
-        pairs.selectExpr(
-            "explode(array(named_struct('src', doc_a, 'dst', doc_b), "
-            "named_struct('src', doc_b, 'dst', doc_a), "
-            "named_struct('src', doc_a, 'dst', doc_a), "
-            "named_struct('src', doc_b, 'dst', doc_b))) AS e"
-        )
-        .select("e.src", "e.dst")
-        .repartition("src")
-        .persist()
+    A near-dup graph is tiny by construction (230 pairs over 672 docs at
+    sf0.01). Above MAX_ROWS pairs the distributed answer would be
+    large-star/small-star (Kiveris et al., SoCC 2014), O(log n) rounds."""
+    what = "connected_components pairs"
+    instead = (
+        "dedup exact duplicates upstream, or cap max_bucket_size in "
+        "lsh_candidate_pairs"
     )
-    # the active set: only docs that have at least one edge propagate
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("component")
+    edges = [np.empty((0, 2), np.int64)]
+    for p in pairs:
+        rows = _small.collect(p.select("doc_a", "doc_b"), what, instead)
+        edges.append(np.array(rows, dtype=np.int64).reshape(-1, 2))
+        _small.check(sum(map(len, edges)), what, instead)
+    e = np.concatenate(edges)
+    nodes, comp = _min_labels(e[:, 0], e[:, 1])
+    moved = nodes != comp
+    labels = _small.frame(
+        ids.sparkSession,
+        list(zip(nodes[moved].tolist(), comp[moved].tolist())),
+        "doc_id bigint, component bigint",
+        what,
+        instead,
     )
-    prev = None
-    done = 0
-    batches = 0
-    batch_size = max(1, check_every)
-    while done < max_rounds:
-        batch = min(batch_size, max_rounds - done)
-        cur = labels
-        for j in range(batch):
-            # snapshot the label entering the batch's FINAL round only: the
-            # stability test below then means "the last round changed
-            # nothing", i.e. the fixpoint is reached — earlier rounds in
-            # the batch are allowed to have changed
-            if j == batch - 1:
-                cur = cur.select(
-                    "doc_id", "component", F.col("component").alias("_old")
-                )
-            # USING-join on a renamed key, never `edges.src == cur.doc_id`:
-            # in the second lazy round `cur`'s lineage already CONTAINS
-            # `edges`, and cross-lineage attribute references resolve
-            # ambiguously in a self-referencing plan (observed as a
-            # degenerate join -> OOM on a 12-node chain)
-            joined = edges.withColumnRenamed("src", "doc_id").join(cur, "doc_id")
-            aggs = [F.min("component").alias("component")]
-            if j == batch - 1:
-                # the node's own pre-round label travels on its self-loop
-                # rows (doc_id == dst); other rows contribute NULL
-                aggs.append(
-                    F.min(
-                        F.when(F.col("doc_id") == F.col("dst"), F.col("_old"))
-                    ).alias("_old")
-                )
-            cur = (
-                joined.groupBy("dst")
-                .agg(*aggs)
-                .withColumnRenamed("dst", "doc_id")
-            )
-        # localCheckpoint (eager), NOT persist: a round is one join + one
-        # aggregate over the previous labels, so without truncation each
-        # batch's plan grows by every round run so far (persist caches
-        # data, not the plan). The checkpoint cuts lineage to a leaf,
-        # keeping plan size CONSTANT per batch, and lets the superseded
-        # batch be released as soon as its successor materializes (below).
-        old_batch = prev
-        cur = cur.localCheckpoint()
-        # labels only ever decrease, so `< _old` == "the final round of the
-        # batch changed something" — the fused convergence check
-        stable = cur.filter(F.col("component") < F.col("_old")).isEmpty()
-        prev = cur
-        labels = cur.drop("_old")
-        # the superseded batch's checkpoint blocks are unreachable the
-        # moment the new batch materializes — release them NOW instead of
-        # waiting for the ContextCleaner to GC the py4j handles (r6:
-        # profiled creep of 6 -> 10 pinned RDDs / 156 -> 330 MB across
-        # bench repeats; a forced GC reclaimed them and removed the
-        # repeat-over-repeat slowdown)
-        if old_batch is not None:
-            _cache.release_checkpoint_df(old_batch)
-        done += batch
-        batches += 1
-        batch_size *= 2
-        if stable:
-            break
-    if stats is not None:
-        stats["rounds"], stats["batches"] = done, batches
-    # the FINAL batch's checkpoint backs the returned plan, so it belongs to
-    # the result (the ContextCleaner reclaims it once the caller drops it);
-    # the edges are read by no plan once a batch has materialized
-    if prev is not None:
-        edges.unpersist()
-    active = prev.drop("_old") if prev is not None else labels
-    # restore singletons: every id not in the active set is its own
-    # component. The right side is the (tiny) near-dup label table —
-    # AQE broadcasts it, so the corpus-wide side never shuffles.
-    return ids.select("doc_id").join(active, "doc_id", "left_outer").select(
+    return ids.select("doc_id").join(F.broadcast(labels), "doc_id", "left_outer").select(
         "doc_id", F.coalesce("component", "doc_id").alias("component")
     )
 

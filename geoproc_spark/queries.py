@@ -691,9 +691,9 @@ cand AS (SELECT DISTINCT b1.doc_id AS doc_a, b2.doc_id AS doc_b
               AND b1.doc_id < b2.doc_id)
 """
 
-# 6 unrolled min-propagation rounds: planted components have diameter <= 2,
-# organic near-dup chains at sf0.01 converge by round 3 (verified); extra
-# rounds are idempotent, so 6 is pure safety margin over any fixture drift
+# the oracle unrolls 6 min-propagation rounds (extra rounds are idempotent);
+# the Spark path labels to the exact fixpoint, and its MATCH at sf0.01 and
+# sf0.1 shows every fixture component's diameter is within those 6 rounds
 _CC_ROUNDS = 6
 _CC_PROP_DUCK = "\n".join(
     f"""l{i + 1} AS (
@@ -733,11 +733,10 @@ SELECT doc_id, CAST(c AS BIGINT) AS component FROM fin
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline end-to-end: exact-hash pairs + LSH candidates
-    refined by exact Jaccard (>= 0.8) -> connected components by iterative
-    min-label propagation -> canonical (min) doc id per component, one row
-    per document. The Spark path iterates to convergence (an ITERATIVE
-    algorithm — driver loop, each round one small label join); the oracle
-    unrolls 6 propagation rounds, comfortably above the fixture graph diameter (extra rounds are idempotent)."""
+    refined by exact Jaccard (>= 0.8) -> connected components -> canonical
+    (min) doc id per component, one row per document. The pairs are
+    collected once and labelled by a union-find on the driver
+    (dd.connected_components); the oracle unrolls 6 propagation rounds."""
     from .operators._cache import swap_cache
 
     # spread the narrow local corpus so the md5-per-shingle base pass uses
@@ -785,40 +784,14 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
     )
-    # localCheckpoint EACH branch before the union: a Union node defeats
-    # cache substitution for its whole subtree in this Spark build (see
-    # dd.connected_components), so a lazy near∪exact would re-run both
-    # pipelines from the parquet scans — ignoring the persisted base/bands
-    # — every time the edge cache materializes (measured ~2x the whole
-    # query). Checkpointing materializes each branch ONCE through the
-    # caches; the union then reads two RDD leaves. The two checkpoints are
-    # independent jobs — run them on threads so exact's stages back-fill
-    # near's stragglers (guide §2.6). Job groups and tags are thread-local,
-    # so each thread starts with the caller's.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    from .operators._cache import release_checkpoint_df
-
-    checkpoint = inheritable_thread_target(spark)(lambda df: df.localCheckpoint())
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        near_ck, exact_ck = pool.map(checkpoint, (near, exact))
-    bands.unpersist()
-    pairs = near_ck.unionByName(exact_ck).distinct()
-    # check_every=3 (r6): near-dup graphs are near-cliques (diameter <= 2
-    # by construction: members pair through a shared canonical), so 3
-    # propagation rounds reach the fixpoint AND prove it (one change-free
-    # round) — running them as ONE batch halves the driver round-trips
-    # (batches 2 -> 1, same 3 rounds). Chains still converge in O(log d)
-    # batches via the doubling schedule (3, 6, 12, ...).
+    # near and exact go to connected_components as TWO frames, never a
+    # union: each collect then reads the base/bands caches, while a Union
+    # node defeats cache substitution for its whole subtree in this Spark
+    # build and would re-run the base pass from the parquet scans
     try:
-        return dd.connected_components(base.select("doc_id"), pairs, check_every=3)
+        return dd.connected_components(base.select("doc_id"), near, exact)
     finally:
-        # the pairs are consumed by the loop's first batch; the result reads
-        # only the label checkpoint and base (see operators/_cache)
-        release_checkpoint_df(near_ck)
-        release_checkpoint_df(exact_ck)
+        bands.unpersist()
 
 
 @query(
@@ -1715,7 +1688,7 @@ def corpus_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an inline array + filter + explode — the 6-branch union this
     # replaces re-scanned the corpus once per variant class (and a Union
     # over a cached upstream would also lose cache substitution in this
-    # Spark build; see dd.connected_components). Same row set, same oracle.
+    # Spark build; see dedup_components). Same row set, same oracle.
     variants = [
         (10000000, 7, "concat(url, '?utm_source=feed&gclid=abc&utm_campaign=x')"),
         (20000000, 11, "concat('http://www.', regexp_replace(url, '^https://', ''), '/')"),

@@ -256,51 +256,109 @@ def test_short_docs_have_no_signature_and_stay_singleton(spark):
     assert (1, 2) not in got  # short docs never pair via the empty bucket
 
 
+def _brute_components(ids, pairs) -> dict[int, int]:
+    """Component minimum per id by a plain Python union-find."""
+    parent = {i: i for i in ids}
+
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {i: root(i) for i in ids}
+
+
 def test_connected_components_long_chain(spark):
-    """Robustness beyond near-clique dup graphs: a diameter-11 path graph
-    converges to one component within max_rounds, and the adaptive batch
-    doubling (VERDICT r04 #1) caps driver round-trips at O(log d): with
-    batches 1+2+4+8 and the r6 last-round-of-batch convergence check
-    (round 15 is change-free, proving the fixpoint with no extra
-    confirming batch) the 11 propagation rounds arrive in <= 4 batches,
-    not the 12 a fixed check_every=1 would take. Singletons outside the
-    edge set are restored by the final label join."""
-    ids = spark.createDataFrame([(i,) for i in range(14)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(11)], "doc_a long, doc_b long"
-    )
-    stats = {}
-    out = {
-        r.doc_id: r.component
-        for r in dd.connected_components(ids, pairs, stats=stats).collect()
+    """Components equal a brute-force union-find on the graphs a min-label
+    loop finds hardest or easiest to get wrong: a randomly permuted path
+    (diameter ~10^4), a star whose centre has the maximum id, disjoint
+    cliques, repeated and reversed pairs, self-pairs, and no pairs at all
+    (every id is its own component). Ids outside every pair stay
+    singletons."""
+    import random
+
+    rng = random.Random(7)
+    path = list(range(10_000))
+    rng.shuffle(path)
+    cliques = [
+        (a, b)
+        for base in range(20_000, 20_100, 10)
+        for a in range(base, base + 5)
+        for b in range(a + 1, base + 5)
+    ]
+    graphs = {
+        "permuted path": list(zip(path, path[1:])),
+        "star, max centre": [(30_999, i) for i in range(30_000, 30_999)],
+        "disjoint cliques": cliques,
+        "repeated and reversed": [(40_001, 40_002), (40_002, 40_001)] * 3
+        + [(40_003, 40_002), (40_004, 40_005), (40_005, 40_004)],
+        "self-pairs": [(50_000, 50_000), (50_001, 50_001), (50_001, 50_002)],
+        "no pairs": [],
     }
-    want = {i: 0 for i in range(12)}
-    want.update({12: 12, 13: 13})  # singletons never enter the loop
-    assert out == want
-    assert stats["batches"] <= 4, stats
-    assert stats["rounds"] >= 11, stats  # diameter-11 needs 11 propagations
+    for name, pairs in graphs.items():
+        ids = sorted({d for p in pairs for d in p} | {60_000, 60_001})
+        out = _components(
+            dd.connected_components(
+                spark.createDataFrame([(i,) for i in ids], "doc_id long"),
+                spark.createDataFrame(pairs, "doc_a long, doc_b long"),
+            )
+        )
+        assert out == _brute_components(ids, pairs), name
 
 
-def test_connected_components_edge_cache_is_single_pass(spark):
-    """The symmetric edge build must be ONE explode pass over the pairs
-    input, never a two-branch self-union: a Union node defeats
-    InMemoryRelation substitution for its whole subtree in this Spark
-    build, which made the old union edge build re-run the caller's entire
-    pair pipeline twice from the source scans. Plan-asserted: no Union in
-    the optimized edge-cache lineage."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "doc_a long, doc_b long"
-    )
-    edges = (
-        pairs.selectExpr(
-            "explode(array(named_struct('src', doc_a, 'dst', doc_b), "
-            "named_struct('src', doc_b, 'dst', doc_a))) AS e"
-        ).select("e.src", "e.dst")
-    )
-    plan = edges._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" not in plan
-    got = {(r.src, r.dst) for r in edges.collect()}
-    assert got == {(1, 2), (2, 1), (2, 3), (3, 2)}
+def _plan_nodes(node) -> list[str]:
+    """Node names of a plan tree, not descending into a cached relation's
+    own lineage (an inner child, not a child)."""
+    kids = node.children()
+    return [node.nodeName()] + [n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))]
+
+
+def test_connected_components_pair_collects_read_caches(spark, monkeypatch):
+    """dedup_components hands near and exact pairs to connected_components
+    as two frames and never unions them: each pair collect's plan reads the
+    call's caches (InMemoryRelation, scanned by InMemoryTableScan) and
+    holds no Union, which would re-run the base pass from the parquet
+    scans."""
+    from geoproc_spark import queries as Q
+    from geoproc_spark.operators import _small
+
+    plans = []
+    collect = _small.collect
+
+    def spy(df, what, instead):
+        if what.startswith("connected_components"):
+            plans.append(_plan_nodes(df._jdf.queryExecution().optimizedPlan()))
+        return collect(df, what, instead)
+
+    monkeypatch.setattr(_small, "collect", spy)
+    Q.dedup_components(spark, SF_DIR).collect()
+    assert len(plans) == 2
+    for nodes in plans:
+        assert "InMemoryRelation" in nodes
+        assert "Union" not in nodes
+
+
+def test_dedup_components_warm_call_job_budget(spark):
+    """A warm dedup_components call, result collected, runs at most 15
+    Spark jobs: the AQE stages of its two pair collects and of the final
+    collect (the label-propagation loop it replaced ran 33)."""
+    from geoproc_spark import queries as Q
+
+    sc = spark.sparkContext
+    Q.dedup_components(spark, SF_DIR).collect()
+    sc.setJobGroup("dedup_cc_budget", "dedup_cc_budget")
+    try:
+        Q.dedup_components(spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup_cc_budget")
+    assert 0 < len(jobs) <= 15, len(jobs)
 
 
 def _persistent_rdd_ids_above(spark, mark: int) -> set[int]:
@@ -378,17 +436,17 @@ def test_dedup_components_jobs_carry_caller_group_and_tag(spark):
 
 def test_materializations_owned_by_call(spark):
     """What a call leaves persisted is exactly what its result reads:
-    connected_components keeps only its final label checkpoint;
-    dedup_components keeps that plus the dedup base cache (swap_cache)
-    that the result reads doc_id from. Edges, bands and the near/exact
-    pair checkpoints are released before the call returns."""
+    connected_components keeps nothing (its labels are a local relation);
+    dedup_components keeps only the dedup base cache (swap_cache) that the
+    result reads doc_id from. The bands are released before the call
+    returns."""
     from geoproc_spark import queries as Q
 
     ids = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
     pairs = spark.createDataFrame([(0, 1), (1, 2), (3, 4)], "doc_a long, doc_b long")
     mark = _rdd_id_mark(spark)
     cc = dd.connected_components(ids, pairs)
-    assert len(_persistent_rdd_ids_above(spark, mark)) == 1
+    assert len(_persistent_rdd_ids_above(spark, mark)) == 0
     assert _components(cc) == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
 
     # the second call repeats the first's plans: it must not evict the base
@@ -396,26 +454,8 @@ def test_materializations_owned_by_call(spark):
     for _ in range(2):
         mark = _rdd_id_mark(spark)
         out = Q.dedup_components(spark, SF_DIR)
-        assert len(_persistent_rdd_ids_above(spark, mark)) == 2
+        assert len(_persistent_rdd_ids_above(spark, mark)) == 1
         assert out.count() > 0
-
-
-def test_release_checkpoint_df_warns_on_non_checkpoint(spark):
-    """Releasing a DataFrame that is not a localCheckpoint (analyzed root
-    not a LogicalRDD) releases nothing and says so; a real checkpoint
-    releases silently."""
-    import warnings
-
-    import pytest
-
-    from geoproc_spark.operators import _cache
-
-    with pytest.warns(UserWarning, match="Range, not a checkpoint"):
-        _cache.release_checkpoint_df(spark.range(3))
-    ck = spark.range(3).localCheckpoint()
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        _cache.release_checkpoint_df(ck)
 
 
 def test_swap_cache_propagates_non_py4j_release_errors(spark):

@@ -137,6 +137,24 @@ def test_projected_windows_oversized_grid_fails_before_any_job(spark, monkeypatc
     assert list(sc.statusTracker().getJobIdsForGroup("small_side_guard")) == []
 
 
+def test_connected_components_oversized_pair_set_fails_cleanly(spark, monkeypatch):
+    """The bound holds over the pair frames together: two frames of 2 and
+    1 pairs pass one by one under MAX_ROWS = 2 but fail as a set."""
+    from geoproc_spark.operators import dedup as dd
+
+    ids = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
+    near = spark.createDataFrame([(0, 1), (2, 3)], "doc_a long, doc_b long")
+    exact = spark.createDataFrame([(4, 5)], "doc_a long, doc_b long")
+    monkeypatch.setattr(_small, "MAX_ROWS", 2)
+    assert dd.connected_components(ids, near).count() == 6
+    with pytest.raises(
+        ValueError,
+        match=r"connected_components pairs: 3 rows .*dedup exact duplicates upstream, "
+        r"or cap max_bucket_size",
+    ):
+        dd.connected_components(ids, near, exact)
+
+
 def test_frame_is_a_local_relation_with_create_dataframe_rows(spark):
     """_small.frame plans a JVM LocalRelation (no Python RDD behind it) and
     holds exactly the rows createDataFrame(rows, ddl) holds, for every
