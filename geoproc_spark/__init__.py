@@ -23,3 +23,16 @@ over web-page corpora:
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+if _sys.version_info < (3, 13):
+    from pyspark import TaskContext as _TaskContext
+
+    # Inside a Python worker task: each library UDF imports this package
+    # when the worker unpickles it, so this runs once per worker process and
+    # never on the driver. See `_worker.py` for what it saves.
+    if _TaskContext.get() is not None:
+        from geoproc_spark._worker import install as _install
+
+        _install()

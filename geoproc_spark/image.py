@@ -31,6 +31,7 @@ import numbers
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, IntegerType, StructField, StructType
 
 from .operators import _small
 from .operators import algebra as A
@@ -45,6 +46,24 @@ STREAM_PARTITION_TILES = 64
 # too large for the driver (operators._small)
 _WIN_DDL = "wid bigint, col_off int, row_off int, win_w int, win_h int"
 _WIN_SMALLER = "raise window_size or scale, or export smaller bounds"
+
+
+def _read_back_schema(schema: StructType, partition_zooms: bool) -> StructType:
+    """The schema Spark infers for a tile table written from `schema`: a
+    file source reads every field and array element as nullable, and a
+    `z=` directory partition comes last with its values' type, int."""
+
+    def nullable(t: DataType) -> DataType:
+        return ArrayType(nullable(t.elementType), True) if isinstance(t, ArrayType) else t
+
+    fields = [
+        StructField(f.name, nullable(f.dataType), True, f.metadata)
+        for f in schema
+        if not (partition_zooms and f.name == "z")
+    ]
+    if partition_zooms:
+        fields.append(StructField("z", IntegerType(), True))
+    return StructType(fields)
 
 
 class Image:
@@ -131,16 +150,17 @@ class Image:
         (/root/reference/geoproc/server/image.py:95). The reference reads
         band count/zooms from the raster profile without touching pixels;
         here `export` writes an `_image_meta.json` sidecar and `load` reads
-        it — the `.first()` pixel probe runs only for foreign tables with
-        no sidecar."""
+        it, the table's schema included, so a load runs no job. The
+        schema-inference job and the `.first()` pixel probe run only for
+        foreign tables with no sidecar."""
         import json
         import os
 
-        df = spark.read.parquet(path)
         meta_path = os.path.join(path, "_image_meta.json")
         if os.path.exists(meta_path):
             with open(meta_path) as fh:
                 m = json.load(fh)
+            df = spark.read.schema(StructType.fromJson(m["schema"])).parquet(path)
             if n_bands is None and m.get("band_names"):
                 names = m["band_names"]  # band identity survives the roundtrip
             else:
@@ -153,6 +173,7 @@ class Image:
                 min_zoom=m.get("min_zoom"),
                 max_zoom=m.get("max_zoom"),
             )
+        df = spark.read.parquet(path)
         first = df.select(F.size(F.col("data")).alias("nb"), F.size(F.col("data")[0]).alias("np")).first()
         nb = n_bands or first["nb"]
         return cls(df.select(*TILE_KEY, "data", "mask"), [f"B{i+1}" for i in range(nb)], "float64", first["np"])
@@ -951,8 +972,9 @@ class Image:
         if partition_zooms:
             writer = writer.partitionBy("z")
         writer.parquet(path)
-        # metadata sidecar: load() reads schema without a pixel probe (the
-        # reference reads the raster profile, server/image.py:441-443)
+        # metadata sidecar: load() reads bands and the table's schema
+        # without a pixel probe or an inference job (the reference reads
+        # the raster profile, server/image.py:441-443)
         with open(os.path.join(path, "_image_meta.json"), "w") as fh:
             json.dump(
                 {
@@ -961,6 +983,7 @@ class Image:
                     "band_names": self.band_names,
                     "min_zoom": self.min_zoom,
                     "max_zoom": self.max_zoom,
+                    "schema": _read_back_schema(out.schema, partition_zooms).jsonValue(),
                 },
                 fh,
             )

@@ -375,9 +375,9 @@ def _components(df) -> dict[int, int]:
 
 
 def test_connected_components_results_stay_live(spark):
-    """A result stays readable after a later call: the checkpoint behind
-    the first call's labels belongs to that result, so the second call
-    (over a different pair set) must not release it."""
+    """A result stays readable after a later call: each call's labels are
+    its own driver-built local relation, so the second call (over a
+    different pair set) can neither change nor release the first call's."""
     ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     first = dd.connected_components(
         ids, spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "doc_a long, doc_b long")
@@ -404,9 +404,10 @@ def test_dedup_components_concurrent_calls(spark):
 
 
 def test_dedup_components_jobs_carry_caller_group_and_tag(spark):
-    """Job groups and tags are thread-local, and the two branch checkpoints
-    run on pool threads: every job the call starts, those included, carries
-    the caller's job group and job tag."""
+    """Job groups and tags are thread-local properties: every job the call
+    starts (the base pass, the pair collects, the label join) carries the
+    caller's job group and job tag, so no job runs on a thread that lost
+    them."""
     from geoproc_spark import queries as Q
 
     sc = spark.sparkContext

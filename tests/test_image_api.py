@@ -227,6 +227,39 @@ def test_from_array_ingest_roundtrip(spark, tmp_path):
         assert np.array_equal(m, pm[ty * side : (ty + 1) * side, tx * side : (tx + 1) * side].ravel())
 
 
+def test_load_of_exported_table_runs_no_job(spark, tmp_path):
+    """`export` records the table's schema as Spark reads it back, so
+    `load` starts no schema-inference job, and the loaded schema equals the
+    inferred one (nullability and the trailing `z` partition included)."""
+    import json
+    import os
+
+    import numpy as np
+    from pyspark.sql.types import StructType
+
+    data = np.arange(2 * 20 * 20, dtype=float).reshape(2, 20, 20)
+    img = Image.from_array(spark, data, zoom=4, x0=1, y0=1, tile_side=16)
+    sc = spark.sparkContext
+    for partition_zooms in (True, False):
+        path = str(tmp_path / f"t{int(partition_zooms)}")
+        img.export(path, partition_zooms=partition_zooms)
+        group = f"image_load_{int(partition_zooms)}"
+        sc.setJobGroup(group, "Image.load")
+        try:
+            back = Image.load(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        inferred = spark.read.parquet(path).schema
+        with open(os.path.join(path, "_image_meta.json")) as fh:
+            assert StructType.fromJson(json.load(fh)["schema"]) == inferred
+        assert back.source.schema == StructType([inferred[c] for c in back.source.columns])
+        assert back.band_names == ["B1", "B2"] and back.n_px == 256
+        assert back.df.count() == 4
+
+
 def test_export_projected_3857_output_and_broadcast_plan(spark, tmp_path):
     """(a) EPSG:3857 output grid: pixel centers run through the inverse
     mercator before sampling — golden vs the numpy twin on one window.
