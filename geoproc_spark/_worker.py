@@ -8,9 +8,9 @@ importer per package path it imported from an archive: about 16 over
 `pyspark.zip` (1,328 entries), the py4j zip and the spark-core jar (5,359
 entries) that Spark puts on the worker's path. So every task re-reads
 ~27k directory entries before its function runs: ~0.2 CPU-s per task on a
-reused worker. CPython 3.13 only drops the cached directory and reads it again on next
-use, so `geoproc_spark/__init__.py` installs this on older versions only,
-and only inside a worker task.
+reused worker. CPython 3.13 only drops the cached directory and reads it
+again on next use, so `geoproc_spark/__init__.py` installs this on older
+versions only, and only inside a worker task.
 
 Why it is safe: a directory is reused only when the archive's
 (inode, mtime_ns, size) equal their values at its last read, taken before
