@@ -31,7 +31,7 @@ import numbers
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, IntegerType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from .operators import _small
 from .operators import algebra as A
@@ -46,24 +46,6 @@ STREAM_PARTITION_TILES = 64
 # too large for the driver (operators._small)
 _WIN_DDL = "wid bigint, col_off int, row_off int, win_w int, win_h int"
 _WIN_SMALLER = "raise window_size or scale, or export smaller bounds"
-
-
-def _read_back_schema(schema: StructType, partition_zooms: bool) -> StructType:
-    """The schema Spark infers for a tile table written from `schema`: a
-    file source reads every field and array element as nullable, and a
-    `z=` directory partition comes last with its values' type, int."""
-
-    def nullable(t: DataType) -> DataType:
-        return ArrayType(nullable(t.elementType), True) if isinstance(t, ArrayType) else t
-
-    fields = [
-        StructField(f.name, nullable(f.dataType), True, f.metadata)
-        for f in schema
-        if not (partition_zooms and f.name == "z")
-    ]
-    if partition_zooms:
-        fields.append(StructField("z", IntegerType(), True))
-    return StructType(fields)
 
 
 class Image:
@@ -967,6 +949,8 @@ class Image:
         import json
         import os
 
+        from .sources.tableformat import read_back_schema
+
         out = self.df.repartitionByRange(*TILE_KEY).sortWithinPartitions(*TILE_KEY)
         writer = out.write.mode("overwrite").option("maxRecordsPerFile", rows_per_file)
         if partition_zooms:
@@ -983,7 +967,9 @@ class Image:
                     "band_names": self.band_names,
                     "min_zoom": self.min_zoom,
                     "max_zoom": self.max_zoom,
-                    "schema": _read_back_schema(out.schema, partition_zooms).jsonValue(),
+                    "schema": read_back_schema(
+                        out.schema, ["z"] if partition_zooms else []
+                    ).jsonValue(),
                 },
                 fh,
             )

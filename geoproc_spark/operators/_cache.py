@@ -5,16 +5,17 @@ One ownership rule, by what the returned DataFrame still reads:
 1. An intermediate the result does not reference (dedup_components'
    persisted LSH bands) is released by the call before it returns, with
    `DataFrame.unpersist()`.
-2. A cache the result references lazily (LSH bands, cell-keyed pages, the
-   dedup base table) goes through `swap_cache`: ONE cached lineage per
-   operator key, each call unpersisting the previous call's cache. Evicting
-   a cache only drops data that can be recomputed, so a result from an
-   earlier call stays correct; it just recomputes.
-3. A checkpoint that backs the result (windowed.run_hourly_stream's
-   localCheckpoint of its sink) belongs to that DataFrame and is never
-   released by a later call. Spark's ContextCleaner reclaims its
+2. A cache the result references lazily (lsh_candidate_pairs' LSH bands,
+   the dedup_components base table) goes through `swap_cache`: ONE cached
+   lineage per operator key, each call unpersisting the previous call's
+   cache. Evicting a cache only drops data that can be recomputed, so a
+   result from an earlier call stays correct; it just recomputes.
+3. A checkpoint that backs the result (windowed.run_hourly_stream_append's
+   localCheckpoint of its sink files) belongs to that DataFrame and is
+   never released by a later call. Spark's ContextCleaner reclaims its
    blocks once the caller drops the result (see session.ENGINE_CONF's
-   periodicGC interval).
+   periodicGC interval). The memory-sink streams return a local relation
+   that holds its own rows, so nothing is left to release.
 
 Thread safety (ADVICE r02): bench.py and real pipelines run jobs on
 threads, so the swap_cache registry swap is guarded by a lock — without it

@@ -75,6 +75,13 @@ def frame(
     if rows and isinstance(rows[0], dict):
         rows = [tuple(r[n] for n in schema.names) for r in rows]
     cols = list(zip(*rows)) or [()] * len(schema)
+    # collect() hands back a TIMESTAMP as a naive datetime in the driver's
+    # local time zone, which pa.array would read as UTC: pass epoch micros
+    ts = T.TimestampType()
+    cols = [
+        [ts.toInternal(v) for v in c] if isinstance(f.dataType, T.TimestampType) else c
+        for c, f in zip(cols, schema)
+    ]
     arrow = to_arrow_schema(schema)
     table = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
     return spark.createDataFrame(table, schema)

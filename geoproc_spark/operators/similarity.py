@@ -248,11 +248,16 @@ def probe_ivf_index(
 
     The probed list ids come from the collected query side and are pushed
     as a LITERAL partition filter — static pruning the scan shows in
-    PartitionFilters, no reliance on runtime DPP."""
+    PartitionFilters, no reliance on runtime DPP. The index is read with
+    its footer's schema plus `list_id`, so no schema-inference job runs."""
+    from ..sources.tableformat import parquet_schema, read_back_schema
+
     cents = np.asarray(centroids, dtype=np.float64)
     qids, qmat = _collect_side(queries, "qid", "probe_ivf_index query table", cents.shape[1])
     lists = _nearest_lists(qmat, cents, nprobe)
-    scan = spark.read.parquet(path).filter(F.col("list_id").isin(np.unique(lists).tolist()))
+    schema = read_back_schema(parquet_schema(path), ["list_id"])
+    scan = spark.read.schema(schema).parquet(path)
+    scan = scan.filter(F.col("list_id").isin(np.unique(lists).tolist()))
     return _bucket_topk(
         scan, qids, qmat, lists, lambda pdf, _: pdf["list_id"].to_numpy(np.int64), k, "emb_c"
     )

@@ -1234,16 +1234,12 @@ def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink (streaming/windowed.py) — must equal the batch SQL on a
     bounded input. Fresh checkpoint per call keeps the query idempotent."""
     import tempfile
-    import uuid
 
     from .streaming import windowed
 
-    name = f"hourly_stream_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="geoproc_stream_ckpt_")
     try:
-        return windowed.run_hourly_stream(
-            spark, f"{sf_dir}/events.parquet", ckpt, out_table=name
-        )
+        return windowed.run_hourly_stream(spark, f"{sf_dir}/events.parquet", ckpt)
     finally:
         # complete-mode results live in the memory sink; the checkpoint is
         # only needed while the availableNow run is in flight
@@ -1800,6 +1796,28 @@ def tile_export_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cdf.mapInPandas(spec_rows, schema)
 
 
+def _export_digest(spark: SparkSession, **grid) -> DataFrame:
+    """Fixture image A through `Image.projected_windows(**grid)` in 32 px
+    windows, one digest row per (window, band): n_valid and a
+    position-weighted integer checksum, which pin every pixel value and
+    every mask byte of the window."""
+    from .image import Image
+
+    img = Image.from_df(
+        synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX,
+        max_zoom=synth.TILE_Z,
+    )
+    wdf, _spec = img.projected_windows(window_size=32, **grid)
+    win = ["col_off", "row_off", "win_w", "win_h"]
+    return wdf.selectExpr(*win, "posexplode(data) AS (band_idx, band_data)", "mask").selectExpr(
+        *win,
+        "band_idx",
+        "aggregate(mask, 0L, (a, m) -> a + IF(m = 255, 1L, 0L)) AS n_valid",
+        "aggregate(zip_with(band_data, sequence(1, size(band_data)), "
+        "(v, i) -> CAST(v AS BIGINT) * i), 0L, (a, x) -> a + x) AS checksum",
+    )
+
+
 @query("tile_export_projected")  # oracle: independent numpy resampler -> VALUES
 def tile_export_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projected-grid resampled export end-to-end (reference export loop,
@@ -1808,30 +1826,7 @@ def tile_export_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     One digest row per (window, band): n_valid + position-weighted integer
     checksum — pins every pixel value and every mask byte of every window
     against the independent numpy resampler."""
-    from .image import Image
-
-    img = Image.from_df(
-        synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX,
-        max_zoom=synth.TILE_Z,
-    )
-    wdf, _spec = img.projected_windows(scale=400000.0, crs="epsg:4326", window_size=32)
-    return wdf.selectExpr(
-        "col_off",
-        "row_off",
-        "win_w",
-        "win_h",
-        "posexplode(data) AS (band_idx, band_data)",
-        "mask",
-    ).selectExpr(
-        "col_off",
-        "row_off",
-        "win_w",
-        "win_h",
-        "band_idx",
-        "aggregate(mask, 0L, (a, m) -> a + IF(m = 255, 1L, 0L)) AS n_valid",
-        "aggregate(zip_with(band_data, sequence(1, size(band_data)), "
-        "(v, i) -> CAST(v AS BIGINT) * i), 0L, (a, x) -> a + x) AS checksum",
-    )
+    return _export_digest(spark, scale=400000.0, crs="epsg:4326")
 
 
 @query("tile_export_utm")  # oracle: independent numpy resampler -> VALUES
@@ -1843,32 +1838,8 @@ def tile_export_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     lon/lat bounds box, windowed 32 px. Same digest contract as
     tile_export_projected; the UTM forward/inverse is the Krueger-series
     kernel in functions/tmerc.py."""
-    from .image import Image
-
-    img = Image.from_df(
-        synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX,
-        max_zoom=synth.TILE_Z,
-    )
-    wdf, _spec = img.projected_windows(
-        scale=10000.0, crs="epsg:32630", bounds=(-6.0, 40.0, -0.5, 50.0),
-        window_size=32,
-    )
-    return wdf.selectExpr(
-        "col_off",
-        "row_off",
-        "win_w",
-        "win_h",
-        "posexplode(data) AS (band_idx, band_data)",
-        "mask",
-    ).selectExpr(
-        "col_off",
-        "row_off",
-        "win_w",
-        "win_h",
-        "band_idx",
-        "aggregate(mask, 0L, (a, m) -> a + IF(m = 255, 1L, 0L)) AS n_valid",
-        "aggregate(zip_with(band_data, sequence(1, size(band_data)), "
-        "(v, i) -> CAST(v AS BIGINT) * i), 0L, (a, x) -> a + x) AS checksum",
+    return _export_digest(
+        spark, scale=10000.0, crs="epsg:32630", bounds=(-6.0, 40.0, -0.5, 50.0)
     )
 
 

@@ -42,7 +42,7 @@ import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, IntegerType, StructField, StructType
 
 
 def _meta_dir(path: str) -> str:
@@ -142,6 +142,24 @@ def parquet_schema(path: str) -> StructType:
     take their schema from the manifest)."""
     schema = pads.dataset(path, format="parquet").schema
     return from_arrow_schema(schema, prefer_timestamp_ntz=True)
+
+
+def read_back_schema(schema: StructType, partition_by: list[str]) -> StructType:
+    """The schema Spark infers for a parquet table written from `schema`
+    with `partition_by` as `key=value` directories: a file source reads
+    every field and array element as nullable, and the partition columns
+    come last, typed int (the type of integer partition values). Handing
+    it to `spark.read.schema(...)` spares Spark its inference job."""
+
+    def nullable(t: DataType) -> DataType:
+        return ArrayType(nullable(t.elementType), True) if isinstance(t, ArrayType) else t
+
+    fields = [
+        StructField(f.name, nullable(f.dataType), True, f.metadata)
+        for f in schema
+        if f.name not in partition_by
+    ]
+    return StructType(fields + [StructField(c, IntegerType(), True) for c in partition_by])
 
 
 def read_manifest(path: str, snapshot: int | None = None) -> dict | None:

@@ -1,82 +1,52 @@
-"""Stateful streaming: exactly-once event dedup via the state store.
+"""Stateful streaming: exactly-once event dedup and a custom per-user
+operator, both over the checkpointed state store.
 
-`dropDuplicates` on a stream keeps seen keys in the checkpointed state
-store; with a watermark the state is bounded (keys older than the watermark
-age out). The batch twin is a plain `dropDuplicates` — tests pin equality.
+`dropDuplicates` on a stream keeps seen keys in the state store; with a
+watermark the state is bounded (keys older than the watermark age out).
+The batch twin is a plain `dropDuplicates` — tests pin equality.
 
 At scale: the state store shards by key hash across executors and
-checkpoints incrementally (RocksDB provider on a real cluster); the same
-code handles a Kafka source by swapping `readStream.parquet` for
-`readStream.format("kafka")`.
+checkpoints incrementally (RocksDB provider on a real cluster). Both
+runners keep the session's shuffle-partition count as their state
+partition count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..sources.tableformat import parquet_schema
+from . import _drain_to_memory, _replay, _watermarked
 
 
-def dedup_stream(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    out_table: str = "dedup_stream_result",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    schema = parquet_schema(events_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches -> real state reuse
-        .parquet(events_dir)
+def dedup_stream(spark: SparkSession, events_dir: str, checkpoint_dir: str) -> DataFrame:
+    """The events with duplicate `event_id`s dropped, one file per
+    micro-batch so seen keys are carried across batches; `ts` comes back
+    as a tz-aware TIMESTAMP (the watermark's type)."""
+    deduped = _watermarked(_replay(spark, events_dir, one_file_per_batch=True))
+    return _drain_to_memory(
+        deduped.dropDuplicates(["event_id"]), "append", checkpoint_dir, "stream dedup result"
     )
-    from pyspark.sql import functions as F
-
-    # watermarks require TIMESTAMP (tz-aware); parquet delivers NTZ
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    deduped = stream.withWatermark("ts", watermark).dropDuplicates(["event_id"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(out_table)
 
 
-def user_profile_stream(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    out_table: str = "user_profile_stream_result",
-) -> DataFrame:
+def user_profile_stream(spark: SparkSession, events_dir: str, checkpoint_dir: str) -> DataFrame:
     """CUSTOM stateful operator via applyInPandasWithState: a running
     per-user profile (event count, value sum in exact cents, max value)
-    carried in the checkpointed state store across micro-batches
-    (maxFilesPerTrigger=1 forces several, so state genuinely persists and
-    is re-read). Each batch emits the user's updated totals stamped with a
-    monotonically increasing state version; the LATEST version per user
-    must equal the batch groupBy exactly (pinned in tests).
+    carried in the checkpointed state store across micro-batches (one
+    file per batch, so state genuinely persists and is re-read). Each
+    batch emits the user's updated totals stamped with a monotonically
+    increasing state version; the LATEST version per user must equal the
+    batch groupBy exactly (pinned in tests).
 
     This is the applyInPandasWithState shape any custom streaming operator
     here takes (cell-level rollups, per-host crawl budgets): state is an
     explicit tuple the operator owns, not an aggregate Catalyst chose.
     """
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = parquet_schema(events_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("value_cents", F.floor(F.col("value") * 100 + 0.5).cast("bigint"))
-        .select("user_id", "value_cents")
+    stream = _replay(spark, events_dir, one_file_per_batch=True).select(
+        "user_id", F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("value_cents")
     )
 
     out_schema = "user_id bigint, version int, n_events bigint, sum_cents bigint, max_cents bigint"
@@ -110,13 +80,4 @@ def user_profile_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        profiled.writeStream.format("memory")
-        .queryName(out_table)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(out_table)
+    return _drain_to_memory(profiled, "update", checkpoint_dir, "user profile stream result")

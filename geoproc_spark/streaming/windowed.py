@@ -3,13 +3,11 @@
 The reference has no streaming (request/response only, SURVEY.md §2.6) and
 north_rule asks for resumable *batch* checkpoints — but the engine's
 windowed aggregates are written so the same expressions run on a stream:
-`hourly_stream` is the streaming twin of queries.events_hourly, file-source
-+ availableNow trigger + checkpointed sink. Tests assert batch/stream
-result equality (the real guarantee a lakehouse pipeline cares about).
-
-At scale: swap the file source for Kafka, add
-`withWatermark("ts", "2 hours")` and append mode; the aggregation
-expressions are unchanged.
+`run_hourly_stream` is the streaming twin of queries.events_hourly
+(complete mode, memory sink) and `run_hourly_stream_append` its
+production shape (watermark, append mode, file sink). Tests assert
+batch/stream result equality (the real guarantee a lakehouse pipeline
+cares about).
 """
 
 from __future__ import annotations
@@ -17,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import _small
-from ..sources.tableformat import parquet_schema
+from . import _drain_to_memory, _replay, _watermarked
 
 
 def hourly_agg(ev: DataFrame) -> DataFrame:
@@ -44,7 +41,7 @@ class _scoped_conf:
     `_small.collect` bounds. Every state partition writes a delta and a
     checksum file per micro-batch, so the session default (sized for
     corpus-wide shuffles) pays that I/O per partition for a handful of
-    rows. Both streams default to 1 partition. Profiled (sf0.01 events,
+    rows. Both hourly streams use 1 partition. Profiled (sf0.01 events,
     4 cores, rows identical to the batch aggregate): 32 -> 8 partitions
     took a call from 3.4 s to 1.9 s; 8 -> 1 took a warm complete-mode call
     from 1.11 to 0.74 s wall and 2.44 to 1.47 CPU-s (medians of 6
@@ -76,65 +73,23 @@ class _scoped_conf:
         return False
 
 
-def _stream_confs(state_partitions: int | None) -> dict[str, str]:
-    confs = {"spark.sql.streaming.numRecentProgressUpdates": "10000"}
-    if state_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
-    return confs
+_STREAM_CONFS = {
+    "spark.sql.streaming.numRecentProgressUpdates": "10000",
+    "spark.sql.shuffle.partitions": "1",
+}
 
 
-def run_hourly_stream(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    out_table: str = "hourly_stream_result",
-    state_partitions: int | None = 1,
-) -> DataFrame:
-    """Run the hourly aggregate as a stream over a parquet directory with an
-    availableNow trigger (process-everything-then-stop), checkpointed.
-
-    Returns the result as a local relation that owns its rows: the memory
-    sink's rows are taken (no Spark job — they already live on the
-    driver) and its `out_table` view is dropped, so repeated calls leave
-    no sink behind."""
-    import os
-
-    schema = parquet_schema(events_dir)
-    if os.path.isfile(events_dir):
-        # the streaming file source only takes directories: stream the
-        # parent with a glob filter pinned to this one file
-        stream = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", os.path.basename(events_dir))
-            .parquet(os.path.dirname(events_dir))
-        )
-    else:
-        stream = spark.readStream.schema(schema).parquet(events_dir)
-    with _scoped_conf(spark, _stream_confs(state_partitions)):
-        q = (
-            hourly_agg(stream)
-            .writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sink = spark.table(out_table)
-    what, instead = "hourly stream result", "use run_hourly_stream_append"
-    rows = _small.collect(sink, what, instead)
-    spark.catalog.dropTempView(out_table)
-    return _small.frame(spark, rows, sink.schema, what, instead)
+def run_hourly_stream(spark: SparkSession, events_dir: str, checkpoint_dir: str) -> DataFrame:
+    """Run the hourly aggregate in complete mode as a stream over a parquet
+    file or directory, and return the result as a local relation that owns
+    its rows (`_drain_to_memory`)."""
+    agg = hourly_agg(_replay(spark, events_dir, one_file_per_batch=False))
+    with _scoped_conf(spark, _STREAM_CONFS):
+        return _drain_to_memory(agg, "complete", checkpoint_dir, "hourly stream result")
 
 
 def run_hourly_stream_append(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    watermark: str = "2 hours",
-    state_partitions: int | None = 1,
+    spark: SparkSession, events_dir: str, checkpoint_dir: str, out_dir: str
 ):
     """The PRODUCTION streaming shape (VERDICT r04 #2): watermarked
     APPEND-mode hourly aggregate into a file sink.
@@ -142,43 +97,23 @@ def run_hourly_stream_append(
     Complete mode + memory sink (run_hourly_stream) is correct for a
     bounded replay but holds every window in the state store forever and
     collects results to the driver — both scale-killers on an unbounded
-    feed. This variant bounds state with `withWatermark(ts, delay)`:
-    a window is emitted EXACTLY ONCE when the watermark (max event time
-    seen in completed micro-batches, minus the delay) passes its end, and
-    its state is evicted. The file sink appends closed windows
-    distributed, nothing transits the driver. availableNow still runs a
-    trailing no-data micro-batch, so on a bounded input every window whose
-    end <= max(ts) - delay is closed and emitted; younger windows stay in
-    state (exactly what a live feed would do).
+    feed. This variant bounds state with the WATERMARK on `ts`: a window
+    is emitted EXACTLY ONCE when the watermark (max event time seen in
+    completed micro-batches, minus the delay) passes its end, and its
+    state is evicted. The file sink appends closed windows distributed,
+    nothing transits the driver. One file per micro-batch; availableNow
+    still runs a trailing no-data micro-batch, so on a bounded input every
+    window whose end <= max(ts) - delay is closed and emitted; younger
+    windows stay in state (exactly what a live feed would do).
 
     Returns (result DataFrame, state_metrics dict from the final progress:
     numRowsTotal / numRowsRemoved etc. — the observability a capacity plan
     needs)."""
-    import os
-
-    schema = parquet_schema(events_dir)
-    if os.path.isfile(events_dir):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", os.path.basename(events_dir))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.dirname(events_dir))
-        )
-    else:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(events_dir)
-        )
-    # watermarks need tz-aware TIMESTAMP; parquet carries NTZ. Session TZ
-    # is UTC, so the cast (and the cast back on `hour` below) is wall-clock
-    # exact and the batch oracle's buckets are unchanged.
-    ev = stream.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-        "ts", watermark
-    )
-    with _scoped_conf(spark, _stream_confs(state_partitions)):
+    ev = _watermarked(_replay(spark, events_dir, one_file_per_batch=True))
+    with _scoped_conf(spark, _STREAM_CONFS):
         q = (
             hourly_agg(ev)
+            # back to the batch aggregate's NTZ type; wall-clock exact in UTC
             .select(
                 F.col("hour").cast("timestamp_ntz").alias("hour"),
                 "event_type",

@@ -59,10 +59,44 @@ def test_stream_dedup_equals_batch(spark, tmp_path):
     shutil.copy(f"{SF_DIR}/events.parquet", f"{events_dir}/a.parquet")
     shutil.copy(f"{SF_DIR}/events.parquet", f"{events_dir}/b.parquet")
 
-    got = stateful.dedup_stream(spark, events_dir, str(tmp_path / "ckpt"), "dedup_t")
+    got = stateful.dedup_stream(spark, events_dir, str(tmp_path / "ckpt"))
     n_distinct = spark.read.parquet(events_dir).select("event_id").distinct().count()
     assert got.count() == n_distinct
     assert got.select("event_id").distinct().count() == n_distinct
+
+
+def test_stream_dedup_rows_equal_batch_under_non_utc_tz(spark, tmp_path, monkeypatch):
+    """Every column of dedup_stream's rows equals the batch dropDuplicates
+    while the driver process runs in a non-UTC time zone: the result's
+    tz-aware `ts` goes through the driver and must come back unshifted."""
+    import os
+    import shutil
+    import time
+
+    from pyspark.sql import functions as F
+
+    from geoproc_spark.streaming import stateful
+
+    events_dir = str(tmp_path / "ev")
+    os.makedirs(events_dir)
+    shutil.copy(f"{SF_DIR}/events.parquet", f"{events_dir}/a.parquet")
+    shutil.copy(f"{SF_DIR}/events.parquet", f"{events_dir}/b.parquet")
+    batch = (
+        spark.read.parquet(events_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .dropDuplicates(["event_id"])
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        got = stateful.dedup_stream(spark, events_dir, str(tmp_path / "ckpt"))
+        assert got.schema.simpleString() == batch.schema.simpleString()
+        key = lambda r: r["event_id"]  # noqa: E731
+        g, w = sorted(got.collect(), key=key), sorted(batch.collect(), key=key)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert len(g) > 0 and g == w
 
 
 # ------------------------------------------------------- property-based-lite
@@ -128,3 +162,30 @@ def test_ivf_index_table_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "list_id" in plan.split("PartitionFilters")[1][:200]
     want = sorted(map(tuple, sim.ivf_topk(queries, emb, cents, k=5, nprobe=4).collect()))
     assert sorted(map(tuple, got.collect())) == want
+
+
+def test_probe_ivf_index_reads_without_inference_job(spark, tmp_path):
+    """probe_ivf_index reads the index with its footer's schema plus the
+    `list_id` partition column, the schema Spark infers: the call runs
+    only the query-table collect, no schema-inference job."""
+    from geoproc_spark.sources.tableformat import parquet_schema, read_back_schema
+
+    synth.load_tables(spark, SF_DIR, ["embeddings"])
+    emb = spark.table("embeddings")
+    cents = sim.ivf_centroids(emb, n_lists=4)
+    path = str(tmp_path / "ivf_index")
+    sim.write_ivf_index(emb, cents, path)
+    queries = emb.filter("vec_id < 5").selectExpr("vec_id AS qid", "embedding")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_index_probe", "probe_ivf_index")
+    try:
+        got = sim.probe_ivf_index(spark, path, queries, cents, k=3, nprobe=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf_index_probe")) == 1
+    inferred = spark.read.parquet(path).schema
+    assert read_back_schema(parquet_schema(path), ["list_id"]) == inferred
+    assert got.count() == 5 * 3

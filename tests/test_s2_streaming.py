@@ -81,9 +81,7 @@ def test_stream_equals_batch(spark, tmp_path):
     os.makedirs(events_dir)
     shutil.copy(f"{SF_DIR}/events.parquet", events_dir)
 
-    got = windowed.run_hourly_stream(
-        spark, events_dir, str(tmp_path / "ckpt"), "hourly_stream_t"
-    )
+    got = windowed.run_hourly_stream(spark, events_dir, str(tmp_path / "ckpt"))
     want = windowed.hourly_agg(spark.read.parquet(events_dir))
     g = sorted(map(tuple, got.collect()))
     w = sorted(map(tuple, want.collect()))
@@ -100,9 +98,9 @@ def test_hourly_stream_calls_leave_no_sink_view(spark):
 
     batch = windowed.hourly_agg(spark.read.parquet(f"{SF_DIR}/events.parquet"))
     want = sorted(map(tuple, batch.collect()))
+    before = sorted(t.name for t in spark.catalog.listTables())
     results = [Q.SPARK_QUERIES["events_hourly_stream"](spark, SF_DIR) for _ in range(3)]
-    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("hourly_stream_")]
-    assert views == []
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
     for got in results:
         assert sorted(map(tuple, got.collect())) == want
 
@@ -177,9 +175,7 @@ def test_stateful_user_profile_equals_batch(spark, tmp_path):
     # several files -> several micro-batches (maxFilesPerTrigger=1)
     ev.repartition(4).write.mode("overwrite").parquet(events_dir)
 
-    got = stateful.user_profile_stream(
-        spark, events_dir, str(tmp_path / "ckpt"), out_table="profile_t1"
-    )
+    got = stateful.user_profile_stream(spark, events_dir, str(tmp_path / "ckpt"))
     assert got.agg(F.max("version")).first()[0] >= 2  # state actually reused
     from pyspark.sql import Window
 
@@ -197,3 +193,51 @@ def test_stateful_user_profile_equals_batch(spark, tmp_path):
         F.max("value_cents").alias("max_cents"),
     )
     assert sorted(map(tuple, latest.collect())) == sorted(map(tuple, batch.collect()))
+
+
+def test_memory_sink_runners_leave_no_view(spark, tmp_path):
+    """Each memory-sink runner replays a single parquet file, names its own
+    sink and drops its view: the session's full table and view list reads
+    the same after every call, and no streaming query is left active."""
+    from geoproc_spark.streaming import stateful, windowed
+    from tests.conftest import SF_DIR
+
+    runners = [
+        windowed.run_hourly_stream,
+        stateful.dedup_stream,
+        stateful.user_profile_stream,
+    ]
+    for i, run in enumerate(runners):
+        before = sorted(t.name for t in spark.catalog.listTables())
+        got = run(spark, f"{SF_DIR}/events.parquet", str(tmp_path / f"ckpt{i}"))
+        assert sorted(t.name for t in spark.catalog.listTables()) == before, run.__name__
+        assert spark.streams.active == [], run.__name__
+        assert got.count() > 0, run.__name__
+
+
+def test_hourly_streams_keep_state_in_one_partition(spark, tmp_path):
+    """Both hourly streams pin their state store to one partition for the
+    query's lifetime only: `<checkpoint>/state/0` holds one partition
+    directory, and the session's shuffle-partition count is unchanged."""
+    import os
+
+    from geoproc_spark.streaming import windowed
+    from tests.conftest import SF_DIR
+
+    events = f"{SF_DIR}/events.parquet"
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "1"
+    runs = {
+        "complete": lambda ckpt: windowed.run_hourly_stream(spark, events, ckpt),
+        "append": lambda ckpt: windowed.run_hourly_stream_append(
+            spark, events, ckpt, str(tmp_path / "out")
+        ),
+    }
+    for mode, run in runs.items():
+        ckpt = str(tmp_path / f"ckpt_{mode}")
+        run(ckpt)
+        state = os.path.join(ckpt, "state", "0")
+        parts = [d for d in os.listdir(state) if d.isdigit()]
+        assert parts == ["0"], (mode, sorted(os.listdir(state)))
+        assert spark.conf.get(key) == before, mode

@@ -178,6 +178,29 @@ def test_frame_is_a_local_relation_with_create_dataframe_rows(spark):
         assert df.collect() == want.collect()
 
 
+def test_frame_keeps_timestamps_in_a_non_utc_driver_zone(spark, monkeypatch):
+    """collect() hands TIMESTAMP values back as naive local datetimes of
+    the driver process; _small.frame of those rows holds the same instants
+    (and TIMESTAMP_NTZ the same wall clock) whatever the process's zone."""
+    import time
+
+    src = spark.sql(
+        "SELECT TIMESTAMP'2020-01-01 10:00:00' AS ts, "
+        "TIMESTAMP_NTZ'2020-01-01 10:00:00' AS ntz, CAST(NULL AS TIMESTAMP) AS tnull"
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        rows = src.collect()
+        back = _small.frame(spark, rows, src.schema, "t", "n/a")
+        got = back.selectExpr(*(f"CAST({c} AS STRING)" for c in back.columns)).first()
+        assert back.collect() == rows
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert tuple(got) == ("2020-01-01 10:00:00", "2020-01-01 10:00:00", None)
+
+
 def test_no_python_rdd_local_tables_outside_small():
     """Tooling guard: the operator and plan layers, the Image API and the
     driver-query layer (queries.py, synth.py) build driver-side tables only
