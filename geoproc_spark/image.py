@@ -2,15 +2,19 @@
 
 The reference client (/root/reference/geoproc/image.py) builds a JSON call
 graph per operation and ships it to a server for window-at-a-time pull
-evaluation. Here the call graph is Column expressions over a tile-source
-DataFrame: every operator returns a new `Image` with rewritten per-band
-expressions (or, for two different sources, over their outer-join
-alignment), and Catalyst plays the role of the server's `eval_image`
-interpreter (reference geoproc/server/image.py:542-549). Nothing
-touches pixels until an action (export/collect/stats) runs — the same
-two-level laziness the reference gets from closure composition — and a
-single-tile request reads one tile of the source, as the reference pulls
-one window through its closure tree.
+evaluation. Here the call graph is Column expressions over the tile
+sources an image reads: every operator returns a new `Image` with
+rewritten per-band expressions, and Catalyst plays the role of the
+server's `eval_image` interpreter (reference geoproc/server/image.py:
+542-549). Nothing touches pixels until an action (export/collect/stats)
+runs — the same two-level laziness the reference gets from closure
+composition. The reference evaluates every child of an operator on the
+same window (server/image.py:295-301); here an expression over N distinct
+tile sources aligns them once, in one N-way full outer join on the tile
+key (`align`), however many ops it chains, and an expression over one
+source is one projection of it. A single-tile request filters every
+source by its key before they align, so it reads one tile of each, as the
+reference pulls one window through its closure tree.
 
 API parity with the reference client class (geoproc/image.py):
   load, constant, select, export, band_names/info,
@@ -27,7 +31,11 @@ names win, constants are boundless and fully valid.
 
 from __future__ import annotations
 
+import copy
+import functools
+import itertools
 import numbers
+import operator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,22 +56,93 @@ _WIN_DDL = "wid bigint, col_off int, row_off int, win_w int, win_h int"
 _WIN_SMALLER = "raise window_size or scale, or export smaller bounds"
 
 
-class Image:
-    """A lazy multi-band tiled image: a tile source plus pixel expressions.
+class _Source:
+    """One base tile frame (z, x, y, data, mask; other columns are not
+    read) and its band count.
 
-    `source` is the DataFrame that defines the tile set (one row per tile
-    key z, x, y). `bands` holds one ARRAY<DOUBLE> Column expression per
+    In an aligned frame its data and mask are `_d<k>` and `_m<k>`, names no
+    other source has, and `_p<k>` flags the tiles it has, so expressions
+    over it never need renaming. Sources are compared by identity: two
+    `from_df` calls over the same rows are two sources."""
+
+    _ids = itertools.count()
+
+    def __init__(self, df: DataFrame, n_bands: int):
+        k = next(self._ids)
+        self.df, self.n_bands = df, n_bands
+        self.data, self.mask, self.present = f"_d{k}", f"_m{k}", f"_p{k}"
+
+    @functools.cached_property
+    def frame(self) -> DataFrame:
+        return self.df.select(
+            *TILE_KEY, F.col("data").alias(self.data), F.col("mask").alias(self.mask)
+        )
+
+
+def _lift(images) -> tuple[tuple[_Source, ...], list[tuple[list[Column], Column]]]:
+    """The distinct tile sources of `images` in first-appearance order, and
+    each image's (bands, mask) over their alignment: an image that reads
+    only some of them is zero data and zero mask on the tiles none of its
+    own sources has (numpy_oracle._align's zero fill)."""
+    sources: list[_Source] = []
+    for img in images:
+        sources += [s for s in img._sources if not any(s is t for t in sources)]
+    lifted = []
+    for img in images:
+        # a raw image reads its source's columns, which the alignment
+        # zero-fills already
+        if img._raw or len(img._sources) == len(sources):
+            lifted.append((img.bands, img.mask))
+            continue
+        here = functools.reduce(operator.or_, (F.col(s.present) for s in img._sources))
+        lifted.append((
+            [F.when(here, b).otherwise(A.zero_band(img.n_px)) for b in img.bands],
+            F.when(here, img.mask).otherwise(A.zero_mask(img.n_px)),
+        ))
+    return tuple(sources), lifted
+
+
+def align(
+    images, where: Column | None = None
+) -> tuple[DataFrame, list[tuple[list[Column], Column]]]:
+    """One alignment of tiled `images`: the frame of their distinct tile
+    sources and each image's (bands, mask) over it (see _lift).
+
+    One source is its own projection. Several form one full outer join on
+    the tile key, each source's columns zero-filled beside its presence
+    flag, so a tile a source lacks reads as zero data and zero mask, like
+    rio-tiler's all-masked window outside an image's bounds (reference
+    geoproc/server/image.py:295-301). `where`, a predicate over the tile
+    key, filters every source before the join, so it reaches every scan."""
+    sources, lifted = _lift(images)
+    frames = [s.frame if where is None else s.frame.filter(where) for s in sources]
+    if len(frames) == 1:
+        return frames[0], lifted
+    n_px = images[0].n_px
+    joined = functools.reduce(lambda l, r: l.join(r, TILE_KEY, "full_outer"), frames)
+    return joined.select(*TILE_KEY, *(c for s in sources for c in (
+        F.coalesce(s.data, A.zero_data(s.n_bands, n_px)).alias(s.data),
+        F.coalesce(s.mask, A.zero_mask(n_px)).alias(s.mask),
+        F.col(s.mask).isNotNull().alias(s.present),
+    ))), lifted
+
+
+class Image:
+    """A lazy multi-band tiled image: the tile sources it reads plus pixel
+    expressions.
+
+    Each source is a base tile frame (one row per tile key z, x, y, with
+    data and mask). `bands` holds one ARRAY<DOUBLE> Column expression per
     band and `mask` one ARRAY<INT> expression (uint8-valued, 255 = valid),
-    all over `source`; per-band expressions keep a chain of ops linear in
-    the band count (see operators.algebra). Band selection, abs, scalar
-    ops and the vis ops rewrite the expressions and keep the source, so an
-    image derived from one source is one projection of it, and a binary op
-    between two images of the same source object is too (tile keys are
-    unique, so aligning a source with itself is the identity). Only images
-    over different sources align through a full outer join
-    (algebra.outer_align), whose result is the new image's source.
-    `df` is the tile-row table (z, x, y, data ARRAY<ARRAY<DOUBLE>>, mask)
-    the expressions define. `scalar` images (from `constant`) are
+    over the alignment of the sources (see `align`); per-band expressions
+    keep a chain of ops linear in the band count (see operators.algebra).
+    Band selection, abs, scalar ops and the vis ops rewrite the
+    expressions; a binary op reads the union of its operands' sources,
+    lifting an operand that reads only some of them (see _lift), so an
+    image over one source is one projection of it and one over N sources
+    one N-way join. `source` is the frame of a single-source image as
+    read, and `df` the tile-row table (z, x, y, data ARRAY<ARRAY<DOUBLE>>,
+    mask) the expressions define. `scalar` images (from `constant`) are
     boundless: they have no source and fold into kernels.
     """
 
@@ -76,16 +155,16 @@ class Image:
         scalar: float | None = None,
         min_zoom: int | None = None,
         max_zoom: int | None = None,
-        bands: list[Column] | None = None,
-        mask: Column | None = None,
     ):
-        self.source = source
         self.band_names = list(band_names)
-        # default: the source's own `data` and `mask` columns
-        if bands is None:
-            bands = [F.col("data")[i] for i in range(len(self.band_names))]
-        self.bands = bands
-        self.mask = F.col("mask") if mask is None else mask
+        if source is None:
+            self._sources, self.bands, self.mask = (), [], None
+        else:
+            s = _Source(source, len(self.band_names))
+            self._sources = (s,)
+            self.bands = [F.col(s.data)[i] for i in range(len(self.band_names))]
+            self.mask = F.col(s.mask)
+        self._raw = True  # reads its source's columns as they are; select keeps this
         self.dtype = dtype
         self.n_px = n_px
         self.scalar = scalar
@@ -95,13 +174,28 @@ class Image:
         self.max_zoom = max_zoom
 
     @property
+    def source(self) -> DataFrame | None:
+        """The tile frame of an image over one source, as read; None for a
+        constant or an image over several sources."""
+        return self._sources[0].df if len(self._sources) == 1 else None
+
+    @property
     def df(self) -> DataFrame | None:
         """The tile rows (z, x, y, data, mask); None for a constant."""
-        if self.source is None:
-            return None
-        return self.source.select(
-            *TILE_KEY, F.array(*self.bands).alias("data"), self.mask.alias("mask")
-        )
+        return None if self.scalar is not None else self._rows()
+
+    def _rows(self, where: Column | None = None) -> DataFrame:
+        """The tile rows, `where` (a tile-key predicate) applied to every
+        source before they align."""
+        self._need_tiles()
+        frame, [(bands, mask)] = align([self], where)
+        return frame.select(*TILE_KEY, F.array(*bands).alias("data"), mask.alias("mask"))
+
+    def _need_tiles(self) -> None:
+        """Raise for a constant: it is boundless, so it has no tiles to
+        read, render or export (reference geoproc/server/image.py:171-178)."""
+        if self.scalar is not None:
+            raise ValueError("a constant has no tiles: it is boundless")
 
     def _derive(
         self,
@@ -109,20 +203,20 @@ class Image:
         mask: Column,
         band_names: list[str] | None = None,
         dtype: str | None = None,
-        source: DataFrame | None = None,
+        sources: tuple[_Source, ...] | None = None,
+        raw: bool = False,
     ) -> "Image":
-        """A new image over this image's source (or `source`) with the same
-        pixel count and zoom range."""
-        return Image(
-            self.source if source is None else source,
-            self.band_names if band_names is None else band_names,
-            self.dtype if dtype is None else dtype,
-            self.n_px,
-            min_zoom=self.min_zoom,
-            max_zoom=self.max_zoom,
-            bands=bands,
-            mask=mask,
-        )
+        """A new image over this image's sources (or `sources`) with the
+        same pixel count and zoom range."""
+        out = copy.copy(self)
+        out.bands, out.mask, out._raw = bands, mask, raw
+        if band_names is not None:
+            out.band_names = list(band_names)
+        if dtype is not None:
+            out.dtype = dtype
+        if sources is not None:
+            out._sources = sources
+        return out
 
     # ------------------------------------------------------------- sources
     @classmethod
@@ -148,17 +242,16 @@ class Image:
             else:
                 names = [f"B{i+1}" for i in range(n_bands or m["n_bands"])]
             return cls(
-                df.select(*TILE_KEY, "data", "mask"),
-                names,
-                "float64",
-                m["n_px"],
-                min_zoom=m.get("min_zoom"),
-                max_zoom=m.get("max_zoom"),
+                df, names, "float64", m["n_px"], min_zoom=m.get("min_zoom"), max_zoom=m.get("max_zoom")
             )
         df = spark.read.parquet(path)
         first = df.select(F.size(F.col("data")).alias("nb"), F.size(F.col("data")[0]).alias("np")).first()
+        if first is None:
+            raise ValueError(
+                f"{path}: no _image_meta.json and no tile rows to read the pixel count from"
+            )
         nb = n_bands or first["nb"]
-        return cls(df.select(*TILE_KEY, "data", "mask"), [f"B{i+1}" for i in range(nb)], "float64", first["np"])
+        return cls(df, [f"B{i+1}" for i in range(nb)], "float64", first["np"])
 
     @classmethod
     def from_df(
@@ -173,14 +266,8 @@ class Image:
         # min/max_zoom: callers that know the table's zoom range (fixture
         # constants, catalog metadata) pass it here so projected_windows /
         # export skip their max-z metadata job entirely.
-        return cls(
-            df.select(*TILE_KEY, "data", "mask"),
-            [f"B{i+1}" for i in range(n_bands)],
-            dtype,
-            n_px,
-            min_zoom=min_zoom,
-            max_zoom=max_zoom,
-        )
+        names = [f"B{i+1}" for i in range(n_bands)]
+        return cls(df, names, dtype, n_px, min_zoom=min_zoom, max_zoom=max_zoom)
 
     @classmethod
     def from_array(
@@ -251,7 +338,7 @@ class Image:
             "band_names": self.band_names,
             "dtype": self.dtype,
             "n_px": self.n_px,
-            "boundless": self.source is None,
+            "boundless": self.scalar is not None,
             "min_zoom": self.min_zoom,
             "max_zoom": self.max_zoom,
         }
@@ -266,11 +353,9 @@ class Image:
         resolution, max from the native resolution."""
         from .functions import cells as _cells
 
-        mn, mx = _cells.min_max_zoom(width_px, height_px, resolution)
-        return Image(
-            self.source, self.band_names, self.dtype, self.n_px, self.scalar, mn, mx,
-            self.bands, self.mask,
-        )
+        out = copy.copy(self)
+        out.min_zoom, out.max_zoom = _cells.min_max_zoom(width_px, height_px, resolution)
+        return out
 
     def tile(self, z: int, x: int, y: int) -> DataFrame:
         """Single-tile fetch with the P4 min-zoom gate (reference
@@ -278,20 +363,16 @@ class Image:
         rendering them would pull the whole image through one request) and
         the P3 bounds predicate (tiles outside the data 204 to empty).
 
-        The tile key passes through the pixel projection, so Catalyst
-        pushes the (z,x,y) filter into the tile source: for an image
-        derived from one source (binary ops between images of that source
-        included) it reaches the parquet scan, which prunes the z
-        partition and skips row groups on x/y, so one request reads one
-        tile. An image aligned across different sources filters above the
-        outer join, which reads both sides whole."""
+        The (z,x,y) filter applies to every tile source before they align,
+        so it reaches each parquet scan, which prunes the z partition and
+        skips row groups on x/y: one request reads one tile of each source,
+        and an image over several sources joins those tiles only. A
+        constant has no tiles and raises ValueError."""
         if self.min_zoom is not None and z < self.min_zoom:
             raise ValueError(
                 f"zoom {z} below min_zoom {self.min_zoom} (P4 gate, reference app.py:145-149)"
             )
-        return self.df.filter(
-            (F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y)
-        )
+        return self._rows((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y))
 
     # ---------------------------------------------------------- projection
     def select(self, bands: list[str] | list[int]) -> "Image":
@@ -306,8 +387,10 @@ class Image:
                 if b not in self.band_names:
                     raise ValueError(f"band {b!r} not in {self.band_names}")
                 idxs.append(self.band_names.index(b))
+        if self.scalar is not None:
+            return self
         names = [self.band_names[i] for i in idxs]
-        return self._derive([self.bands[i] for i in idxs], self.mask, names)
+        return self._derive([self.bands[i] for i in idxs], self.mask, names, raw=self._raw)
 
     # ------------------------------------------------------------- algebra
     def _binary(self, other, op: str, reverse: bool = False) -> "Image":
@@ -323,13 +406,7 @@ class Image:
             return other._binary(self, op, reverse=not reverse)
 
         a, b = (other, self) if reverse else (self, other)
-        if a.source is b.source:
-            # one source: its tile keys are unique, so the alignment is the
-            # identity and the op is one more projection of that source
-            source, da, ma, db, mb = a.source, a.bands, a.mask, b.bands, b.mask
-        else:
-            source = A.outer_align(a.df, b.df, a.n_bands, b.n_bands, self.n_px)
-            da, ma, db, mb = (F.col(c) for c in ("_da", "_ma", "_db", "_mb"))
+        sources, ((da, ma), (db, mb)) = _lift((a, b))
         # left operand's band names AND zoom range
         # (/root/reference/geoproc/server/image.py:312-315)
         names = a.band_names if len(a.band_names) == max(a.n_bands, b.n_bands) else [
@@ -340,62 +417,31 @@ class Image:
             A.mask_union(ma, mb),
             names,
             "float64",
-            source,
+            sources,
         )
 
-    def __add__(self, o):
-        return self._binary(o, "add")
+    def _op(op: str, reverse: bool = False):  # noqa: N805 — builds the operators below
+        return lambda self, o: self._binary(o, op, reverse)
 
-    __radd__ = __add__
-
-    def __sub__(self, o):
-        return self._binary(o, "sub")
-
-    def __rsub__(self, o):
-        return self._binary(o, "sub", reverse=True)
-
-    def __mul__(self, o):
-        return self._binary(o, "mul")
-
-    __rmul__ = __mul__
-
-    def __truediv__(self, o):
-        return self._binary(o, "truediv")
-
-    def __rtruediv__(self, o):
-        return self._binary(o, "truediv", reverse=True)
-
-    def __floordiv__(self, o):
-        return self._binary(o, "floordiv")
-
-    def __rfloordiv__(self, o):
-        return self._binary(o, "floordiv", reverse=True)
-
-    def __lt__(self, o):
-        return self._binary(o, "lt")
-
-    def __le__(self, o):
-        return self._binary(o, "le")
-
-    def __eq__(self, o):  # noqa: PLW3201 — operator object, like PySpark Column.__eq__
-        return self._binary(o, "eq")
-
-    def __ne__(self, o):  # noqa: PLW3201
-        return self._binary(o, "ne")
-
-    def __gt__(self, o):
-        return self._binary(o, "gt")
-
-    def __ge__(self, o):
-        return self._binary(o, "ge")
-
+    __add__ = __radd__ = _op("add")
+    __mul__ = __rmul__ = _op("mul")
+    __sub__, __rsub__ = _op("sub"), _op("sub", reverse=True)
+    __truediv__, __rtruediv__ = _op("truediv"), _op("truediv", reverse=True)
+    __floordiv__, __rfloordiv__ = _op("floordiv"), _op("floordiv", reverse=True)
+    __lt__, __le__, __gt__, __ge__ = _op("lt"), _op("le"), _op("gt"), _op("ge")
+    # operator objects, like PySpark's Column.__eq__
+    __eq__, __ne__ = _op("eq"), _op("ne")  # noqa: PLW3201
     __hash__ = None
+    del _op
 
     def __abs__(self):
+        if self.scalar is not None:
+            return Image.constant(abs(self.scalar), self.n_px)
         return self._derive(A.abs_data(self.bands, self.n_bands), self.mask)
 
     # ------------------------------------------------------- visualization
     def rescale(self, rng) -> "Image":
+        self._need_tiles()
         ranges = A.expand_scale_range(rng, self.n_bands)
         return self._derive(A.rescale_data(self.bands, ranges), self.mask, dtype="float64")
 
@@ -403,10 +449,12 @@ class Image:
         """F8 vis params — declared by the reference's VisualizationParams
         (geoproc/models.py:11-13) but never applied by its server; see
         algebra.gain_bias_gamma_data for the semantics implemented here."""
+        self._need_tiles()
         data = A.gain_bias_gamma_data(self.bands, self.n_bands, gain, bias, gamma)
         return self._derive(data, self.mask, dtype="float64")
 
     def with_opacity(self, opacity: float) -> "Image":
+        self._need_tiles()
         return self._derive(self.bands, A.opacity_mask(self.mask, opacity))
 
     def build_overview(self) -> "Image":
@@ -417,7 +465,7 @@ class Image:
         from .operators import tiles as _tiles
 
         return Image(
-            _tiles.build_parent_tiles(self.df, self.n_bands, self.n_px),
+            _tiles.build_parent_tiles(self._rows(), self.n_bands, self.n_px),
             self.band_names, self.dtype, self.n_px,
             min_zoom=None if self.min_zoom is None else max(0, self.min_zoom - 1),
             max_zoom=self.max_zoom,
@@ -478,7 +526,7 @@ class Image:
         aggregate: (z,x,y,band, n_valid, sum, min, max). Valid = mask 255.
         Partial+final aggregation is Spark's; results are exact for
         integer-valued data."""
-        exploded = self.df.select(
+        exploded = self._rows().select(
             *TILE_KEY,
             F.posexplode(F.col("data")).alias("band_idx", "band_data"),
             "mask",
@@ -533,7 +581,7 @@ class Image:
         second pass; a known zoom filters to it first."""
         from .functions import cells as _cells
 
-        df = self.df if zoom is None else self.df.filter(F.col("z") == zoom)
+        df = self._rows(None if zoom is None else F.col("z") == zoom)
         r = df.agg(
             F.max("z").alias("z"),
             F.max(F.struct(F.col("z"), (-F.col("x")).alias("v"))).alias("nx"),
@@ -575,11 +623,6 @@ class Image:
         from .functions import cells as _cells
         from .functions import grid as _grid
 
-        if self.df is None:
-            raise ValueError(
-                "cannot export a boundless (constant) image: no tile bounds "
-                "(reference geoproc/server/image.py:171-178)"
-            )
         z = self.max_zoom
         if bounds is None:
             z, bounds = self._extent(z)
@@ -635,12 +678,11 @@ class Image:
             for x in range(xa, xb + 1)
             for y in range(ya, yb + 1)
         ]
-        spark = self.df.sparkSession
+        tiles = self._rows(F.col("z") == z).select("x", "y", "data", "mask")
         wtiles = _small.frame(
-            spark, wtile_rows, _WIN_DDL + ", x int, y int",
+            tiles.sparkSession, wtile_rows, _WIN_DDL + ", x int, y int",
             "projected_windows window->tile table", _WIN_SMALLER,
         )
-        tiles = self.df.filter(F.col("z") == z).select("x", "y", "data", "mask")
         # the window-tile list is the SMALL side (windows x tiles-per-window
         # keys, no pixel payloads) — broadcast it so the big tile table
         # never shuffles for the join; the only Exchange left is the
@@ -740,7 +782,7 @@ class Image:
             )
 
         windows = _small.frame(
-            self.df.sparkSession, grid, _WIN_DDL, "projected_windows window grid", _WIN_SMALLER
+            joined.sparkSession, grid, _WIN_DDL, "projected_windows window grid", _WIN_SMALLER
         )
         stream = joined.unionByName(windows, allowMissingColumns=True)
         return stream.groupBy("wid").applyInPandas(assemble, schema), spec
@@ -941,17 +983,12 @@ class Image:
         P5 guard: a boundless image (constant) has no tile set to export —
         analyzer-time error before any job, like the reference's
         bounds-or-explicit-bounds check (server/image.py:171-178)."""
-        if self.df is None:
-            raise ValueError(
-                "cannot export a boundless (constant) image: no tile bounds "
-                "(reference geoproc/server/image.py:171-178)"
-            )
         import json
         import os
 
         from .sources.tableformat import read_back_schema
 
-        out = self.df.repartitionByRange(*TILE_KEY).sortWithinPartitions(*TILE_KEY)
+        out = self._rows().repartitionByRange(*TILE_KEY).sortWithinPartitions(*TILE_KEY)
         writer = out.write.mode("overwrite").option("maxRecordsPerFile", rows_per_file)
         if partition_zooms:
             writer = writer.partitionBy("z")

@@ -24,24 +24,28 @@ the tile's data column. Each output band then references only the input
 bands it reads, so a chain of ops stays linear in the band count instead
 of re-embedding every band of its input in every output band.
 
-Two images over the same tile source need no alignment: tile keys are
-unique, so Image ops combine their expressions row by row. Only images
-over different sources align through `outer_align`, a full outer join on
-the tile key: a tile absent from one side contributes zero data and zero
-mask, exactly like rio-tiler returning an all-masked window outside an
+The kernels know nothing of tile sources: image.align puts the sources
+an expression reads side by side in one frame (one N-way full outer join
+on the tile key for N sources), and the Column operands here are
+expressions over it. A tile a source lacks reads as `zero_data` and
+`zero_mask`, like rio-tiler returning an all-masked window outside an
 image's bounds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TILE_KEY = ["z", "x", "y"]
 
 
+def zero_band(n_px: int) -> Column:
+    return F.array_repeat(F.lit(0.0), n_px)
+
+
 def zero_data(n_bands: int, n_px: int) -> Column:
-    return F.array_repeat(F.array_repeat(F.lit(0.0), n_px), n_bands)
+    return F.array_repeat(zero_band(n_px), n_bands)
 
 
 def zero_mask(n_px: int) -> Column:
@@ -193,25 +197,3 @@ def expand_scale_range(rng, n_bands: int) -> list[tuple[float, float]]:
         return [rng] * n_bands
     assert len(rng) == n_bands
     return list(rng)
-
-
-def outer_align(a: DataFrame, b: DataFrame, n_bands_a: int, n_bands_b: int, n_px: int):
-    """Full outer join on the tile key with zero-fill — the distributed
-    analog of both children evaluating the same window
-    (/root/reference/geoproc/server/image.py:295-301), where a child
-    without data there returns an all-masked block.
-
-    Only images over different tile sources need it: Image ops between
-    images of one source combine that source's rows directly. The join
-    reads both sides whole, and a (z, x, y) filter above it cannot reach
-    either scan."""
-    aa = a.select(*TILE_KEY, F.col("data").alias("_da"), F.col("mask").alias("_ma"))
-    bb = b.select(*TILE_KEY, F.col("data").alias("_db"), F.col("mask").alias("_mb"))
-    j = aa.join(bb, TILE_KEY, "full_outer")
-    return j.select(
-        *TILE_KEY,
-        F.coalesce("_da", zero_data(n_bands_a, n_px)).alias("_da"),
-        F.coalesce("_ma", zero_mask(n_px)).alias("_ma"),
-        F.coalesce("_db", zero_data(n_bands_b, n_px)).alias("_db"),
-        F.coalesce("_mb", zero_mask(n_px)).alias("_mb"),
-    )

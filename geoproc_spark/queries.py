@@ -375,44 +375,24 @@ def tile_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-algebra pipeline with geoproc parity semantics: A(2-band) +
     B(1-band, partial overlap), comparison, abs-chain, scalar ops — per-tile
     BIGINT checksums. Exercises outer-join bounds union, np.maximum mask
-    union, float64 0/1 comparisons, and 1-band broadcast in one query."""
-    from .operators import algebra as A
+    union, float64 0/1 comparisons, and 1-band broadcast in one query.
+    The four results read A and B, so one alignment (one full outer join)
+    serves all their checksums; `sum_s` is NULL where A has no tile."""
+    from .image import Image, align
 
-    # ONE tile-key alignment for the whole pipeline (r6): the Image-op
-    # composition (a+b, a>b, abs(a-b), a*2+1, then three result joins)
-    # aligned the same A/B pair once per derived image — six joins of the
-    # same two frames. The pixel expressions below come from the SAME
-    # algebra kernel builders the Image ops delegate to (binary_data /
-    # abs_data / scalar_data / mask_union), applied over a single
-    # full-outer align, so every checksum is bit-identical (pinned by the
-    # unchanged VALUES oracle) while the plan drops from six joins to one.
-    nb_a, nb_b, n_px = synth.TILE_BANDS["A"], synth.TILE_BANDS["B"], synth.TILE_PX
-    adf = synth.tiles_df(spark, "A").select(
-        "z", "x", "y", F.col("data").alias("_da"), F.col("mask").alias("_ma")
-    )
-    bdf = synth.tiles_df(spark, "B").select(
-        "z", "x", "y", F.col("data").alias("_db"), F.col("mask").alias("_mb")
-    )
-    j = adf.join(bdf, ["z", "x", "y"], "full_outer")
-    in_a = F.col("_da").isNotNull()  # the left_outer(sum_s) indicator
-    da = F.coalesce("_da", A.zero_data(nb_a, n_px))
-    ma = F.coalesce("_ma", A.zero_mask(n_px))
-    db = F.coalesce("_db", A.zero_data(nb_b, n_px))
-    mb = F.coalesce("_mb", A.zero_mask(n_px))
-    c_data = A.binary_data("add", da, db, nb_a, nb_b)
-    c_mask = A.mask_union(ma, mb)
-    d_data = A.binary_data("gt", da, db, nb_a, nb_b)
-    e_data = A.abs_data(A.binary_data("sub", da, db, nb_a, nb_b), max(nb_a, nb_b))
-    s_data = A.scalar_data("add", A.scalar_data("mul", da, 2.0, nb_a), 1.0, nb_a)
-    return j.select(
+    a = Image.from_df(synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX)
+    b = Image.from_df(synth.tiles_df(spark, "B"), synth.TILE_BANDS["B"], synth.TILE_PX)
+    c, d, e, s = a + b, a > b, abs(a - b), a * 2.0 + 1.0
+    frame, [(cd, cm), (dd, _), (ed, _), (sd, sm)] = align([c, d, e, s])
+    return frame.select(
         "z",
         "x",
         "y",
-        _sum_px(c_data, max(nb_a, nb_b)).alias("sum_c"),
-        _mask_sum(c_mask).alias("mask_c"),
-        _sum_px(d_data, max(nb_a, nb_b)).alias("sum_d"),
-        _sum_px(e_data, max(nb_a, nb_b)).alias("sum_e"),
-        F.when(in_a, _sum_px(s_data, nb_a)).alias("sum_s"),
+        _sum_px(cd, c.n_bands).alias("sum_c"),
+        _mask_sum(cm).alias("mask_c"),
+        _sum_px(dd, d.n_bands).alias("sum_d"),
+        _sum_px(ed, e.n_bands).alias("sum_e"),
+        F.when(_mask_sum(sm) > 0, _sum_px(sd, s.n_bands)).alias("sum_s"),
     )
 
 
@@ -446,19 +426,12 @@ def tile_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     a = Image.from_df(synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], synth.TILE_PX)
     r = a.select(["B1"]).rescale((10.0, 70.0)).with_opacity(0.4)
-    rendered = r.df.select(
-        "z", "x", "y", F.array(*A.uint8_data(F.col("data"), 1)).alias("data"), "mask"
-    )
-    return rendered.select(
+    return r.df.select(
         "z",
         "x",
         "y",
-        F.aggregate(
-            F.col("data")[0], F.lit(0).cast("bigint"), lambda acc, v: acc + v.cast("bigint")
-        ).alias("sum_px"),
-        F.aggregate(
-            F.col("mask"), F.lit(0).cast("bigint"), lambda acc, v: acc + v.cast("bigint")
-        ).alias("sum_mask"),
+        _sum_px(A.uint8_data(F.col("data"), 1), 1).alias("sum_px"),
+        _mask_sum(F.col("mask")).alias("sum_mask"),
     )
 
 

@@ -2,6 +2,7 @@
 numpy oracle, block-for-block (FIXTURES.md T5, SURVEY.md §5.2)."""
 
 import operator
+import re
 
 import numpy as np
 import pytest
@@ -318,3 +319,92 @@ def test_tile_request_is_one_projection_of_the_scan(spark, tmp_path):
     got = _collect(Image.from_df(tile, 3, 256))
     _assert_tiles_equal(got, {(6, 11, 21): want[(6, 11, 21)]})
     assert expr.tile(6, 13, 21).count() == 0  # outside the tile set
+
+
+def _n_joins(df) -> int:
+    """Join nodes in the (not yet executed) physical plan of `df`."""
+    return len(re.findall(r"\b\w+Join\b", _plan(df)))
+
+
+def test_abs_of_constant_in_an_expression(imgs):
+    """abs of a constant is the constant |v|, so an image plus it is a
+    scalar op over the image."""
+    a, _, na, _ = imgs
+    got = _collect(a + abs(Image.constant(-3.0, synth.TILE_PX)))
+    _assert_tiles_equal(got, O.scalar_op(operator.add, na, 3.0))
+
+
+def test_multi_source_expressions_plan_one_join_per_extra_source(spark, imgs):
+    """Chained ops over N distinct tile sources align them in N - 1 joins,
+    and give the composed numpy-oracle ops. In (a * 2 + 1) + b the A side
+    reads as zero data and zero mask on tiles only B has, not as 1.0 with
+    mask 255, with or without a band selection on top; a second from_df
+    over A's rows is a third source."""
+    a, b, na, nb = imgs
+    px = synth.TILE_PX
+    twin = Image.from_df(synth.tiles_df(spark, "A"), synth.TILE_BANDS["A"], px)
+    lifted = (a * 2.0 + 1.0) + b
+    s = O.scalar_op(operator.add, O.scalar_op(operator.mul, na, 2.0), 1.0)
+    want = O.binary(operator.add, s, nb, 2, 1, px)
+    b_only = sorted(set(nb) - set(na))
+    assert b_only
+    for k in b_only:
+        np.testing.assert_array_equal(want[k][1], nb[k][1])
+    ab = O.binary(operator.add, na, nb, 2, 1, px)
+    cases = [
+        (lifted, want, 1),
+        (b + (a * 2.0 + 1.0).select(["B2"]),
+         O.binary(operator.add, nb, {k: (d[1:2], m) for k, (d, m) in s.items()}, 1, 1, px), 1),
+        (((a + b) > b) - a,
+         O.binary(operator.sub, O.binary(operator.gt, ab, nb, 2, 1, px), na, 2, 2, px), 1),
+        ((a + b) * twin - b,
+         O.binary(operator.sub, O.binary(operator.mul, ab, na, 2, 2, px), nb, 2, 1, px), 2),
+    ]
+    for img, want, joins in cases:
+        assert _n_joins(img.df) == joins, _plan(img.df)
+        _assert_tiles_equal(_collect(img), want)
+
+
+def _cut(data, mask, z, x0, y0, side=16):
+    """Tiles of a (bands, H, W) raster placed at tile (x0, y0), as the
+    numpy oracle's dict."""
+    nb, h, w = data.shape
+    return {
+        (z, x0 + tx, y0 + ty): (
+            data[:, ty * side : (ty + 1) * side, tx * side : (tx + 1) * side].reshape(nb, -1),
+            mask[ty * side : (ty + 1) * side, tx * side : (tx + 1) * side].reshape(-1),
+        )
+        for ty in range(h // side)
+        for tx in range(w // side)
+    }
+
+
+def test_tile_request_over_two_tables_filters_both_scans(spark, tmp_path):
+    """A tile request for (a + b) > b over two exported tables joins once,
+    with the tile's x/y pushed into both parquet scans; its pixels are the
+    numpy oracle's for a tile in both tables and a tile only in B, and a
+    tile in neither returns no rows."""
+    rng = np.random.default_rng(7)
+    da = rng.integers(0, 200, size=(2, 32, 48)).astype(np.float64)
+    ma = np.where(rng.random((32, 48)) < 0.2, 0, 255)
+    db = rng.integers(0, 200, size=(1, 32, 64)).astype(np.float64)
+    mb = np.where(rng.random((32, 64)) < 0.2, 0, 255)
+    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
+    Image.from_array(spark, da, 6, 10, 20, tile_side=16, mask=ma).export(pa)
+    Image.from_array(spark, db, 6, 11, 20, tile_side=16, mask=mb).export(pb)
+    a, b = Image.load(spark, pa), Image.load(spark, pb)
+    expr = (a + b) > b
+
+    plan = _plan(expr.tile(6, 11, 21))
+    assert _n_joins(expr.tile(6, 11, 21)) == 1, plan
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert len(scans) == 2, plan
+    for line in scans:
+        assert "EqualTo(x,11)" in line and "EqualTo(y,21)" in line, plan
+
+    ta, tb = _cut(da, ma, 6, 10, 20), _cut(db, mb, 6, 11, 20)
+    want = O.binary(operator.gt, O.binary(operator.add, ta, tb, 2, 1, 256), tb, 2, 1, 256)
+    for key in [(6, 11, 21), (6, 14, 20)]:  # in both tables; only in B
+        got = _collect(Image.from_df(expr.tile(*key), 2, 256))
+        _assert_tiles_equal(got, {key: want[key]})
+    assert expr.tile(6, 16, 20).count() == 0

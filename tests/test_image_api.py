@@ -334,3 +334,39 @@ def test_export_queries_declare_true_max_zoom(spark, monkeypatch):
     for df, max_zoom in declared:
         assert max_zoom is not None
         assert max_zoom == df.agg(F.max("z")).first()[0]
+
+
+def test_abs_of_constant_stays_constant():
+    c = abs(Image.constant(-3.0, n_px=16))
+    assert c.scalar == 3.0 and c.df is None and c.n_px == 16
+    assert c.info["boundless"] is True
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda c: c.rescale((0.0, 1.0)),
+        lambda c: c.with_opacity(0.5),
+        lambda c: c.with_gain_bias_gamma(gain=2.0),
+        lambda c: c.render_png("constant", (0.0, 1.0)),
+        lambda c: c.tile(3, 0, 0),
+    ],
+    ids=["rescale", "with_opacity", "with_gain_bias_gamma", "render_png", "tile"],
+)
+def test_tile_ops_on_a_constant_raise(op):
+    with pytest.raises(ValueError, match="a constant has no tiles"):
+        op(Image.constant(2.0, n_px=16))
+
+
+def test_load_of_empty_foreign_table_names_the_path(spark, tmp_path):
+    """A table with no metadata sidecar and no rows has no pixel count to
+    read: load raises ValueError naming the table, n_bands given or not."""
+    import re
+
+    path = str(tmp_path / "empty")
+    spark.createDataFrame(
+        [], "z int, x int, y int, data array<array<double>>, mask array<int>"
+    ).write.parquet(path)
+    for n_bands in (None, 2):
+        with pytest.raises(ValueError, match=re.escape(path)):
+            Image.load(spark, path, n_bands=n_bands)

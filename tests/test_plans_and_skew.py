@@ -483,3 +483,15 @@ def test_write_bucketed_guards_destructive_cleanup(spark, tmp_path):
         import shutil
 
         shutil.rmtree(loc, ignore_errors=True)
+
+
+def test_tile_algebra_is_image_ops_over_one_join(spark):
+    """tile_algebra is written with Image ops: its four results over A and
+    B share one alignment, a single full outer join, and the query holds
+    no join of its own."""
+    import inspect
+
+    plan = _plan(Q.SPARK_QUERIES["tile_algebra"](spark, SF_DIR))
+    assert len(re.findall(r"\b\w+Join\b", plan)) == 1, plan
+    assert "FullOuter" in plan, plan
+    assert ".join(" not in inspect.getsource(Q.tile_algebra)
